@@ -1420,8 +1420,8 @@ def _q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only the k%4==1 keys encode RIFF/WAVE rows — push that key
     # predicate BELOW the opaque generation stage (4x fewer encodes;
     # the RIFF filter stays as the semantic guard, same output rows)
-    media = multimodal.media_corpus_df(spark, sf_dir,
-                                       keys_where="o_orderkey % 4 = 1")
+    media = multimodal.media_corpus_df(
+        spark, sf_dir, keys_where=multimodal.WAV_KEYS_WHERE)
     wavs = (media.filter(F.col("media").substr(1, 4) == F.lit(b"RIFF"))
                  .withColumn("codec", F.lit("wav")))
 

@@ -122,7 +122,7 @@ class PayloadCheck:
     severity: Severity = Severity.ERROR
     #: spec knob ``digest_fast_path`` — False forces the eager
     #: byte-exact plan even when the ref table carries ingest digests
-    #: (the lazy/certified fast paths accept an xxhash64+length match,
+    #: (the certified fast path accepts an xxhash64+length match,
     #: false-pass ≤ 2⁻⁶⁴ per pair on non-adversarial data; forbid it
     #: when inputs are adversarial and no cryptographic digest was
     #: ingested)

@@ -138,18 +138,6 @@ def lsh_band_buckets(docs: DataFrame,
     ).select("doc_id", "bb.band", "bb.bucket")
 
 
-def lsh_bucket_histogram(docs: DataFrame,
-                         bands: int = LSH_BANDS) -> DataFrame:
-    """(bucket_size, n_buckets): the LSH bucket-size distribution —
-    the skew-audit companion to the max_bucket cap below."""
-    return (lsh_band_buckets(docs, bands)
-            .groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("bucket_size"))
-            .groupBy("bucket_size")
-            .agg(F.count(F.lit(1)).alias("n_buckets"))
-            .orderBy("bucket_size"))
-
-
 def lsh_candidate_pairs(docs: DataFrame, bands: int = LSH_BANDS,
                         max_bucket: int = 4096) -> DataFrame:
     """Candidate near-dup pairs via LSH banding: explode signatures

@@ -85,7 +85,8 @@ _CRC16_TBL = _crc_table(0x8005, 16)  # x^16 + x^15 + x^2 + 1 (frame)
 # where T[p][b] is the crc of byte b followed by p zero bytes. T grows
 # lazily (doubling) up to _CRC_POS_MAX positions; longer messages (not
 # produced by this encoder's frame sizes) fall back to the byte loop.
-# Equivalence with the loop is property-tested in tests/test_flac.py.
+# Equivalence with the loop is property-tested in
+# tests/test_flac.py::test_crc_gather_matches_byte_loop.
 _CRC_POS_MAX = 1 << 14
 _CRC16_POS = _CRC16_TBL.astype(np.uint16).reshape(1, 256)
 _CRC8_POS = _CRC8_TBL.astype(np.uint8).reshape(1, 256)

@@ -24,9 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from canned_yaml_spark import checkpoint, dataset, drift, payload
-from canned_yaml_spark.checks import CheckSuite, Severity
+from canned_yaml_spark.checks import CheckSuite
 from canned_yaml_spark.compile import compile_spec
-from canned_yaml_spark.runner import row_violations
+from canned_yaml_spark.runner import row_violations, violation_verdicts
 
 
 @dataclass
@@ -110,8 +110,7 @@ def all_violations(clips: DataFrame, suite: CheckSuite, *,
                 payload.payload_violations(
                     clips, clips_ref, pc, id_col, part_col,
                     join_hint=("MERGE" if bucketed_by_id
-                               and bucket_sort_trusted else "SHUFFLE_HASH"),
-                    co_located=bucketed_by_id))
+                               and bucket_sort_trusted else "SHUFFLE_HASH")))
     for tc in suite.transcript_checks:
         if clips_ref is not None and tc.column in clips.columns:
             out = out.unionByName(
@@ -223,18 +222,7 @@ def run(spark: SparkSession, spec_source: str | dict, clips: DataFrame, *,
             viol = viol.unionByName(uv)
     # Each family's plan executes once: verdicts aggregate the unified
     # violations table instead of recomputing the families.
-    base = (scope.groupBy(F.col(part_col).alias("part_id"))
-                 .agg(F.count(F.lit(1)).alias("n_rows")))
-    viol_agg = (viol.groupBy("part_id")
-                    .agg(F.count(F.lit(1)).alias("n_violations"),
-                         F.max("severity").alias("max_severity")))
-    verd = (base.join(viol_agg, "part_id", "left")
-                .select("part_id", "n_rows",
-                        F.coalesce(F.col("n_violations"), F.lit(0))
-                         .alias("n_violations"),
-                        "max_severity",
-                        (F.coalesce(F.col("max_severity"), F.lit(-1))
-                         < int(Severity.ERROR)).alias("pass")))
+    verd = violation_verdicts(scope, viol, part_col)
 
     metrics = dataset.column_stats(scope, list(stats_columns), part_col)
 

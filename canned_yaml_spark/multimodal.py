@@ -750,10 +750,15 @@ def encode_jpeg(k: int) -> bytes:
                              restart_interval=2 if k % 3 == 0 else 0)
 
 
+#: media_corpus_df keys_where predicate selecting exactly the keys
+#: media_row encodes as RIFF/WAVE (k % 4 == 1 below)
+WAV_KEYS_WHERE = "o_orderkey % 4 = 1"
+
+
 def media_row(k: int) -> tuple[str, int, bytearray]:
     if k % 4 == 3:
         buf = encode_y4m(k)
-    elif k % 4 == 1:
+    elif k % 4 == 1:                        # WAV_KEYS_WHERE
         buf = encode_wav(k)
     elif k % 4 == 2:
         buf = encode_bmp(k)

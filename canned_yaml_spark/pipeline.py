@@ -72,7 +72,7 @@ def prep_run(spark: SparkSession, clips: DataFrame,
     """
     from canned_yaml_spark import audiofp, augment, dedup as dd, segment
     from canned_yaml_spark.audio import _MAGIC
-    from canned_yaml_spark.runner import row_verdicts
+    from canned_yaml_spark.runner import violation_verdicts
     from canned_yaml_spark.segment import RAW_BPS
 
     suite = compile_spec(spec_source, clips.schema)
@@ -86,7 +86,9 @@ def prep_run(spark: SparkSession, clips: DataFrame,
                             & F.col("clip_id").isNotNull())
                     .select(F.col("clip_id").alias(id_col)).distinct())
     ok = clips.join(bad_ids, id_col, "left_anti")
-    verdicts = row_verdicts(clips, suite, part_col)
+    # verdicts over EVERY family's violations (x-unique, x-ref, …) —
+    # the same derivation job.run commits, not the row checks alone
+    verdicts = violation_verdicts(clips, viols, part_col)
 
     # 2 — acoustic dedup, keep-one
     if dedup:

@@ -5,10 +5,12 @@ to an Errata, and the verdict is max-severity < ERROR
 (/root/reference/canner/src/canner.cc:1096-1103, validate.cpp:13-20).
 Here all rows are validated at once in a single columnar scan: every
 check's violation predicate becomes one slot of an array<struct>
-column, NULL slots are filtered with a higher-order function, and the
-long-form violations table falls out of one explode — zero shuffles
-for row-level checks. Per-partition verdicts are one hash aggregation
-(partial map-side combine + final) on the partition column.
+column, the long-form violations table falls out of one explode plus
+a plain NULL post-filter — zero shuffles for row-level checks.
+Per-partition verdicts are one hash aggregation (partial map-side
+combine + final) on the partition column: row_verdicts over the row
+checks alone, violation_verdicts over a violations table of any
+family mix.
 
 Deliberate semantic difference from the reference (SURVEY.md §4):
 the reference fail-fasts inside a subtree (each check `return false`,
@@ -47,13 +49,11 @@ def _slot(c: Check) -> Column:
 
 def violation_raw_array(checks: list[Check]) -> Column:
     """array<struct<rule_id,severity,message>> with one slot per live
-    check — NULL slots for checks that did not fire. Unlike
-    violation_array this stays inside whole-stage codegen: the
-    higher-order `filter(...)` is a CodegenFallback expression, and
-    wrapping the slot array in it drags the whole CASE tree into
+    check — NULL slots for checks that did not fire. No higher-order
+    `filter(...)` compacts it: HOFs are CodegenFallback expressions,
+    and wrapping the slot array in one drags the whole CASE tree into
     interpreted eval (~2.7x measured on the row suite, guide §7.2).
-    Callers that only explode should explode THIS and drop NULLs with
-    a plain post-filter instead."""
+    Callers explode THIS and drop NULLs with a plain post-filter."""
     slots = [_slot(c) for c in _live_checks(checks)]
     if not slots:
         return F.array().cast(
@@ -61,25 +61,9 @@ def violation_raw_array(checks: list[Check]) -> Column:
     return F.array(*slots)
 
 
-def violation_array(checks: list[Check]) -> Column:
-    """array<struct<rule_id,severity,message>> of fired checks, in
-    reference keyword order. Static-ok checks cost nothing.
-
-    NOTE: the compacting `filter` is a higher-order function, which
-    Spark evaluates interpreted (CodegenFallback) — fine for the
-    user-facing array column this produces, but hot paths
-    (row_violations / row_verdicts / streaming) use
-    violation_raw_array + codegen-friendly equivalents instead."""
-    slots = [_slot(c) for c in _live_checks(checks)]
-    if not slots:
-        return F.array().cast(
-            "array<struct<rule_id:string,severity:int,message:string>>")
-    return F.filter(F.array(*slots), lambda x: x.isNotNull())
-
-
 def violation_count(checks: list[Check]) -> Column:
-    """Number of fired checks per row == size(violation_array(...)),
-    restated as a conditional sum so it compiles (no HOF)."""
+    """Number of fired checks per row == the non-NULL slots of
+    violation_raw_array(...), as a conditional sum so it compiles."""
     live = _live_checks(checks)
     if not live:
         return F.lit(0)
@@ -90,21 +74,14 @@ def violation_count(checks: list[Check]) -> Column:
 
 
 def max_violation_severity(checks: list[Check]) -> Column:
-    """Max severity among fired checks, -1 when none fired ==
-    coalesce(array_max(transform(violation_array(...), severity)), -1)
-    restated as greatest(CASE...) so it compiles (no HOF)."""
+    """Max severity among fired checks, -1 when none fired, as
+    greatest(CASE...) over the live checks so it compiles (no HOF)."""
     live = _live_checks(checks)
     if not live:
         return F.lit(-1)
     terms = [F.when(c.violation, int(c.severity)).otherwise(-1)
              for c in live]
     return terms[0] if len(terms) == 1 else F.greatest(*terms)
-
-
-def with_violations(df: DataFrame, suite: CheckSuite,
-                    out_col: str = "violations") -> DataFrame:
-    """Append the violations array column (no shuffle, single scan)."""
-    return df.withColumn(out_col, violation_array(suite.row_checks))
 
 
 def row_violations(df: DataFrame, suite: CheckSuite,
@@ -149,37 +126,28 @@ def row_verdicts(df: DataFrame, suite: CheckSuite,
     )
 
 
-def merge_verdicts(row_verdicts_df: DataFrame,
-                   *violation_dfs: DataFrame) -> DataFrame:
-    """Fold extra long-form violation tables (uniqueness, referential,
-    drift, payload) into the per-partition verdicts. Each extra table
-    carries (part_id, severity); the merge is a union + re-aggregate
-    on part_id — small inputs, one shuffle."""
-    extra = None
-    for vdf in violation_dfs:
-        piece = vdf.select("part_id", "severity")
-        extra = piece if extra is None else extra.unionByName(piece)
-    if extra is None:
-        return row_verdicts_df
-    extra_agg = (extra.groupBy("part_id")
-                 .agg(F.count(F.lit(1)).alias("x_viol"),
-                      F.max("severity").alias("x_sev")))
-    j = row_verdicts_df.join(extra_agg, "part_id", "left")
-    return (
-        j.select(
-            "part_id", "n_rows",
-            (F.col("n_violations") + F.coalesce(F.col("x_viol"), F.lit(0))
-             ).alias("n_violations"),
-            F.greatest(
-                F.coalesce(F.col("max_severity"), F.lit(-1)),
-                F.coalesce(F.col("x_sev"), F.lit(-1)),
-            ).alias("max_severity"))
-        .withColumn("pass", F.coalesce(F.col("max_severity"), F.lit(-1))
-                    < int(Severity.ERROR))
-        .withColumn("max_severity",
-                    F.when(F.col("max_severity") < 0, F.lit(None))
-                     .otherwise(F.col("max_severity")))
-    )
+def violation_verdicts(scope: DataFrame, viol: DataFrame,
+                       part_col: str = "part_id") -> DataFrame:
+    """Per-partition verdicts from a long-form violations table of ANY
+    family mix (row, uniqueness, referential, drift, payload, …):
+    (part_id, n_rows, n_violations, max_severity, pass). Row counts
+    come from `scope`, violation counts and max severity from `viol`
+    (already ≪ corpus), so no family is recomputed here. pass == no
+    ERROR-severity violation in the partition — the reference's rule
+    (canner.cc:1101) — so an ERROR from a table-level family (x-unique,
+    x-ref, drift, payload) flips it exactly as a row violation does."""
+    base = (scope.groupBy(F.col(part_col).alias("part_id"))
+                 .agg(F.count(F.lit(1)).alias("n_rows")))
+    viol_agg = (viol.groupBy("part_id")
+                    .agg(F.count(F.lit(1)).alias("n_violations"),
+                         F.max("severity").alias("max_severity")))
+    return (base.join(viol_agg, "part_id", "left")
+                .select("part_id", "n_rows",
+                        F.coalesce(F.col("n_violations"), F.lit(0))
+                         .alias("n_violations"),
+                        "max_severity",
+                        (F.coalesce(F.col("max_severity"), F.lit(-1))
+                         < int(Severity.ERROR)).alias("pass")))
 
 
 def suite_rule_ids(suite: CheckSuite) -> list[tuple[str, bool]]:

@@ -18,7 +18,7 @@ Scale shapes (the whole point of each design):
   (stratum, salt) local top-k — S-way parallel — then top-k over the
   ≤ strata·S·k survivors. Union of per-salt top-k is a superset of the
   global top-k, so the result is IDENTICAL to the naive window (pinned
-  in pytest); stage 2's input is bounded by construction.
+  in tests/test_sampling.py); stage 2's input is bounded by construction.
 - sample_fraction — stateless Bernoulli: a scan-side filter on the
   hash prefix, ZERO shuffles, trivially scale-free.
 - budget_sample — greedy hash-order prefix per stratum until the
@@ -70,16 +70,6 @@ def stratified_sample(df: DataFrame, stratum: str, k: int, key: str,
     return (local.withColumn("_r", F.row_number().over(w2))
                  .filter(F.col("_r") <= k)
                  .drop("_h", "_salt", "_r"))
-
-
-def stratified_sample_naive(df: DataFrame, stratum: str, k: int, key: str,
-                            seed: int = 42) -> DataFrame:
-    """One-window reference form (whole stratum on one reducer) —
-    kept as the pytest equality oracle for the two-phase plan."""
-    w = (Window.partitionBy(stratum)
-               .orderBy(sample_hash(key, seed), F.col(key)))
-    return (df.withColumn("_r", F.row_number().over(w))
-              .filter(F.col("_r") <= k).drop("_r"))
 
 
 def sample_fraction(df: DataFrame, frac: float, key: str,
@@ -149,13 +139,3 @@ def budget_sample(df: DataFrame, stratum: str, budget,
     return kept_whole.select(*out_cols).unionByName(
         kept_edge.select(*out_cols))
 
-
-def budget_sample_naive(df: DataFrame, stratum: str, budget,
-                        weight: str, key: str, seed: int = 42) -> DataFrame:
-    """One-window reference form — the pytest equality oracle for the
-    boundary-bucket plan."""
-    w = (Window.partitionBy(stratum)
-               .orderBy(sample_hash(key, seed), F.col(key))
-               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (df.withColumn("_cum", F.sum(weight).over(w))
-              .filter(F.col("_cum") <= budget).drop("_cum"))

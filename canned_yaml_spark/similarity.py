@@ -53,22 +53,6 @@ def hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
     return rng.randn(bits, dim).astype(float).tolist()
 
 
-def with_lsh_bucket(emb: DataFrame, planes: list[list[float]],
-                    col: str = "embedding") -> DataFrame:
-    """Append the sign-bit bucket id: bit i = sign(v · plane_i)."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        d = F.aggregate(
-            F.zip_with(F.col(col),
-                       F.array(*[F.lit(float(x)) for x in p]),
-                       lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        bucket = bucket.bitwiseOR(
-            F.when(d > 0, F.shiftleft(F.lit(1).cast("long"), i))
-             .otherwise(F.lit(0).cast("long")))
-    return emb.withColumn("bucket", bucket)
-
-
 def _signed_margins(col: str, planes: list[list[float]]):
     """array<double> of signed projections v·plane_i (one per plane)."""
     return F.array(*[

@@ -26,25 +26,8 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from canned_yaml_spark.checks import CheckSuite, Severity
 from canned_yaml_spark.runner import (
-    max_violation_severity, violation_count, violation_raw_array,
+    max_violation_severity, row_violations, violation_count,
 )
-
-
-def stream_violations(stream_df: DataFrame, suite: CheckSuite,
-                      id_col: str = "clip_id",
-                      part_col: str = "part_id") -> DataFrame:
-    """Long-form violations on a streaming DataFrame (stateless map —
-    no shuffle, no state store). Same codegen-friendly explode +
-    post-filter shape as runner.row_violations (HOF filter is
-    CodegenFallback — interpreted)."""
-    arr = violation_raw_array(suite.row_checks)
-    return (stream_df
-            .select(F.col(id_col).alias("clip_id"),
-                    F.col(part_col).alias("part_id"),
-                    F.explode(arr).alias("v"))
-            .filter(F.col("v").isNotNull())
-            .select("clip_id", "part_id",
-                    "v.rule_id", "v.severity", "v.message"))
 
 
 def validate_stream(stream_df: DataFrame, suite: CheckSuite,
@@ -52,8 +35,10 @@ def validate_stream(stream_df: DataFrame, suite: CheckSuite,
                     id_col: str = "clip_id",
                     part_col: str = "part_id") -> DataStreamWriter:
     """Append-mode violations sink. Caller picks the trigger and calls
-    .start(); exactly-once via the streaming checkpoint."""
-    v = stream_violations(stream_df, suite, id_col, part_col)
+    .start(); exactly-once via the streaming checkpoint. The batch
+    builder runner.row_violations is a stateless map (no shuffle, no
+    state store), so it runs on the stream unchanged."""
+    v = row_violations(stream_df, suite, id_col, part_col)
     return (v.writeStream
              .format("parquet")
              .option("path", out_dir)
@@ -285,7 +270,7 @@ def validate_stream_with_lineage(stream_df: DataFrame, suite: CheckSuite,
                                                      stream_id)
         if batch_id in committed:
             return                              # replay of a committed batch
-        viol = (stream_violations(batch_df, suite, id_col, part_col)
+        viol = (row_violations(batch_df, suite, id_col, part_col)
                 .withColumn("batch_id", F.lit(batch_id)))
         (viol.write
              .option("partitionOverwriteMode", "dynamic")

@@ -20,8 +20,10 @@ from __future__ import annotations
 
 import hashlib
 
+import hypothesis.strategies as st
 import numpy as np
 import pytest
+from hypothesis import given, settings
 
 from canned_yaml_spark import audio, flac
 
@@ -35,6 +37,52 @@ def test_crc_published_check_values():
     assert flac.crc16(b"123456789") == 0xFEE8
     assert flac.crc8(b"") == 0
     assert flac.crc16(b"") == 0
+
+
+def _crc8_loop(data: bytes) -> int:
+    c = 0
+    for b in data:
+        c = int(flac._CRC8_TBL[c ^ b])
+    return c
+
+
+def _crc16_loop(data: bytes) -> int:
+    c = 0
+    for b in data:
+        c = int(flac._CRC16_TBL[((c >> 8) ^ b) & 0xFF]) ^ ((c << 8) & 0xFFFF)
+    return c
+
+
+@settings(max_examples=200, deadline=None)
+@given(msg=st.one_of(
+    st.binary(min_size=1, max_size=40),
+    st.integers(255, 257).flatmap(
+        lambda n: st.binary(min_size=n, max_size=n))))
+def test_crc_gather_matches_byte_loop(msg):
+    # crc8/crc16 XOR-reduce one positional-table gather (GF(2)
+    # linearity); the byte-at-a-time table loop is the oracle
+    assert flac.crc8(msg) == _crc8_loop(msg)
+    assert flac.crc16(msg) == _crc16_loop(msg)
+
+
+@settings(max_examples=5, deadline=None)
+@given(seed=st.integers(0, 2**32 - 1))
+def test_crc_gather_long_messages_and_fallback(seed):
+    # from one-row positional tables: 5000 and 16384 grow them by
+    # doubling, 16385 and 20000 exceed _CRC_POS_MAX and take the loop
+    assert flac._CRC_POS_MAX == 16384
+    saved = flac._CRC16_POS, flac._CRC8_POS
+    flac._CRC16_POS, flac._CRC8_POS = saved[0][:1], saved[1][:1]
+    rng = np.random.default_rng(seed)
+    try:
+        for n in (5000, 16384, 16385, 20000):
+            msg = rng.integers(0, 256, n, dtype=np.uint8).tobytes()
+            assert flac.crc8(msg) == _crc8_loop(msg)
+            assert flac.crc16(msg) == _crc16_loop(msg)
+        assert flac._CRC16_POS.shape[0] == 16384
+    finally:
+        if saved[0].shape[0] > flac._CRC16_POS.shape[0]:
+            flac._CRC16_POS, flac._CRC8_POS = saved
 
 
 # ----------------------------------------------- hand-derived stream

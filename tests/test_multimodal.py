@@ -203,6 +203,17 @@ def test_media_corpus_meta_matches_python(spark):
             assert abs(got.mean_luma - want["mean_luma"]) < 1e-9
 
 
+def test_wav_keys_where_selects_exactly_the_wav_rows(spark):
+    # the exported key predicate and media_row's kind mapping must agree
+    # on every key: under-selection would silently drop WAV rows from
+    # the audio_stats query, over-selection would pay extra encodes
+    keys = spark.range(256).withColumnRenamed("id", "o_orderkey")
+    got = {r.o_orderkey for r in keys.filter(mm.WAV_KEYS_WHERE).collect()}
+    want = {k for k in range(256)
+            if bytes(mm.media_row(k)[2][:4]) == b"RIFF"}
+    assert got == want and len(want) == 64
+
+
 def test_bmp_roundtrip_real_container():
     # encode_bmp emits a spec-conformant 24-bpp bottom-up BMP; our
     # parser must recover the logical (top-down) pixel content

@@ -62,77 +62,6 @@ def test_injection_plan_is_pure():
     assert injected_rule(10) == "dur_range"
 
 
-def test_lazy_ref_path_matches_eager(spark, clips, clips_ref, suite):
-    # a ref table carrying the stored digest (pcm_hash + pcm_len) must
-    # produce the IDENTICAL violation set through the lazy-reference
-    # plan (pcm_ref fetched only for residual rows)
-    pc = suite.payload_checks[0]
-    ref_h = (clips_ref
-             .withColumn("pcm_hash", F.xxhash64("pcm_ref"))
-             .withColumn("pcm_len", F.length("pcm_ref")))
-    want = {(r.clip_id, r.rule_id, r.message)
-            for r in payload.payload_violations(clips, clips_ref, pc)
-            .collect()}
-    got = {(r.clip_id, r.rule_id, r.message)
-           for r in payload.payload_violations(clips, ref_h, pc,
-                                               co_located=True)
-           .collect()}
-    assert got == want and want
-    # and the lazy plan must NOT read pcm_ref in its first join: the
-    # digest join's ref-side scan schema stays narrow
-    plan = payload.payload_violations(clips, ref_h, pc, co_located=True) \
-        ._jdf.queryExecution().optimizedPlan().toString()
-    assert "pcm_hash" in plan
-
-
-def test_payload_plan_is_layout_aware(spark, clips, clips_ref, suite):
-    # VERDICT r4 item 1: the lazy digest path must be selected ONLY
-    # when the caller declares clip_id co-location — on unorganized
-    # tables its residual pcm_ref re-fetch re-shuffles the byte column
-    # and loses to the eager single-join plan (judge A/B: 3.74s vs
-    # 2.87s on the unbucketed 600k corpus).
-    pc = suite.payload_checks[0]
-    ref_h = (clips_ref
-             .withColumn("pcm_hash", F.xxhash64("pcm_ref"))
-             .withColumn("pcm_len", F.length("pcm_ref")))
-    assert payload.select_payload_plan(ref_h, co_located=False) == "eager"
-    assert payload.select_payload_plan(ref_h, co_located=True) == "lazy"
-    assert payload.select_payload_plan(clips_ref, co_located=True) == "eager"
-    assert payload.select_payload_plan(
-        ref_h, co_located=False, lazy_ref=True) == "lazy"
-    import pytest
-    with pytest.raises(ValueError):
-        payload.select_payload_plan(clips_ref, co_located=True,
-                                    lazy_ref=True)
-
-    # plan-level assertion, both selections: digest tables WITHOUT
-    # co-location compile to the eager single-join plan (exactly one
-    # pcm_ref-consuming join, no xxhash64-vs-stored-hash comparison) …
-    eager_plan = payload.payload_violations(clips, ref_h, pc) \
-        ._jdf.queryExecution().optimizedPlan().toString()
-    assert "pcm_hash" not in eager_plan
-    # … and WITH co-location to the lazy two-join plan
-    lazy_plan = payload.payload_violations(clips, ref_h, pc,
-                                           co_located=True) \
-        ._jdf.queryExecution().optimizedPlan().toString()
-    assert "pcm_hash" in lazy_plan
-
-
-def test_lazy_join2_builds_on_residual_side(spark, clips, clips_ref, suite):
-    # Under SHUFFLE_HASH the hinted side becomes the build side. Join 1
-    # (digest probe) must build on the narrow ref-digest side
-    # (BuildRight); join 2 (the residual pcm_ref fetch) must build on
-    # the RESIDUAL (BuildLeft) — building over ref would copy every
-    # reference byte into per-task hash maps.
-    pc = suite.payload_checks[0]
-    ref_h = (clips_ref
-             .withColumn("pcm_hash", F.xxhash64("pcm_ref"))
-             .withColumn("pcm_len", F.length("pcm_ref")))
-    plan = payload.payload_violations(clips, ref_h, pc, co_located=True) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "BuildLeft" in plan and "BuildRight" in plan
-
-
 def test_certified_path_matches_eager(spark, clips, suite):
     # a ref table carrying the ingest certificate (codec_ref +
     # enc_hash/enc_len of the payload bytes that passed validation at
@@ -144,8 +73,14 @@ def test_certified_path_matches_eager(spark, clips, suite):
     pc = suite.payload_checks[0]
     ref_plain = fixtures.clips_ref_df(spark, N_SMALL)
     ref_cert = fixtures.clips_ref_df(spark, N_SMALL, certified=True)
-    assert payload.select_payload_plan(ref_cert, co_located=False) \
-        == "certified"
+    assert payload.select_payload_plan(ref_cert) == "certified"
+    # a ref table carrying only a PCM digest (no ingest certificate)
+    # proves nothing about lossy payloads: it selects the eager plan
+    ref_digest = (ref_plain
+                  .withColumn("pcm_hash", F.xxhash64("pcm_ref"))
+                  .withColumn("pcm_len", F.length("pcm_ref")))
+    assert payload.select_payload_plan(ref_digest) == "eager"
+    assert payload.select_payload_plan(ref_plain) == "eager"
     want = {(r.clip_id, r.rule_id, r.message)
             for r in payload.payload_violations(clips, ref_plain, pc)
             .collect()}
@@ -218,7 +153,7 @@ def test_spec_can_forbid_digest_fast_path(spark, clips, suite):
         clips.limit(200), ref_cert, pc) \
         ._jdf.queryExecution().optimizedPlan().toString()
     assert "enc_hash" not in plan and "xxhash64" not in plan
-    # default spec keeps the digest plans available
+    # default spec keeps the certified digest plan available
     assert suite.payload_checks[0].allow_digest is True
 
 

@@ -61,3 +61,30 @@ def test_prep_speed_family(spark):
                             dedup=False, speed=(10, 9))
     # 4096 samples → (4095*9)//10 + 1 = 3686 → (3686-256)//192+1
     assert res.n_windows == 18
+
+
+def test_prep_manifest_verdicts_match_job_run(spark, tmp_path):
+    # a clip_id duplicated across two partitions under x-unique: the
+    # table-level violation must fail those partitions in prep's
+    # manifest exactly as job.run's verdicts fail them
+    from canned_yaml_spark import audio
+    from canned_yaml_spark import job as jobmod
+    spec = {"type": "object", "properties": {
+        "clip_id": {"type": "string", "pattern": "^clip_[0-9]+",
+                    "x-unique": True}}}
+    pcm = bytearray(audio.synth_pcm(4, 16000, 400).tobytes())
+    rows = [(f"clip_{i}", i % 3, "pcm_s16le", pcm) for i in range(9)]
+    rows.append(("clip_4", 2, "pcm_s16le", pcm))        # dup of part 1's
+    corpus = spark.createDataFrame(
+        rows, "clip_id string, part_id int, codec string, bytes binary")
+    out = str(tmp_path / "prep_u")
+    pipeline.prep_run(spark, corpus, spec, win=256, hop=192,
+                      dedup=False, out_dir=out, run_id="u1")
+    got = {r.part_id: (r["pass"], r.n_violations) for r in
+           spark.read.parquet(f"{out}/manifest").collect()}
+    res = jobmod.run(spark, spec, corpus, stats_columns=())
+    want = {r.part_id: (r["pass"], r.n_violations)
+            for r in res.verdicts.collect()}
+    assert got == want
+    assert want[1] == (False, 1) and want[2] == (False, 1)
+    assert want[0] == (True, 0)

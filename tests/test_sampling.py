@@ -5,6 +5,7 @@ bit-for-bit, and every sample must be invariant to input partitioning."""
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import Window
 
 from canned_yaml_spark import sampling
 
@@ -32,13 +33,32 @@ def skewed(spark, docs):
     return d
 
 
+def stratified_sample_naive(df, stratum, k, key, seed=42):
+    """One-window form (whole stratum on one reducer): the equality
+    oracle for the two-phase plan."""
+    w = (Window.partitionBy(stratum)
+               .orderBy(sampling.sample_hash(key, seed), F.col(key)))
+    return (df.withColumn("_r", F.row_number().over(w))
+              .filter(F.col("_r") <= k).drop("_r"))
+
+
+def budget_sample_naive(df, stratum, budget, weight, key, seed=42):
+    """One-window form: the equality oracle for the boundary-bucket
+    plan."""
+    w = (Window.partitionBy(stratum)
+               .orderBy(sampling.sample_hash(key, seed), F.col(key))
+               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return (df.withColumn("_cum", F.sum(weight).over(w))
+              .filter(F.col("_cum") <= budget).drop("_cum"))
+
+
 def _rows(df, *cols):
     return {tuple(r) for r in df.select(*cols).collect()}
 
 
 def test_stratified_two_phase_equals_naive(spark, skewed):
     a = sampling.stratified_sample(skewed, "stratum", 25, "doc_id")
-    b = sampling.stratified_sample_naive(skewed, "stratum", 25, "doc_id")
+    b = stratified_sample_naive(skewed, "stratum", 25, "doc_id")
     assert _rows(a, "doc_id", "stratum") == _rows(b, "doc_id", "stratum")
     sizes = {r.stratum: r.n for r in
              a.groupBy("stratum").agg(F.count("*").alias("n")).collect()}
@@ -78,7 +98,7 @@ def test_fraction_rate_determinism_and_nesting(spark, docs):
 
 def test_budget_bucketed_equals_naive(spark, skewed):
     a = sampling.budget_sample(skewed, "stratum", 15_000, "w", "doc_id")
-    b = sampling.budget_sample_naive(skewed, "stratum", 15_000, "w",
+    b = budget_sample_naive(skewed, "stratum", 15_000, "w",
                                      "doc_id")
     assert _rows(a, "doc_id", "stratum", "w") == _rows(b, "doc_id",
                                                        "stratum", "w")
@@ -117,6 +137,6 @@ def test_budget_zero_weight_rows(spark):
         [(1, 0, 5), (2, 0, 5), (3, 0, 0), (4, 0, 5), (5, 0, 5)],
         "doc_id long, stratum int, w long")
     a = sampling.budget_sample(df, "stratum", 10, "w", "doc_id")
-    b = sampling.budget_sample_naive(df, "stratum", 10, "w", "doc_id")
+    b = budget_sample_naive(df, "stratum", 10, "w", "doc_id")
     assert _rows(a, "doc_id") == _rows(b, "doc_id")
     assert a.agg(F.sum("w")).collect()[0][0] <= 10

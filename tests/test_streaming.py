@@ -7,7 +7,7 @@ from canned_yaml_spark import fixtures, streaming
 from canned_yaml_spark.runner import row_verdicts, row_violations
 
 
-def test_stream_violations_match_batch(spark, suite, tmp_path):
+def test_validate_stream_matches_batch(spark, suite, tmp_path):
     src = str(tmp_path / "src")
     out = str(tmp_path / "viol")
     chk = str(tmp_path / "chk")
@@ -513,7 +513,8 @@ def test_stream_window_chunking_matches_batch(spark, tmp_path):
 def test_stream_new_vocabulary_matches_batch(spark, tmp_path):
     # round-5 vocabulary (format assertion + x-repetition) composes
     # onto streams unchanged: both are pure Column row checks, so
-    # stream_violations routes them through the same violation array.
+    # validate_stream routes them through runner.row_violations, the
+    # batch builder.
     from canned_yaml_spark import derive
     src = str(tmp_path / "src_fmt")
     out = str(tmp_path / "viol_fmt")
@@ -626,8 +627,8 @@ def test_stream_media_rule_matches_batch(spark, tmp_path):
 
 def test_stream_embedding_rule_matches_batch(spark, tmp_path):
     # x-embedding composes onto streams unchanged: all four vector
-    # checks are pure array-HOF row predicates, so stream_violations
-    # routes them through the same violation array (no state store).
+    # checks are pure array-HOF row predicates, so validate_stream
+    # routes them through runner.row_violations (no state store).
     from canned_yaml_spark import derive
     from canned_yaml_spark.compile import compile_spec
     src = str(tmp_path / "src_emb")

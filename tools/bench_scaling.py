@@ -176,10 +176,9 @@ def build_bucketed(rows: int, bench_dir: str, wh: str,
     # DIED on a 71 GB-free disk) — size chunks from the actual row
     # bytes against a ~25 GB budget instead. Row k is a pure function
     # of k, so chunking is bit-identical to one pass.
-    row_bytes = max_samples * 2 * 2 + 400     # bytes + pcm_ref + overhead
-    if os.environ.get("SG_CERT") == "1":
-        # + pcm_z (≤ raw size; sine PCM compresses far below it)
-        row_bytes += max_samples * 2
+    # bytes + pcm_ref + pcm_z (≤ raw size; sine PCM compresses far
+    # below it) + overhead
+    row_bytes = max_samples * 2 * 3 + 400
     chunk = max(1_000_000, int(25e9 / (2.0 * row_bytes)))
     # generation tasks capped at ~600k rows: larger Arrow-streaming
     # tasks (2.4M rows at 153.6M/64) hit a Python↔JVM pipe stall under
@@ -188,23 +187,17 @@ def build_bucketed(rows: int, bench_dir: str, wh: str,
     # the proven-stable size from every prior build
     def n_parts(n):
         return max(64, n // 600_000)
-    # the ref table stores a digest of its PCM at ingest (pcm_hash +
-    # pcm_len) — payload_violations' lazy-reference path then fetches
-    # pcm_ref bytes only for rows that fail the digest fast path.
-    # SG_CERT=1 additionally writes the full ingest certificate
-    # (codec_ref + enc_hash/enc_len + compressed pcm_z): the certified
-    # plan then fast-passes ANY unchanged codec and the residual fetch
-    # moves compressed bytes (select_payload_plan auto-detects).
-    certified = os.environ.get("SG_CERT") == "1"
+    # the ref table carries the full ingest certificate (codec_ref +
+    # enc_hash/enc_len + compressed pcm_z): the certified plan then
+    # fast-passes ANY unchanged codec and the residual fetch moves
+    # compressed bytes (select_payload_plan auto-detects).
     gens = {
         "clips_b": lambda lo, n: fixtures.clips_df(
             spark, n, max_samples=max_samples, partitions=n_parts(n),
             start=lo),
         "clips_ref_b": lambda lo, n: fixtures.clips_ref_df(
             spark, n, max_samples=max_samples, partitions=n_parts(n),
-            start=lo, certified=certified)
-            .withColumn("pcm_hash", F.xxhash64("pcm_ref"))
-            .withColumn("pcm_len", F.length("pcm_ref")),
+            start=lo, certified=True),
     }
     n_chunks = (rows + chunk - 1) // chunk
     for name, gen in gens.items():
@@ -298,10 +291,11 @@ def main() -> None:
     samples = int(os.environ.get("SG_SAMPLES", "512"))
     os.makedirs("/dev/shm/spark-tmp", exist_ok=True)
     tag = f"{rows}" if samples == 512 else f"{rows}_s{samples}"
-    if os.environ.get("SG_CERT") == "1":
-        tag += "_cert"
+    # every warehouse is certified; the suffix keeps the history file
+    # names of earlier certified runs, so new runs merge with them
+    tag += "_cert"
     # SG_TAG: opt-in suffix for a fresh warehouse+history when the
-    # storage layout changes materially (e.g. the lazy-ref digest
+    # storage layout changes materially (e.g. new ingest certificate
     # columns) — min-merging timings across layouts would blur the
     # evidence of what a layout change bought
     if os.environ.get("SG_TAG"):
@@ -358,16 +352,15 @@ def main() -> None:
     p_par = max(0.0, (lo["secs"] - hi["secs"]) * 32.0 / 3.0)
     f_ser = max(0.0, lo["secs"] - p_par / 8.0)
 
-    cert_note = (
-        "\nStorage layout: CERTIFIED ingest posture (SG_CERT=1) — the ref\n"
-        "table stores codec_ref + enc_hash/enc_len (digest of the payload\n"
-        "bytes that passed validation at ingest) and zlib pcm_z;\n"
-        "payload_violations runs its certified plan (digest fast path for\n"
-        "every codec, compressed residual fetch). See FIXTURES.md table 4\n"
-        "and BENCH/SCALING_MODEL.md round-5 addition.\n"
-        if os.environ.get("SG_CERT") == "1" else "")
     md = f"""# BENCH — scaling evidence (north_rule) — {rows:,} rows, {samples} samples/clip
-{cert_note}
+
+Storage layout: CERTIFIED ingest posture — the ref
+table stores codec_ref + enc_hash/enc_len (digest of the payload
+bytes that passed validation at ingest) and zlib pcm_z;
+payload_violations runs its certified plan (digest fast path for
+every codec, compressed residual fetch). See FIXTURES.md table 4
+and BENCH/SCALING_MODEL.md round-5 addition.
+
 
 End-to-end constraint-suite job — the union of every check family
 (row checks + uniqueness + referential + PSI + KS drift + payload SNR)

@@ -213,19 +213,6 @@ def main() -> int:
            ("JVM prefilter before Arrow", lambda p: "Filter" in p)],
           "SHUFFLE_HASH; fast-path rows filtered before Arrow; "
           "transcript branch pure JVM over pruned scan")
-    bench_ref_h = (bench_ref
-                   .withColumn("pcm_hash", F.xxhash64("pcm_ref"))
-                   .withColumn("pcm_len", F.length("pcm_ref")))
-    audit("payload SNR (lazy-ref digest)",
-          payload.payload_violations(bench, bench_ref_h,
-                                     bsuite.payload_checks[0],
-                                     co_located=True),
-          [("no sort-merge", lambda p: "SortMergeJoin" not in p),
-           ("digest in first join", lambda p: "pcm_hash" in p),
-           ("two joins (narrow then residual fetch)",
-            lambda p: p.count("Join") >= 3)],  # 2 decode-branch + transcript
-          "first join's ref side is (clip_id, 12 B digest); pcm_ref "
-          "fetched co-partitioned for residual rows only")
     # the certified entry reads a PARQUET copy so the assertion below
     # checks real scan-level column pruning (an in-memory MapInPandas
     # fixture always lists every output column, prunable or not)

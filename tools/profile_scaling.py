@@ -81,7 +81,7 @@ def fam_payload():
     out = None
     for pc in suite.payload_checks:
         v = payload.payload_violations(clips, ref, pc, "clip_id", "part_id",
-                                       join_hint="MERGE", co_located=True)
+                                       join_hint="MERGE")
         out = v if out is None else out.unionByName(v)
     return out
 def fam_pay_scan():
