@@ -41,44 +41,52 @@ def duplicate_keys(df: DataFrame, check: UniqueCheck) -> DataFrame:
               .filter(F.col("n_dup") > 1))
 
 
+def hash_partition_columns(df: DataFrame) -> tuple[str, ...]:
+    """Columns Spark's physical plan reports `df` hash-partitioned on.
+
+    A table bucketed by a key reports hashpartitioning on it, through
+    filters and projections too; plain parquet reports none. Reading
+    the plan starts no Spark job.
+    """
+    part = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning":
+        return ()
+    keys = [part.expressions().apply(i)
+            for i in range(part.expressions().size())]
+    if not all(e.getClass().getSimpleName() == "AttributeReference"
+               for e in keys):
+        return ()
+    return tuple(e.name() for e in keys)
+
+
 def unique_violations(df: DataFrame, check: UniqueCheck,
                       id_col: str = "clip_id",
-                      part_col: str = "part_id",
-                      broadcast_back: bool = True) -> DataFrame:
+                      part_col: str = "part_id") -> DataFrame:
     """Long-form violation rows for duplicated keys, with row context.
 
-    Keeps (clip_id, part_id) per offending row by broadcast-joining
-    the (small) duplicate-key set back to the fact table: dup keys are
-    proportional to defects, not table size, so the join side is tiny
-    and the fact table is NOT shuffled.
-
-    broadcast_back=False is the bucketed-table plan: when `df` is
-    bucketed by the key, duplicate_keys' aggregate inherits that
-    partitioning, so a shuffle-hash join back is ALREADY co-partitioned
-    — zero exchange AND zero driver round-trip. The broadcast variant
-    collects the dup-key set to the driver and re-ships it, a serial
-    cost that grows with the defect count (measured ~6 s at 38.4M rows,
-    BENCH/PROFILE.md) — exactly the kind of data-dependent floor that
-    caps whole-job scaling.
+    Keeps (clip_id, part_id) per offending row by joining the duplicate
+    keys back to `df`. When `df` reports hash partitioning on exactly
+    the key (a table bucketed by it), duplicate_keys' aggregate
+    inherits it and a shuffle-hash join back is co-partitioned: zero
+    exchange, zero driver round-trip. Otherwise the (small,
+    defect-sized) dup-key set is broadcast, so the fact table is NOT
+    shuffled — a shuffle-hash join would repartition it on the key.
     """
     cols = list(check.columns)
     label = cols[0] if len(cols) == 1 else "(" + ",".join(cols) + ")"
     dups = duplicate_keys(df, check)
-
-    def _sel(joined):
-        return joined.select(
-            F.col(id_col).alias("clip_id"),
-            F.col(part_col).alias("part_id"),
-            F.lit(check.rule_id).alias("rule_id"),
-            F.lit(int(check.severity)).alias("severity"),
-            F.concat(F.lit(f"duplicate {label} (x"),
-                     F.col("n_dup").cast("string"),
-                     F.lit(")")).alias("message"))
-
-    if not broadcast_back:
+    if sorted(hash_partition_columns(df)) == sorted(cols):
         dups = dups.hint("SHUFFLE_HASH")
-        return _sel(df.join(dups, on=cols, how="inner"))
-    return _sel(df.join(F.broadcast(dups), on=cols, how="inner"))
+    else:
+        dups = F.broadcast(dups)
+    return df.join(dups, on=cols, how="inner").select(
+        F.col(id_col).alias("clip_id"),
+        F.col(part_col).alias("part_id"),
+        F.lit(check.rule_id).alias("rule_id"),
+        F.lit(int(check.severity)).alias("severity"),
+        F.concat(F.lit(f"duplicate {label} (x"),
+                 F.col("n_dup").cast("string"),
+                 F.lit(")")).alias("message"))
 
 
 def referential_violations(df: DataFrame, dim: DataFrame, check: RefCheck,

@@ -244,3 +244,22 @@ def write_fixtures(spark: SparkSession, out_dir: str, n_rows: int,
         .write.mode("overwrite").parquet(f"{out_dir}/clips_ref.parquet")
     codec_dim_df(spark) \
         .write.mode("overwrite").parquet(f"{out_dir}/codec_dim.parquet")
+
+
+def bucketed_table(spark: SparkSession, df: DataFrame, name: str,
+                   location: str, files_per_bucket: int = 1) -> DataFrame:
+    """Write `df` as table `name` at `location`, bucketed and sorted by
+    clip_id into 4 buckets — the storage posture of README's "Design
+    for 100 TB". One file per bucket comes from repartitioning on the
+    bucket key before the write; more come from a round-robin
+    repartition into that many write tasks (a chunk-appended layout).
+    """
+    split = "4, clip_id" if files_per_bucket == 1 else str(files_per_bucket)
+    df.createOrReplaceTempView(f"{name}_src")
+    spark.sql(f"""
+        CREATE TABLE {name} USING PARQUET
+        CLUSTERED BY (clip_id) SORTED BY (clip_id) INTO 4 BUCKETS
+        LOCATION '{location}'
+        AS SELECT /*+ REPARTITION({split}) */ * FROM {name}_src""")
+    spark.catalog.dropTempView(f"{name}_src")
+    return spark.table(name)

@@ -44,43 +44,23 @@ def all_violations(clips: DataFrame, suite: CheckSuite, *,
                    ks_reference: np.ndarray | None = None,
                    id_col: str = "clip_id",
                    part_col: str = "part_id",
-                   skip_unique: bool = False,
-                   bucketed_by_id: bool = False,
-                   bucket_sort_trusted: bool | None = None) -> DataFrame:
+                   skip_unique: bool = False) -> DataFrame:
     """Union of every check family's long-form violations.
 
     skip_unique: used by resume (job.run), where uniqueness must scan
     the FULL table rather than the pending scope — see run().
 
-    bucketed_by_id: set when `clips` (and clips_ref) are stored
-    bucketed+sorted by `id_col` (the production Iceberg posture).
-    Uniqueness then joins its dup-key set back co-partitioned instead
-    of through a driver-side broadcast, and the payload join streams
-    the pre-sorted buckets (merge) instead of building per-task hash
-    maps over payload-sized rows — both remove serial floors measured
-    in BENCH/PROFILE.md.
-
-    bucket_sort_trusted: whether Spark will TRUST the per-bucket sort
-    order (it only does when every bucket is a single file). On a
-    multi-file-per-bucket layout — e.g. a chunk-appended table whose
-    compaction was skipped — a MERGE hint makes Spark re-SORT the
-    payload-sized rows inside every task before merging, which costs
-    more than the hash maps the merge was meant to avoid. So: MERGE
-    only when bucketed AND sort-trusted; otherwise SHUFFLE_HASH, which
-    is still exchange-free over bucketed tables (hash joins need only
-    distribution, not order). Defaults to bucketed_by_id (the
-    single-file layout is the normal posture; callers with
-    chunk-appended tables pass False).
+    No plan option: uniqueness reads the hash partitioning `clips`
+    reports (dataset.hash_partition_columns) and joins back
+    co-partitioned on a table bucketed by the key, and every payload
+    join is a shuffle-hash join, exchange-free over clip_id buckets.
     """
     dims = dims or {}
-    if bucket_sort_trusted is None:
-        bucket_sort_trusted = bucketed_by_id
     out = row_violations(clips, suite, id_col, part_col)
     if not skip_unique:
         for uc in suite.unique_checks:
             out = out.unionByName(
-                dataset.unique_violations(clips, uc, id_col, part_col,
-                                          broadcast_back=not bucketed_by_id))
+                dataset.unique_violations(clips, uc, id_col, part_col))
     for rc in suite.ref_checks:
         if rc.table not in dims:
             raise KeyError(f"x-ref check {rc.rule_id} needs dimension table "
@@ -108,17 +88,12 @@ def all_violations(clips: DataFrame, suite: CheckSuite, *,
         if clips_ref is not None:
             out = out.unionByName(
                 payload.payload_violations(
-                    clips, clips_ref, pc, id_col, part_col,
-                    join_hint=("MERGE" if bucketed_by_id
-                               and bucket_sort_trusted else "SHUFFLE_HASH")))
+                    clips, clips_ref, pc, id_col, part_col))
     for tc in suite.transcript_checks:
         if clips_ref is not None and tc.column in clips.columns:
             out = out.unionByName(
                 payload.transcript_violations(
-                    clips, clips_ref, tc, id_col, part_col,
-                    join_hint=("MERGE" if bucketed_by_id
-                               and bucket_sort_trusted
-                               else "SHUFFLE_HASH")))
+                    clips, clips_ref, tc, id_col, part_col))
     for mc in suite.media_checks:
         if mc.column in clips.columns:
             from canned_yaml_spark import multimodal

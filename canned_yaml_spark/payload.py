@@ -142,29 +142,34 @@ def select_payload_plan(clips_ref: DataFrame) -> str:
     return "certified" if has_cert else "eager"
 
 
+def _transcript_join(clips: DataFrame, clips_ref: DataFrame, id_col: str,
+                     part_col: str, t_col: F.Column,
+                     tr_col: F.Column) -> DataFrame:
+    """(clip_id, part_id, _t, _tr): each clip's transcript beside its
+    reference, over scans pruned to narrow columns (bytes never read)."""
+    return clips.select(
+        F.col(id_col).alias("clip_id"),
+        F.col(part_col).alias("part_id"),
+        t_col.alias("_t"),
+    ).join(
+        clips_ref.select("clip_id", tr_col.alias("_tr")).hint("SHUFFLE_HASH"),
+        "clip_id", "inner")
+
+
 def payload_violations(clips: DataFrame, clips_ref: DataFrame,
                        check: PayloadCheck,
                        id_col: str = "clip_id",
-                       part_col: str = "part_id",
-                       join_hint: str = "SHUFFLE_HASH") -> DataFrame:
+                       part_col: str = "part_id") -> DataFrame:
     """Long-form violation rows for payloads failing decode/SNR/transcript.
 
     clips_ref: (clip_id, pcm_ref binary — little-endian PCM16,
     transcript_ref string). Output has one row per failure mode per
     failed clip.
 
-    join_hint: SHUFFLE_HASH for unorganized inputs (hashing one side
-    beats sorting 2× payload-sized rows). Pass "MERGE" only when both
-    tables are bucketed AND sorted by clip_id AND the scan actually
-    reports that order — which requires one file per bucket AND
-    `spark.sql.legacy.bucketedTableScan.outputOrdering=true`
-    (off by default since Spark 3.0, SPARK-28595). Under those
-    conditions the merge join streams the pre-sorted bucket files
-    with no sort and no per-task hash map over payload rows — one
-    fewer full pass over the byte columns, which is what the host
-    memory bus pays for (BENCH/MEMBW.md). Without them a MERGE hint
-    silently re-SORTs payload-sized rows inside every task; prefer
-    SHUFFLE_HASH (still exchange-free over bucketed layouts).
+    Every clips ⋈ clips_ref join is SHUFFLE_HASH: hashing one side
+    beats sorting 2× payload-sized rows, and a hash join needs only the
+    distribution, so over tables bucketed by clip_id it runs with no
+    exchange at all.
 
     Plan: certified when clips_ref carries codec_ref/enc_hash/enc_len
     (see select_payload_plan), else eager. The ingest certificate
@@ -195,16 +200,8 @@ def payload_violations(clips: DataFrame, clips_ref: DataFrame,
     ref_pcm_col = "pcm_z" if ref_is_z else "pcm_ref"
 
     # ---- branch 1: transcript equality — pure JVM, bytes never read.
-    # Column pruning keeps this scan to 3 narrow columns per side; with
-    # clip_id-bucketed tables the join is exchange-free codegen.
-    t = clips.select(
-        F.col(id_col).alias("clip_id"),
-        F.col(part_col).alias("part_id"),
-        F.col("transcript").alias("_t"),
-    ).join(
-        clips_ref.select("clip_id",
-                         F.col("transcript_ref").alias("_tr")).hint(join_hint),
-        "clip_id", "inner")
+    t = _transcript_join(clips, clips_ref, id_col, part_col,
+                         F.col("transcript"), F.col("transcript_ref"))
     t_viol = (t.filter(_transcript_mismatch(F.col("_t"), F.col("_tr")))
                .select("clip_id", "part_id",
                        F.lit(rule_id).alias("rule_id"),
@@ -233,7 +230,7 @@ def payload_violations(clips: DataFrame, clips_ref: DataFrame,
         # (see payload_snr_stats below) and maps NULL certs to False.
         joined = probe.join(
             clips_ref.select("clip_id", "codec_ref",
-                             "enc_hash", "enc_len").hint(join_hint),
+                             "enc_hash", "enc_len").hint("SHUFFLE_HASH"),
             "clip_id", "inner")
         fast_ok = F.col("_bytes").isNotNull() & F.coalesce(
             (F.col("_codec") == F.col("codec_ref"))
@@ -248,7 +245,7 @@ def payload_violations(clips: DataFrame, clips_ref: DataFrame,
         need = (joined.filter(F.col("_codec").isin(*sorted(_MAGIC))
                               & ~fast_ok)
                       .drop("codec_ref", "enc_hash", "enc_len")
-                      .hint(join_hint)
+                      .hint("SHUFFLE_HASH")
                       .join(clips_ref.select(
                                 "clip_id",
                                 F.col(ref_pcm_col).alias("_pcm_ref")),
@@ -256,12 +253,11 @@ def payload_violations(clips: DataFrame, clips_ref: DataFrame,
     else:
         joined = probe.join(
             # with both tables bucketed by clip_id at write time the
-            # exchange disappears entirely; see join_hint above for the
-            # SHUFFLE_HASH vs MERGE trade
+            # exchange disappears entirely
             clips_ref.select(
                 F.col("clip_id"),
                 F.col("pcm_ref").alias("_pcm_ref"),
-            ).hint(join_hint),
+            ).hint("SHUFFLE_HASH"),
             "clip_id", "inner",
         )
         # Rows that never need Python: unknown codec (reference
@@ -323,8 +319,7 @@ def payload_violations(clips: DataFrame, clips_ref: DataFrame,
 def transcript_distance(clips: DataFrame, clips_ref: DataFrame,
                         id_col: str = "clip_id",
                         part_col: str = "part_id",
-                        ref_col: str = "transcript_ref",
-                        join_hint: str = "SHUFFLE_HASH") -> DataFrame:
+                        ref_col: str = "transcript_ref") -> DataFrame:
     """Levenshtein distance between each clip's transcript and its
     reference — the ASR-tolerance generalization of the equality
     branch in payload_violations (reference analog: equal.cc's exact
@@ -337,14 +332,8 @@ def transcript_distance(clips: DataFrame, clips_ref: DataFrame,
     the same clip_id equi-join shape as the transcript branch, so it
     is exchange-free over clip_id-bucketed tables.
     """
-    t = clips.select(
-        F.col(id_col).alias("clip_id"),
-        F.col(part_col).alias("part_id"),
-        F.col("transcript").alias("_t"),
-    ).join(
-        clips_ref.select("clip_id",
-                         F.col(ref_col).alias("_tr")).hint(join_hint),
-        "clip_id", "inner")
+    t = _transcript_join(clips, clips_ref, id_col, part_col,
+                         F.col("transcript"), F.col(ref_col))
     return t.select("clip_id", "part_id",
                     F.levenshtein("_t", "_tr").alias("dist"))
 
@@ -374,8 +363,7 @@ def _word_lev(a: list[str], b: list[str]) -> int:
 
 def wer(clips: DataFrame, clips_ref: DataFrame,
         id_col: str = "clip_id", part_col: str = "part_id",
-        ref_col: str = "transcript_ref",
-        join_hint: str = "SHUFFLE_HASH") -> DataFrame:
+        ref_col: str = "transcript_ref") -> DataFrame:
     """Word error rate — the ASR-standard metric: word-level edit
     distance between each clip's transcript and its reference, divided
     by the reference word count. Words are whitespace-separated tokens
@@ -391,14 +379,8 @@ def wer(clips: DataFrame, clips_ref: DataFrame,
     DuckDB oracle uses exactly that encoding, full-Unicode there).
     One Arrow batch pass, numpy-vectorized inner loop (_word_lev).
     """
-    t = clips.select(
-        F.col(id_col).alias("clip_id"),
-        F.col(part_col).alias("part_id"),
-        F.col("transcript").alias("_t"),
-    ).join(
-        clips_ref.select("clip_id",
-                         F.col(ref_col).alias("_tr")).hint(join_hint),
-        "clip_id", "inner")
+    t = _transcript_join(clips, clips_ref, id_col, part_col,
+                         F.col("transcript"), F.col(ref_col))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -427,8 +409,7 @@ def wer(clips: DataFrame, clips_ref: DataFrame,
 
 def transcript_violations(clips: DataFrame, clips_ref: DataFrame,
                           check, id_col: str = "clip_id",
-                          part_col: str = "part_id",
-                          join_hint: str = "SHUFFLE_HASH") -> DataFrame:
+                          part_col: str = "part_id") -> DataFrame:
     """Violation rows for an x-transcript check (TranscriptCheck):
     ASR-tolerance bounds vs the reference transcript — char edit
     distance > max_dist and/or word error rate > max_wer (both
@@ -458,15 +439,9 @@ def transcript_violations(clips: DataFrame, clips_ref: DataFrame,
         from canned_yaml_spark.textops import normalize_transcript
         t_col = normalize_transcript(t_col)
         tr_col = normalize_transcript(tr_col)
-    base = clips.select(
-        F.col(id_col).alias("clip_id"),
-        F.col(part_col).alias("part_id"),
-        t_col.alias("_t"),
-    ).join(
-        clips_ref.select("clip_id",
-                         tr_col.alias("_tr")).hint(join_hint),
-        "clip_id", "inner",
-    ).filter(F.col("_t").isNotNull() & F.col("_tr").isNotNull())
+    base = _transcript_join(clips, clips_ref, id_col, part_col,
+                            t_col, tr_col) \
+        .filter(F.col("_t").isNotNull() & F.col("_tr").isNotNull())
 
     parts = []
     if check.max_dist is not None:

@@ -14,8 +14,9 @@ a streaming DataFrame — this module only adds the streaming plumbing:
   aggregation with a watermark for late clips — the streaming analog
   of the per-partition verdict table.
 
-Both accept any streaming source (files parquet dir, Kafka, rate);
-tests use a file source with Trigger.AvailableNow for determinism.
+Both accept any streaming source; tests use a parquet file source with
+Trigger.AvailableNow and the rate source (rate_clips_stream) for
+determinism.
 """
 
 from __future__ import annotations
@@ -309,35 +310,3 @@ def rate_clips_stream(spark, rows_per_batch: int = 200,
            .select((F.col("value") + F.lit(start_key)).alias("o_orderkey")))
     src.createOrReplaceTempView(view)
     return spark.sql(derive.clips_select("spark", view))
-
-
-def kafka_available(spark) -> bool:
-    """Whether the spark-sql-kafka connector is on the classpath (it is
-    NOT in this sandbox image — no jar, no broker, no network; the
-    rate-source path above exercises the non-file plumbing instead)."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.kafka010.KafkaSourceProvider")
-        return True
-    except Exception:
-        return False
-
-
-def kafka_clips_stream(spark, brokers: str, topic: str,
-                       schema: str = ("clip_id string, bytes binary, "
-                                      "sr_hz int, dur_ms int, codec string, "
-                                      "transcript string, part_id int"),
-                       starting_offsets: str = "earliest") -> DataFrame:
-    """Kafka source wiring: JSON-encoded clip rows on `topic` → the
-    same clips schema every operator downstream consumes. Requires the
-    spark-sql-kafka-0-10 package (cluster deployments pass it via
-    spark-submit --packages); probe with kafka_available() first —
-    calling .load() without the jar raises at plan time."""
-    raw = (spark.readStream.format("kafka")
-           .option("kafka.bootstrap.servers", brokers)
-           .option("subscribe", topic)
-           .option("startingOffsets", starting_offsets)
-           .load())
-    return (raw.select(F.from_json(F.col("value").cast("string"),
-                                   schema).alias("r"))
-               .select("r.*"))

@@ -58,3 +58,30 @@ def suite(spark, clips):
 @pytest.fixture(scope="session")
 def golden():
     return fixtures.golden_rule_counts(N_SMALL)
+
+
+@pytest.fixture
+def bucketed(spark, tmp_path):
+    """Factory for real clip_id-bucketed tables under tmp_path:
+    ``bucketed(df, name, files_per_bucket=1)`` (fixtures.bucketed_table).
+    AQE and automatic broadcast are off so executed plans are final and
+    reflect only the engine's own choices. Tables are dropped and confs
+    restored after.
+    """
+    confs = {"spark.sql.adaptive.enabled": "false",
+             "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    names = []
+
+    def make(df, name, files_per_bucket=1):
+        names.append(name)
+        return fixtures.bucketed_table(spark, df, name, str(tmp_path / name),
+                                       files_per_bucket)
+
+    yield make
+    for name in names:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    for k, v in saved.items():
+        spark.conf.set(k, v)

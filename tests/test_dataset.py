@@ -85,11 +85,36 @@ def test_salted_group_count_matches_plain(spark, clips_clean):
     assert set(plain) == {c for c, _, _ in CODEC_DIM_ROWS}
 
 
-def test_unique_copartitioned_matches_broadcast(spark, clips, suite):
-    uc = suite.unique_checks[0]
-    a = dataset.unique_violations(clips, uc).collect()
-    b = dataset.unique_violations(clips, uc, broadcast_back=False).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b)) and len(a) > 0
+def test_unique_copartitioned_matches_broadcast(spark, clips, suite,
+                                               bucketed, tmp_path):
+    # the join back follows the layout the table reports: co-partitioned
+    # only for a check on the bucket key, broadcast for any other key
+    from canned_yaml_spark.checks import UniqueCheck
+    df = clips.select("clip_id", "part_id",
+                      (F.abs(F.hash("clip_id")) % 500).alias("c1"))
+    table = bucketed(df, "uniq_b")
+    df.write.parquet(str(tmp_path / "uniq_plain"))
+    plain = spark.read.parquet(str(tmp_path / "uniq_plain"))
+    assert dataset.hash_partition_columns(table) == ("clip_id",)
+    assert dataset.hash_partition_columns(plain) == ()
+    c1 = UniqueCheck(rule_id="x-unique.c1", column="c1")
+    for uc in (suite.unique_checks[0], c1):
+        got = dataset.unique_violations(table, uc)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        if uc.columns == ("clip_id",):
+            assert "Exchange" not in plan, plan
+        else:
+            # only the aggregate shuffles: every hash exchange sits on
+            # a partial count, none on the fact scan
+            lines = plan.splitlines()
+            below = [lines[i + 1] for i, ln in enumerate(lines)
+                     if "Exchange hashpartitioning" in ln]
+            assert below and all("partial_count" in ln for ln in below), \
+                plan
+            assert "BroadcastExchange" in plan, plan
+        want = dataset.unique_violations(plain, uc).collect()
+        assert sorted(map(tuple, got.collect())) == \
+            sorted(map(tuple, want)) and len(want) > 0
 
 
 def test_grouped_exact_quantiles(spark, clips):
@@ -285,9 +310,6 @@ def test_composite_unique_violations(spark):
     assert sorted(r.clip_id for r in v) == ["0", "1"]
     assert all(r.rule_id == "x-unique.(c1,c2)" for r in v)
     assert all("duplicate (c1,c2) (x2)" == r.message for r in v)
-    # both join plans agree
-    v2 = dataset.unique_violations(df, uc, broadcast_back=False).collect()
-    assert sorted(r.clip_id for r in v2) == ["0", "1"]
 
 
 def test_x_unique_together_spec(spark):

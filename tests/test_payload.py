@@ -157,48 +157,46 @@ def test_spec_can_forbid_digest_fast_path(spark, clips, suite):
     assert suite.payload_checks[0].allow_digest is True
 
 
-def test_job_join_hint_is_layout_aware(spark, clips, clips_ref, suite,
-                                       codec_dim):
-    # bucketed tables whose per-bucket sort Spark can't trust (multi
-    # file per bucket) must NOT get the MERGE hint: it re-inserts a
-    # Sort over payload-sized rows in every task. The fallback hash
-    # join is still exchange-free over bucketed layouts.
+def test_ref_joins_exchange_free_on_bucketed_tables(spark, suite, codec_dim,
+                                                   bucketed, tmp_path):
+    # every clips <-> ref join is a shuffle-hash join: it needs only the
+    # clip_id distribution, so over bucketed tables it plans no
+    # exchange and no sort whether a bucket is one sorted file or
+    # several; plain parquet shuffles each side once
     from canned_yaml_spark import fixtures
     from canned_yaml_spark import job as jobmod
 
-    # fresh (uncached) inputs: an earlier test caches a
-    # payload_violations subtree over the shared fixtures, and the
-    # cache manager would substitute InMemoryRelation for the
-    # identical logical subtree here — erasing the very joins whose
-    # strategy this test inspects
     clips = fixtures.clips_df(spark, 300)
-    clips_ref = fixtures.clips_ref_df(spark, 300)
-    kw = dict(dims={"codec_dim": codec_dim}, clips_ref=clips_ref,
-              bucketed_by_id=True)
-    # pin AQE/auto-broadcast off so the compared physical plans are
-    # final and strategy choice reflects only the hints under test
-    saved = {k: spark.conf.get(k) for k in
-             ("spark.sql.adaptive.enabled",
-              "spark.sql.autoBroadcastJoinThreshold")}
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan_merge = jobmod.all_violations(clips, suite, **kw,
-                                           bucket_sort_trusted=True) \
-            ._jdf.queryExecution().executedPlan().toString()
-        plan_hash = jobmod.all_violations(clips, suite, **kw,
-                                          bucket_sort_trusted=False) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert plan_merge.count("SortMergeJoin") > \
-            plan_hash.count("SortMergeJoin")
-        # default follows bucketed_by_id (single-file layout posture)
-        plan_default = jobmod.all_violations(clips, suite, **kw) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert plan_default.count("SortMergeJoin") == \
-            plan_merge.count("SortMergeJoin")
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    ref = fixtures.clips_ref_df(spark, 300)
+    pc = suite.payload_checks[0]
+    layouts = {
+        "single": (bucketed(clips, "pay_c1"), bucketed(ref, "pay_r1")),
+        "multi": (bucketed(clips, "pay_c2", files_per_bucket=2),
+                  bucketed(ref, "pay_r2", files_per_bucket=2)),
+    }
+    clips.write.parquet(str(tmp_path / "pay_c"))
+    ref.write.parquet(str(tmp_path / "pay_r"))
+    layouts["plain"] = (spark.read.parquet(str(tmp_path / "pay_c")),
+                        spark.read.parquet(str(tmp_path / "pay_r")))
+
+    def plan_of(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    rows = {}
+    for name, (c, r) in layouts.items():
+        v = payload.payload_violations(c, r, pc)
+        p = plan_of(v)
+        assert "ShuffledHashJoin" in p and "SortMergeJoin" not in p, p
+        if name == "plain":
+            assert "Exchange hashpartitioning(clip_id" in p, p
+        else:
+            assert "Exchange" not in p and "Sort [" not in p, p
+        rows[name] = sorted(map(tuple, v.collect()))
+        jp = plan_of(jobmod.all_violations(
+            c, suite, dims={"codec_dim": codec_dim}, clips_ref=r))
+        assert "SortMergeJoin" not in jp, jp
+    assert rows["single"] == rows["multi"] == rows["plain"]
+    assert rows["plain"]
 
 
 def test_audio_stats_exact_values(spark):

@@ -1,12 +1,15 @@
 """Dangling-reference check (no Spark): every test a source comment
-cites, and every tool a document cites, exists.
+cites, every tool a document cites, and every package function a
+document cites, exists.
 
 A comment that names `tests/test_x.py::test_y` is a claim that the
 behaviour it describes is pinned; a document that says "re-run
-`python tools/z.py`" is a claim that the command works. Both rot
-silently when a test or tool is renamed or deleted. Historical round
-files (ROADMAP.md, VERDICT.md, OPTIMIZATION_r06.md, CHANGES.md) record
-what was true at the time and are out of scope.
+`python tools/z.py`" is a claim that the command works; a document
+that names `dataset.unique_violations` is a claim that the API exists.
+All three rot silently when a test, tool or function is renamed or
+deleted. Historical round files (ROADMAP.md, VERDICT.md,
+OPTIMIZATION_r06.md, CHANGES.md) record what was true at the time and
+are out of scope.
 """
 
 from __future__ import annotations
@@ -19,6 +22,9 @@ ROOT = Path(__file__).resolve().parent.parent
 
 TEST_REF = re.compile(r"tests/(test_\w+\.py)(?:::(\w+))?")
 TOOL_REF = re.compile(r"tools/(\w+\.py)")
+# `<module>.<name>`, optionally package-qualified; not part of a longer
+# dotted chain or a path (`pyspark.sql.functions`, `tools/x.py`)
+API_REF = re.compile(r"(?<![\w./-])(?:canned_yaml_spark\.)?(\w+)\.(\w+)")
 
 
 def _sources() -> list[Path]:
@@ -39,6 +45,17 @@ def _defined_names(path: Path) -> set[str]:
     tree = ast.parse(path.read_text())
     return {n.name for n in tree.body
             if isinstance(n, (ast.FunctionDef, ast.ClassDef))}
+
+
+def _top_level_names(path: Path) -> set[str]:
+    names = _defined_names(path)
+    for node in ast.parse(path.read_text()).body:
+        targets = (node.targets if isinstance(node, ast.Assign)
+                   else [node.target] if isinstance(node, ast.AnnAssign)
+                   else [])
+        names |= {n.id for t in targets for n in ast.walk(t)
+                  if isinstance(n, ast.Name)}
+    return names
 
 
 def test_cited_tests_exist():
@@ -65,3 +82,20 @@ def test_cited_tools_exist():
                for m in TOOL_REF.finditer(doc.read_text())
                if not (ROOT / "tools" / m.group(1)).exists()]
     assert not missing, "dangling tool references:\n" + "\n".join(missing)
+
+
+def test_cited_package_names_exist():
+    modules = {p.stem: p for p in (ROOT / "canned_yaml_spark").glob("*.py")
+               if p.stem != "__init__"}
+    names: dict[str, set[str]] = {}
+    missing = []
+    for doc in ("README.md", "COVERAGE.md", "FIXTURES.md"):
+        for m in API_REF.finditer((ROOT / doc).read_text()):
+            module, name = m.groups()
+            if module not in modules or name == "py":   # file, not API
+                continue
+            if module not in names:
+                names[module] = _top_level_names(modules[module])
+            if name not in names[module]:
+                missing.append(f"{doc}: {m.group(0)}")
+    assert not missing, "dangling API references:\n" + "\n".join(missing)

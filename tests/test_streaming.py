@@ -147,21 +147,6 @@ def test_rate_source_stream_matches_batch(spark, suite, tmp_path):
     assert got.select(*key).exceptAll(want.select(*key)).count() == 0
 
 
-def test_kafka_wiring_probe(spark):
-    # no Kafka jar/broker in this image: the probe must say so, and the
-    # reader construction must be syntactically sound (plan-time error
-    # only on .load()). On a cluster with the package this test
-    # exercises the real source.
-    if not streaming.kafka_available(spark):
-        import pytest
-        with pytest.raises(Exception):
-            streaming.kafka_clips_stream(spark, "broker:9092", "clips") \
-                     .writeStream.format("noop").start()
-        pytest.skip("spark-sql-kafka not on classpath (sandbox image)")
-    df = streaming.kafka_clips_stream(spark, "broker:9092", "clips")
-    assert df.schema["clip_id"].dataType.simpleString() == "string"
-
-
 def test_stream_restart_resumes_exactly_once(spark, suite, tmp_path):
     # kill/restart: run the stream over file 1, stop, add file 2,
     # restart from the SAME checkpoint → only file 2 is processed

@@ -64,35 +64,13 @@ from canned_yaml_spark import job as jobmod
 rows = int(os.environ["SG_ROWS"])
 wh = os.environ["SG_WAREHOUSE"]
 
-# Spark only trusts per-bucket sort order when each bucket is one
-# file — and even then only behind the (off-by-default since 3.0,
-# SPARK-28595) legacy outputOrdering flag. Without both, a MERGE hint
-# re-SORTs payload-sized rows inside every task. Detect the layout:
-# single-file buckets → enable the flag and stream true sort-free
-# merges; chunk-appended layout → exchange-free SHUFFLE_HASH instead.
-import glob as _glob
-_nf = max(len(_glob.glob(os.path.join(wh, t, "part-*")))
-          for t in ("clips_b", "clips_ref_b"))
-sort_trusted = _nf <= {buckets}
-# SG_FORCE_HASH / SG_FORCE_MERGE: A/B knobs — pin the plan family
-# regardless of the detected layout (the legacy ordering flag is
-# harmless on multi-file layouts: the scan reports no ordering there
-# and the MERGE hint's sorts come back, which is exactly the variant
-# under test)
-if os.environ.get("SG_FORCE_HASH") == "1":
-    sort_trusted = False
-elif os.environ.get("SG_FORCE_MERGE") == "1":
-    sort_trusted = True
-
 # shuffle partitions match the bucket count at BOTH levels (identical
 # config, the only variable is core count): shuffle stages then run
 # {buckets}/cores waves, so stragglers amortize instead of extending a
 # single-wave stage 1:1
 spark = get_spark(f"scaling_{{cores}}", cores=cores, shuffle_partitions={buckets},
                   extra_conf={{"spark.local.dir": "/dev/shm/spark-tmp",
-                               "spark.sql.warehouse.dir": wh,
-                               "spark.sql.legacy.bucketedTableScan.outputOrdering":
-                                   str(sort_trusted).lower()}})
+                               "spark.sql.warehouse.dir": wh}})
 
 # re-register the bucketed tables (in-memory catalog is per-session;
 # the bucket layout lives in the files + this DDL)
@@ -114,14 +92,12 @@ ks_ref = fixtures.reference_dur_sample()
 
 viol = jobmod.all_violations(
     clips, suite, dims={{"codec_dim": dim}}, clips_ref=ref,
-    expected_hist=hist, ks_reference=ks_ref, bucketed_by_id=True,
-    bucket_sort_trusted=sort_trusted)
+    expected_hist=hist, ks_reference=ks_ref)
 plan = viol._jdf.queryExecution().executedPlan().toString()
 payload_join_exchange_free = "ShuffledHashJoin" not in plan and \
     "SortMergeJoin" not in plan or plan.count("Exchange") <= plan.count("HashAggregate")
-# Spark only trusts per-bucket sort order when each bucket is a single
-# file; a multi-chunk build silently re-inserts a Sort under the merge
-# join. Surface it so the harness (and BENCH docs) see the real plan.
+# the hash joins need no Sort on any bucket layout; count Sort nodes
+# so the harness (and BENCH docs) see the real plan
 n_sorts = plan.count("Sort ") + plan.count("+- Sort")
 
 def full_job():
@@ -141,7 +117,6 @@ print(json.dumps({{"cores": cores, "secs": round(secs, 3),
                    "clips_per_sec": round(rows / secs),
                    "all_runs": [round(t, 2) for t in ts],
                    "plan_sort_nodes": n_sorts,
-                   "sort_trusted_layout": sort_trusted,
                    "exchange_free_join": payload_join_exchange_free}}))
 spark.stop()
 """
@@ -205,9 +180,7 @@ def build_bucketed(rows: int, bench_dir: str, wh: str,
         shutil.rmtree(loc, ignore_errors=True)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         # multi-chunk appends leave one sorted file PER CHUNK per
-        # bucket — Spark only trusts bucket sort order for single-file
-        # buckets, so the merge join would silently re-sort (ADVICE
-        # r3). Stage the chunks, then COMPACT: a bucketed read →
+        # bucket. Stage the chunks, then COMPACT: a bucketed read →
         # bucketed write on the same key/count needs no exchange and
         # leaves exactly one sorted file per bucket.
         # compaction needs ONE full-table exchange on the shuffle dir;
@@ -255,7 +228,7 @@ def build_bucketed(rows: int, bench_dir: str, wh: str,
         with open(os.path.join(wh, f"{name}.schema"), "w") as fh:
             fh.write(ddl)
         # single sorted file per bucket (when compacted / single
-        # chunk) — the property the MERGE-join no-sort claim rests on
+        # chunk)
         import glob as _g
         expect = 1 if (compact or n_chunks == 1) else n_chunks
         per_bucket: dict[str, int] = {}

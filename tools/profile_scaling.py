@@ -55,8 +55,7 @@ def fam_row():  return row_violations(clips, suite, "clip_id", "part_id")
 def fam_uniq():
     out = None
     for uc in suite.unique_checks:
-        v = dataset.unique_violations(clips, uc, "clip_id", "part_id",
-                                      broadcast_back=False)
+        v = dataset.unique_violations(clips, uc, "clip_id", "part_id")
         out = v if out is None else out.unionByName(v)
     return out
 def fam_ref():
@@ -80,8 +79,7 @@ def fam_ks():
 def fam_payload():
     out = None
     for pc in suite.payload_checks:
-        v = payload.payload_violations(clips, ref, pc, "clip_id", "part_id",
-                                       join_hint="MERGE")
+        v = payload.payload_violations(clips, ref, pc, "clip_id", "part_id")
         out = v if out is None else out.unionByName(v)
     return out
 def fam_pay_scan():
@@ -99,7 +97,7 @@ def fam_pay_scan():
 def fam_full():
     return jobmod.all_violations(clips, suite, dims={{"codec_dim": dim}},
                                  clips_ref=ref, expected_hist=hist,
-                                 ks_reference=ks_ref, bucketed_by_id=True)
+                                 ks_reference=ks_ref)
 
 def best(fn, n=3):
     ts = []
