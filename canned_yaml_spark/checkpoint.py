@@ -11,6 +11,11 @@ Design (SURVEY.md §2.2 #25):
   records. A partition's manifest row is written only AFTER its
   violations/verdict/metrics rows are durably written — the manifest
   append is the commit point.
+- One commit path (`commit`): the violations plan executes once, into
+  violations/; the verdicts are derived from those written bytes and
+  written to verdicts/; the manifest rows are this run's written
+  verdict rows. Manifest and verdicts agree by construction, and no
+  check family runs a second time.
 - On restart, pending work = all partitions LEFT ANTI JOIN manifest.
   Completed partitions are never rescanned (partition pruning: the
   pending filter is a broadcast semi-join on part_id, which AQE turns
@@ -29,6 +34,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from canned_yaml_spark.runner import violation_verdicts
 
 MANIFEST_SCHEMA = ("part_id int, n_rows long, n_violations long, "
                    "max_severity int, pass boolean, run_id string, "
@@ -161,6 +168,39 @@ def append_stream_manifest(verdicts: DataFrame, manifest_dir: str,
              F.lit(batch_id).alias("batch_id"),
              F.lit(stream_id).alias("stream_id"))
      .write.mode("append").parquet(manifest_dir))
+
+
+def commit(spark: SparkSession, scope: DataFrame, viol: DataFrame,
+           out_dir: str, run_id: str, *, resuming: bool,
+           part_col: str = "part_id") -> tuple[DataFrame, DataFrame]:
+    """Commit one run's violations plan under out_dir; returns the
+    written (violations, verdicts) tables read back from disk.
+
+    1. violations/: `viol` executes once, repartitioned by part_id so
+       each partition directory gets one file;
+    2. the verdicts are derived from the written violations, read back
+       with the plan's schema (a clean run writes no file) and, on
+       resume, limited to the partitions the manifest does not hold;
+    3. verdicts/: those verdicts, tagged with run_id;
+    4. manifest/: this run's written verdict rows, in one file — the
+       commit point.
+
+    write_partitioned and append_manifest are looked up as module
+    attributes at call time, so a caller can wrap them.
+    """
+    manifest_dir = f"{out_dir}/manifest"
+    write_partitioned(viol.repartition("part_id"), f"{out_dir}/violations")
+    written = spark.read.schema(viol.schema).parquet(f"{out_dir}/violations")
+    mine = (pending_only(written, spark, manifest_dir) if resuming
+            else written)
+    verd = (violation_verdicts(scope, mine, part_col)
+            .withColumn("run_id", F.lit(run_id)))
+    write_partitioned(verd, f"{out_dir}/verdicts")
+    verd_written = spark.read.schema(verd.schema).parquet(f"{out_dir}/verdicts")
+    append_manifest(
+        verd_written.filter(F.col("run_id") == run_id).coalesce(1),
+        manifest_dir, run_id)
+    return written, verd_written
 
 
 def write_partitioned(df: DataFrame, path: str) -> None:

@@ -3,7 +3,8 @@ driver (/root/reference/canner/src/validate.cpp:8-26) at table scale.
 
     load spec → compile → scan table once for row checks →
     dataset checks (uniqueness / referential / drift / payload) →
-    write violations + verdicts + metrics (+ manifest) →
+    write metrics → commit (checkpoint.commit: violations written
+    once, verdicts + manifest derived from the written violations) →
     exit code = any ERROR   (validate.cpp prints notes + verdict;
                              we persist tables and return the verdict)
 
@@ -31,6 +32,9 @@ from canned_yaml_spark.runner import row_violations, violation_verdicts
 
 @dataclass
 class ValidationResult:
+    """With an out_dir, `violations` and `verdicts` are the committed
+    tables read back from disk (verdicts then carry run_id); without
+    one, they are the lazy plans."""
     violations: DataFrame          # (clip_id, part_id, rule_id, severity, message)
     verdicts: DataFrame            # (part_id, n_rows, n_violations, max_severity, pass)
     metrics: DataFrame | None      # per-partition column stats
@@ -162,9 +166,13 @@ def run(spark: SparkSession, spec_source: str | dict, clips: DataFrame, *,
         part_col: str = "part_id") -> ValidationResult:
     """Compile the spec and validate `clips` end to end.
 
-    With out_dir set, writes violations/, verdicts/, metrics/ and
-    manifest/ under it (partition-atomic, resumable). Without it,
-    returns lazy DataFrames only.
+    With out_dir set, writes metrics/ and then commits through
+    checkpoint.commit: the violations union executes once, into
+    violations/, and verdicts/ and manifest/ are derived from the
+    written violations (partition-atomic, resumable). The result's
+    violations and verdicts are then the written tables, every run's
+    partitions included. Without out_dir, returns lazy DataFrames
+    only.
     """
     suite = compile_spec(spec_source, clips.schema)
     run_id = uuid.uuid4().hex[:12]
@@ -195,21 +203,14 @@ def run(spark: SparkSession, spec_source: str | dict, clips: DataFrame, *,
             uv = checkpoint.pending_only(uv, spark,
                                          f"{out_dir}/manifest", "part_id")
             viol = viol.unionByName(uv)
-    # Each family's plan executes once: verdicts aggregate the unified
-    # violations table instead of recomputing the families.
-    verd = violation_verdicts(scope, viol, part_col)
-
     metrics = dataset.column_stats(scope, list(stats_columns), part_col)
 
     if out_dir:
-        checkpoint.write_partitioned(viol, f"{out_dir}/violations")
         checkpoint.write_partitioned(metrics, f"{out_dir}/metrics")
-        checkpoint.write_partitioned(
-            verd.withColumn("run_id", F.lit(run_id)), f"{out_dir}/verdicts")
-        # manifest append is the commit point (checkpoint.py)
-        checkpoint.append_manifest(verd, f"{out_dir}/manifest", run_id)
-        verd = spark.read.parquet(f"{out_dir}/verdicts")
-        viol = spark.read.parquet(f"{out_dir}/violations")
+        viol, verd = checkpoint.commit(spark, scope, viol, out_dir, run_id,
+                                       resuming=resuming, part_col=part_col)
+    else:
+        verd = violation_verdicts(scope, viol, part_col)
 
     # ok == "no partition failed": the verdict aggregate already folds
     # max severity per partition, so this reads the (written) verdicts

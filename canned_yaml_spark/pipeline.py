@@ -20,6 +20,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from canned_yaml_spark import checkpoint as ckpt
 from canned_yaml_spark import job as jobmod
 from canned_yaml_spark.checks import Severity
 from canned_yaml_spark.compile import compile_spec
@@ -65,10 +66,13 @@ def prep_run(spark: SparkSession, clips: DataFrame,
     4. CHUNK: segment.window_slices (pure-JVM for stateless codecs);
        framed codecs route through windows_decoded; the union is the
        training-window table.
-    5. WRITE (optional): windows parquet under out_dir/windows plus
-       the validation verdict manifest (checkpoint.append_manifest)
-       under out_dir/manifest — the same lineage surface batch
-       validation runs use.
+    5. WRITE (optional): windows parquet under out_dir/windows.
+
+    With out_dir set, step 1 commits through checkpoint.commit before
+    anything else, as job.run does: violations/, verdicts/ and the
+    manifest land beside windows/, every family executes once, and the
+    quarantine reads the written violations. Without out_dir nothing
+    is written and the verdicts stay a lazy DataFrame.
     """
     from canned_yaml_spark import audiofp, augment, dedup as dd, segment
     from canned_yaml_spark.audio import _MAGIC
@@ -82,13 +86,17 @@ def prep_run(spark: SparkSession, clips: DataFrame,
     viols = jobmod.all_violations(clips, suite, dims=dims,
                                   clips_ref=clips_ref,
                                   id_col=id_col, part_col=part_col)
+    if out_dir is not None:
+        viols, verdicts = ckpt.commit(spark, clips, viols, out_dir, run_id,
+                                      resuming=False, part_col=part_col)
+    else:
+        # verdicts over EVERY family's violations (x-unique, x-ref, …)
+        # — the same derivation job.run commits, not the row checks
+        verdicts = violation_verdicts(clips, viols, part_col)
     bad_ids = (viols.filter((F.col("severity") >= int(Severity.ERROR))
                             & F.col("clip_id").isNotNull())
                     .select(F.col("clip_id").alias(id_col)).distinct())
     ok = clips.join(bad_ids, id_col, "left_anti")
-    # verdicts over EVERY family's violations (x-unique, x-ref, …) —
-    # the same derivation job.run commits, not the row checks alone
-    verdicts = violation_verdicts(clips, viols, part_col)
 
     # 2 — acoustic dedup, keep-one
     if dedup:
@@ -122,11 +130,9 @@ def prep_run(spark: SparkSession, clips: DataFrame,
             segment.windows_decoded(framed, win, hop, id_col=id_col))
     n_windows = windows.count()
 
-    # 5 — write + lineage
+    # 5 — write the windows beside the committed validation outputs
     if out_dir is not None:
-        from canned_yaml_spark import checkpoint as ckpt
         windows.write.mode("overwrite").parquet(f"{out_dir}/windows")
-        ckpt.append_manifest(verdicts, f"{out_dir}/manifest", run_id)
 
     return PrepResult(
         n_input=n_input,

@@ -10,7 +10,9 @@ a plain NULL post-filter — zero shuffles for row-level checks.
 Per-partition verdicts are one hash aggregation (partial map-side
 combine + final) on the partition column: row_verdicts over the row
 checks alone, violation_verdicts over a violations table of any
-family mix.
+family mix — the one derivation every commit path uses, fed the
+violations as written to disk (checkpoint.commit, the streaming
+lineage sink), so no check family runs again to produce verdicts.
 
 Deliberate semantic difference from the reference (SURVEY.md §4):
 the reference fail-fasts inside a subtree (each check `return false`,
@@ -132,7 +134,8 @@ def violation_verdicts(scope: DataFrame, viol: DataFrame,
     family mix (row, uniqueness, referential, drift, payload, …):
     (part_id, n_rows, n_violations, max_severity, pass). Row counts
     come from `scope`, violation counts and max severity from `viol`
-    (already ≪ corpus), so no family is recomputed here. pass == no
+    (already ≪ corpus). Commit paths pass the violations read back
+    from disk, so no family is recomputed here. pass == no
     ERROR-severity violation in the partition — the reference's rule
     (canner.cc:1101) — so an ERROR from a table-level family (x-unique,
     x-ref, drift, payload) flips it exactly as a row violation does."""

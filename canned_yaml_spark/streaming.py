@@ -232,7 +232,9 @@ def validate_stream_with_lineage(stream_df: DataFrame, suite: CheckSuite,
        never duplicates;
     3. only then is the (batch_id, part_id) verdict row appended to
        the manifest — the manifest append is the commit point,
-       exactly as in the batch path.
+       exactly as in the batch path. The verdicts are derived from
+       the batch's WRITTEN violations (runner.violation_verdicts, the
+       batch path's derivation), so the row suite runs once per batch.
 
     The manifest carries the same columns as batch runs' plus
     batch_id and stream_id (STREAM_MANIFEST_SCHEMA) — one queryable
@@ -254,7 +256,7 @@ def validate_stream_with_lineage(stream_df: DataFrame, suite: CheckSuite,
     manifest scan per micro-batch (ADVICE r4).
     """
     from canned_yaml_spark import checkpoint
-    from canned_yaml_spark.runner import row_verdicts
+    from canned_yaml_spark.runner import violation_verdicts
 
     committed: set[int] | None = None          # lazily read, then cached
     stream_id: str | None = None
@@ -278,7 +280,9 @@ def validate_stream_with_lineage(stream_df: DataFrame, suite: CheckSuite,
              .partitionBy("batch_id")
              .mode("overwrite")
              .parquet(out_dir))
-        verdicts = row_verdicts(batch_df, suite, part_col)
+        written = (spark.read.schema(viol.schema).parquet(out_dir)
+                   .filter(F.col("batch_id") == batch_id))
+        verdicts = violation_verdicts(batch_df, written, part_col)
         checkpoint.append_stream_manifest(verdicts, manifest_dir,
                                           run_id, batch_id, stream_id)
         committed.add(batch_id)

@@ -132,3 +132,86 @@ def test_crash_resume_reproduces_from_scratch_verdicts(spark, tmp_path):
     uv = viol.filter(F.col("rule_id") == "x-unique.clip_id")
     parts = {r.part_id for r in uv.collect()}
     assert any(p % 2 == 0 for p in parts) and any(p % 2 == 1 for p in parts)
+
+
+def test_clean_corpus_fresh_resume_and_cli(spark, tmp_path):
+    """A corpus with zero violations writes no violations file; the
+    commit reads the violations back with the plan's schema, so a
+    fresh run, its resume and cli.main all succeed with ok=True."""
+    from canned_yaml_spark import cli
+
+    spec = tmp_path / "clean.spec.yaml"
+    spec.write_text("type: object\n"
+                    "properties:\n"
+                    "  sr_hz: {type: integer, minimum: 0}\n")
+    clips = fixtures.clips_df(spark, 200, inject=False, max_samples=16)
+    out = str(tmp_path / "clean")
+
+    r1 = job.run(spark, str(spec), clips, out_dir=out)
+    assert r1.ok
+    assert r1.verdicts.count() == 64
+    assert r1.violations.count() == 0
+    r2 = job.run(spark, str(spec), clips, out_dir=out)        # resume
+    assert r2.ok
+    assert r2.verdicts.count() == 64
+    assert spark.read.parquet(f"{out}/manifest").count() == 64
+
+    table = str(tmp_path / "clean.parquet")
+    clips.write.parquet(table)
+    assert cli.main(["--spec", str(spec), "--table", table,
+                     "--out", str(tmp_path / "cli_out")]) == 0
+
+
+def test_run_executes_each_family_once(spark, tmp_path, monkeypatch):
+    """job.run(out_dir=...) executes the violations union once: an
+    identity Python UDF on `severity` (the column the verdict
+    aggregate reads) ticks as often during the run as in one noop
+    execution of the same plan. The manifest counts equal the written
+    violations, and each part_id directory holds one file."""
+    import glob
+    import os
+
+    from pyspark.sql.types import IntegerType
+
+    ticks = spark.sparkContext.accumulator(0)
+
+    def ident(s):
+        ticks.add(1)
+        return s
+
+    tick = F.udf(ident, IntegerType())
+    plans = []
+    real = job.all_violations
+
+    def counted(*args, **kwargs):
+        out = real(*args, **kwargs)
+        out = out.withColumn("severity", tick(F.col("severity")))
+        plans.append(out)
+        return out
+
+    monkeypatch.setattr(job, "all_violations", counted)
+    clips = fixtures.clips_df(spark, 400, max_samples=16)
+    out = str(tmp_path / "once")
+    job.run(spark, "specs/clips.spec.yaml", clips,
+            dims={"codec_dim": fixtures.codec_dim_df(spark)},
+            clips_ref=fixtures.clips_ref_df(spark, 400, max_samples=16),
+            expected_hist=fixtures.reference_hist_df(spark),
+            ks_reference=fixtures.reference_dur_sample(),
+            out_dir=out)
+    during_run = ticks.value
+    assert len(plans) == 1
+    plans[0].write.format("noop").mode("overwrite").save()
+    assert during_run > 0
+    assert during_run == ticks.value - during_run
+
+    viol = spark.read.parquet(f"{out}/violations")
+    counts = {r.part_id: r["count"]
+              for r in viol.groupBy("part_id").count().collect()}
+    manifest = spark.read.parquet(f"{out}/manifest").collect()
+    assert len(manifest) == 64
+    for r in manifest:
+        assert r.n_violations == counts.get(r.part_id, 0)
+    dirs = glob.glob(os.path.join(out, "violations", "part_id=*"))
+    assert dirs
+    for d in dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d

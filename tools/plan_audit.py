@@ -7,7 +7,10 @@ per operator; non-zero exit if any assertion fails)
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -16,11 +19,16 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from canned_yaml_spark import (  # noqa: E402
-    compile_spec, dataset, dedup, derive, drift, fixtures, payload,
-    similarity,
+    checkpoint, compile_spec, dataset, dedup, derive, drift, fixtures,
+    payload, similarity,
 )
+from canned_yaml_spark import job as jobmod  # noqa: E402
 from canned_yaml_spark.runner import row_verdicts, row_violations  # noqa: E402
 from canned_yaml_spark.session import get_spark  # noqa: E402
+
+
+_REPART_PART_ID = re.compile(
+    r"Exchange hashpartitioning\(part_id#\d+, \d+\), REPARTITION_BY_COL")
 
 
 def plan_of(df) -> str:
@@ -45,7 +53,7 @@ def main() -> int:
     rows = []
 
     def audit(name, df, checks, note):
-        p = plan_of(df)
+        p = df if isinstance(df, str) else plan_of(df)
         nex = p.count("Exchange") - p.count("ReusedExchange")
         for label, pred in checks:
             assert pred(p), f"{name}: FAILED {label}\n{p[:4000]}"
@@ -103,6 +111,48 @@ def main() -> int:
           row_verdicts(clips, suite),
           [("partial+final agg", lambda p: p.count("HashAggregate") >= 2)],
           "partial+final HashAggregate on part_id")
+    # the commit's two plans, captured from a real checkpoint.commit
+    # over the 2k payload corpus read back from parquet
+    tmp = tempfile.mkdtemp(prefix="plan_audit_commit_")
+    try:
+        bench.write.parquet(f"{tmp}/clips")
+        scope = spark.read.parquet(f"{tmp}/clips")
+        viol = jobmod.all_violations(
+            scope, compile_spec("specs/clips.spec.yaml", scope.schema),
+            dims={"codec_dim": fixtures.codec_dim_df(spark)},
+            clips_ref=bench_ref, expected_hist=hist, ks_reference=ks_ref)
+        written = {}
+        real_write = checkpoint.write_partitioned
+
+        def capture(df, path):
+            written[os.path.basename(path)] = plan_of(df)
+            real_write(df, path)
+
+        checkpoint.write_partitioned = capture
+        try:
+            checkpoint.commit(spark, scope, viol, tmp, "plan_audit",
+                              resuming=False)
+        finally:
+            checkpoint.write_partitioned = real_write
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+    audit("commit: violations write", written["violations"],
+          [("one repartition exchange, on part_id",
+            lambda p: p.count("REPARTITION_BY_COL") == 1
+            and _REPART_PART_ID.search(p) is not None),
+           ("above the union", lambda p: _REPART_PART_ID.search(p).start()
+            < p.index("Union"))],
+          "the families' union executes once, hash-repartitioned by "
+          "part_id: one file per partition directory")
+    audit("commit: verdict derivation", written["verdicts"],
+          [("scans the written violations",
+            lambda p: "/violations]" in p),
+           ("no family operator", lambda p: "Union" not in p
+            and "Generate" not in p and "Python" not in p
+            and "MapInPandas" not in p)],
+          "verdicts aggregate the violations read back from disk plus a "
+          "part_id count of the scope — no check family re-executes")
     audit("referential (x-ref, inline-IN)",
           dataset.referential_violations(clips, dim, suite.ref_checks[0]),
           [("no join node at all", lambda p: "Join" not in p),
@@ -216,7 +266,6 @@ def main() -> int:
     # the certified entry reads a PARQUET copy so the assertion below
     # checks real scan-level column pruning (an in-memory MapInPandas
     # fixture always lists every output column, prunable or not)
-    import tempfile
     cert_dir = tempfile.mkdtemp(prefix="plan_audit_cert_")
     fixtures.clips_ref_df(spark, 2000, max_samples=64, certified=True) \
         .write.mode("overwrite").parquet(f"{cert_dir}/ref.parquet")
