@@ -23,7 +23,10 @@ Design (SURVEY.md §2.2 #25):
 - Violations/verdicts are written partitionBy(part_id) with dynamic
   partition overwrite, so a crash between data write and manifest
   append re-runs that partition idempotently (the rewrite replaces,
-  not duplicates).
+  not duplicates). Dynamic overwrite leaves a partition that gets no
+  rows untouched, so `commit` first clears the scope's old violation
+  directories: a partition clean now cannot keep an earlier run's
+  violations.
 - Everything rewritten on retry is byte-identical because the whole
   data path is deterministic (pure-function fixtures, no rand()).
 """
@@ -42,17 +45,57 @@ MANIFEST_SCHEMA = ("part_id int, n_rows long, n_violations long, "
                    "completed_at double")
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    """Path probe through Hadoop FS (works for local, HDFS, s3a...)."""
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for path (local, HDFS, s3a...)."""
     jvm = spark._jvm                                   # noqa: SLF001
     conf = spark._jsc.hadoopConfiguration()            # noqa: SLF001
     p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
+    return p.getFileSystem(conf), p
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Path probe through Hadoop FS."""
+    fs, p = _fs(spark, path)
+    return fs.exists(p)
+
+
+def delete_dir(spark: SparkSession, path: str) -> None:
+    """Recursively delete path through Hadoop FS; absent is a no-op."""
+    fs, p = _fs(spark, path)
+    if fs.exists(p):
+        fs.delete(p, True)
+
+
+def clear_scope_parts(spark: SparkSession, scope: DataFrame, path: str,
+                      part_col: str = "part_id") -> None:
+    """Delete the part_id directories under path that hold partitions
+    of scope, before scope's rows are rewritten there.
+
+    Dynamic partition overwrite replaces only the partitions that get
+    rows: a partition with violations in an earlier write and none now
+    would keep its old file, and the rows read back would report a
+    failure that no longer exists. When path has no partition
+    directory yet (a fresh out_dir) this is one listing and no Spark
+    job; otherwise it collects scope's distinct part ids.
+    """
+    fs, p = _fs(spark, path)
+    if not fs.exists(p):
+        return
+    dirs = {st.getPath().getName(): st.getPath() for st in fs.listStatus(p)
+            if st.isDirectory()
+            and st.getPath().getName().startswith("part_id=")}
+    if not dirs:
+        return
+    for (part,) in scope.select(part_col).distinct().collect():
+        name = ("part_id=__HIVE_DEFAULT_PARTITION__" if part is None
+                else f"part_id={part}")
+        if name in dirs:
+            fs.delete(dirs[name], True)
 
 
 def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
     """Completed-partition manifest; empty DataFrame when absent."""
-    if not _exists(spark, manifest_dir):
+    if not path_exists(spark, manifest_dir):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
     return spark.read.parquet(manifest_dir)
 
@@ -140,7 +183,7 @@ def committed_batches(spark: SparkSession, manifest_dir: str,
     """Batch ids already committed to the streaming manifest (for the
     given stream incarnation, when stream_id is passed). Bounded driver
     collect: one row per micro-batch at most."""
-    if not _exists(spark, manifest_dir):
+    if not path_exists(spark, manifest_dir):
         return set()
     m = spark.read.parquet(manifest_dir)
     if "batch_id" not in m.columns:
@@ -176,8 +219,10 @@ def commit(spark: SparkSession, scope: DataFrame, viol: DataFrame,
     """Commit one run's violations plan under out_dir; returns the
     written (violations, verdicts) tables read back from disk.
 
-    1. violations/: `viol` executes once, repartitioned by part_id so
-       each partition directory gets one file;
+    1. violations/: the scope's old partition directories are cleared
+       (clear_scope_parts), then `viol` executes once, repartitioned
+       by part_id so each partition directory gets one file — the
+       directory then holds only this commit's rows for the scope;
     2. the verdicts are derived from the written violations, read back
        with the plan's schema (a clean run writes no file) and, on
        resume, limited to the partitions the manifest does not hold;
@@ -189,8 +234,10 @@ def commit(spark: SparkSession, scope: DataFrame, viol: DataFrame,
     attributes at call time, so a caller can wrap them.
     """
     manifest_dir = f"{out_dir}/manifest"
-    write_partitioned(viol.repartition("part_id"), f"{out_dir}/violations")
-    written = spark.read.schema(viol.schema).parquet(f"{out_dir}/violations")
+    viol_dir = f"{out_dir}/violations"
+    clear_scope_parts(spark, scope, viol_dir, part_col)
+    write_partitioned(viol.repartition("part_id"), viol_dir)
+    written = spark.read.schema(viol.schema).parquet(viol_dir)
     mine = (pending_only(written, spark, manifest_dir) if resuming
             else written)
     verd = (violation_verdicts(scope, mine, part_col)

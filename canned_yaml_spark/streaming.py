@@ -227,14 +227,16 @@ def validate_stream_with_lineage(stream_df: DataFrame, suite: CheckSuite,
        a restart after crash-between-write-and-stream-checkpoint
        re-delivers the batch; the manifest probe makes the sink
        idempotent at the lineage level too);
-    2. the batch's violation rows land partitioned BY batch_id with
-       dynamic partition overwrite — a half-written replay replaces,
-       never duplicates;
+    2. the batch's violation rows land partitioned BY batch_id, in a
+       batch_id directory cleared first — a half-written replay or an
+       earlier incarnation's batch of the same id is replaced, never
+       duplicated or inherited;
     3. only then is the (batch_id, part_id) verdict row appended to
        the manifest — the manifest append is the commit point,
        exactly as in the batch path. The verdicts are derived from
-       the batch's WRITTEN violations (runner.violation_verdicts, the
-       batch path's derivation), so the row suite runs once per batch.
+       the batch's WRITTEN violations, read back from its own
+       batch_id directory only (runner.violation_verdicts, the batch
+       path's derivation), so the row suite runs once per batch.
 
     The manifest carries the same columns as batch runs' plus
     batch_id and stream_id (STREAM_MANIFEST_SCHEMA) — one queryable
@@ -275,13 +277,21 @@ def validate_stream_with_lineage(stream_df: DataFrame, suite: CheckSuite,
             return                              # replay of a committed batch
         viol = (row_violations(batch_df, suite, id_col, part_col)
                 .withColumn("batch_id", F.lit(batch_id)))
+        # the batch's directory holds an uncommitted replay or an
+        # earlier incarnation's batch of the same id: clear it, so a
+        # batch with no violations cannot inherit its rows
+        batch_dir = f"{out_dir}/batch_id={batch_id}"
+        checkpoint.delete_dir(spark, batch_dir)
         (viol.write
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("batch_id")
              .mode("overwrite")
              .parquet(out_dir))
-        written = (spark.read.schema(viol.schema).parquet(out_dir)
-                   .filter(F.col("batch_id") == batch_id))
+        if checkpoint.path_exists(spark, batch_dir):
+            written = (spark.read.schema(viol.schema)
+                       .option("basePath", out_dir).parquet(batch_dir))
+        else:                                   # no violation row written
+            written = spark.createDataFrame([], viol.schema)
         verdicts = violation_verdicts(batch_df, written, part_col)
         checkpoint.append_stream_manifest(verdicts, manifest_dir,
                                           run_id, batch_id, stream_id)

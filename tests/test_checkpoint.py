@@ -2,7 +2,7 @@
 
 import pyspark.sql.functions as F
 
-from canned_yaml_spark import checkpoint, fixtures, job
+from canned_yaml_spark import checkpoint, fixtures, job, pipeline
 
 
 def test_resume_skips_completed_and_is_idempotent(spark, tmp_path):
@@ -162,16 +162,60 @@ def test_clean_corpus_fresh_resume_and_cli(spark, tmp_path):
                      "--out", str(tmp_path / "cli_out")]) == 0
 
 
+def test_rerun_of_fixed_data_clears_old_violations(spark, tmp_path):
+    """Dynamic partition overwrite leaves a partition that gets no
+    rows untouched. A rerun (resume=False, and every prep_run) over
+    data fixed since the last run must not read that partition's old
+    violations back: ok holds, this run's manifest rows count 0, and
+    the quarantine is empty."""
+    spec = {"type": "object",
+            "properties": {"sr_hz": {"type": "integer", "minimum": 0}}}
+    clean = fixtures.clips_df(spark, 200, inject=False, max_samples=16)
+    broken = clean.withColumn(
+        "sr_hz", F.when(F.col("part_id") < 8, F.lit(-1))
+                  .otherwise(F.col("sr_hz")))
+
+    out = str(tmp_path / "job")
+    assert not job.run(spark, spec, broken, out_dir=out,
+                       stats_columns=()).ok
+    r2 = job.run(spark, spec, clean, out_dir=out, resume=False,
+                 stats_columns=())
+    assert r2.ok
+    assert r2.violations.count() == 0
+    (run_id,) = {r.run_id for r in r2.verdicts.select("run_id").collect()}
+    mine = (spark.read.parquet(f"{out}/manifest")
+            .filter(F.col("run_id") == run_id).collect())
+    assert len(mine) == 64
+    assert all(r.n_violations == 0 and r["pass"] for r in mine)
+
+    out = str(tmp_path / "prep")
+    p1 = pipeline.prep_run(spark, broken, spec, dedup=False, out_dir=out,
+                           run_id="p1")
+    assert p1.n_quarantined > 0
+    p2 = pipeline.prep_run(spark, clean, spec, dedup=False, out_dir=out,
+                           run_id="p2")
+    assert p2.n_quarantined == 0
+    mine = (spark.read.parquet(f"{out}/manifest")
+            .filter(F.col("run_id") == "p2").collect())
+    assert len(mine) == 64
+    assert all(r.n_violations == 0 and r["pass"] for r in mine)
+
+
 def test_run_executes_each_family_once(spark, tmp_path, monkeypatch):
     """job.run(out_dir=...) executes the violations union once: an
     identity Python UDF on `severity` (the column the verdict
     aggregate reads) ticks as often during the run as in one noop
     execution of the same plan. The manifest counts equal the written
-    violations, and each part_id directory holds one file."""
+    violations, and each part_id directory holds one file. The same
+    holds for prep_run(out_dir=...), and for one micro-batch of the
+    streaming lineage sink over its row suite."""
     import glob
     import os
 
     from pyspark.sql.types import IntegerType
+
+    from canned_yaml_spark import streaming
+    from canned_yaml_spark.compile import compile_spec
 
     ticks = spark.sparkContext.accumulator(0)
 
@@ -189,20 +233,27 @@ def test_run_executes_each_family_once(spark, tmp_path, monkeypatch):
         plans.append(out)
         return out
 
+    def ticks_of(action):
+        before = ticks.value
+        action()
+        return ticks.value - before
+
+    def noop(df):
+        return lambda: df.write.format("noop").mode("overwrite").save()
+
     monkeypatch.setattr(job, "all_violations", counted)
     clips = fixtures.clips_df(spark, 400, max_samples=16)
     out = str(tmp_path / "once")
-    job.run(spark, "specs/clips.spec.yaml", clips,
-            dims={"codec_dim": fixtures.codec_dim_df(spark)},
-            clips_ref=fixtures.clips_ref_df(spark, 400, max_samples=16),
-            expected_hist=fixtures.reference_hist_df(spark),
-            ks_reference=fixtures.reference_dur_sample(),
-            out_dir=out)
-    during_run = ticks.value
+    during_run = ticks_of(lambda: job.run(
+        spark, "specs/clips.spec.yaml", clips,
+        dims={"codec_dim": fixtures.codec_dim_df(spark)},
+        clips_ref=fixtures.clips_ref_df(spark, 400, max_samples=16),
+        expected_hist=fixtures.reference_hist_df(spark),
+        ks_reference=fixtures.reference_dur_sample(),
+        out_dir=out))
     assert len(plans) == 1
-    plans[0].write.format("noop").mode("overwrite").save()
     assert during_run > 0
-    assert during_run == ticks.value - during_run
+    assert during_run == ticks_of(noop(plans[0]))
 
     viol = spark.read.parquet(f"{out}/violations")
     counts = {r.part_id: r["count"]
@@ -215,3 +266,42 @@ def test_run_executes_each_family_once(spark, tmp_path, monkeypatch):
     assert dirs
     for d in dirs:
         assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+
+    # prep_run(out_dir=...) commits through the same path
+    plans.clear()
+    during_prep = ticks_of(lambda: pipeline.prep_run(
+        spark, clips, "specs/clips.spec.yaml",
+        dims={"codec_dim": fixtures.codec_dim_df(spark)},
+        clips_ref=fixtures.clips_ref_df(spark, 400, max_samples=16),
+        dedup=False, out_dir=str(tmp_path / "prep_once")))
+    assert len(plans) == 1
+    assert during_prep > 0
+    assert during_prep == ticks_of(noop(plans[0]))
+
+    # one micro-batch of the lineage sink runs its row suite once
+    real_rows = streaming.row_violations
+
+    def counted_rows(*args, **kwargs):
+        return real_rows(*args, **kwargs).withColumn(
+            "severity", tick(F.col("severity")))
+
+    monkeypatch.setattr(streaming, "row_violations", counted_rows)
+    src = str(tmp_path / "stream_src")
+    clips.coalesce(1).write.parquet(src)
+    static = spark.read.parquet(src)
+    suite = compile_spec("specs/clips.spec.yaml", static.schema)
+    man = str(tmp_path / "stream_manifest")
+
+    def one_batch():
+        (streaming.validate_stream_with_lineage(
+            spark.readStream.schema(static.schema).parquet(src), suite,
+            str(tmp_path / "stream_out"), str(tmp_path / "stream_chk"),
+            man, run_id="once")
+         .trigger(availableNow=True).start().awaitTermination(120))
+
+    during_batch = ticks_of(one_batch)
+    assert checkpoint.committed_batches(spark, man) == {0}
+    assert during_batch > 0
+    # the batch's frame is gone after the sink returns: compare with
+    # the same row suite over the same file as a static frame
+    assert during_batch == ticks_of(noop(counted_rows(static, suite)))

@@ -308,6 +308,47 @@ def test_stream_manifest_survives_checkpoint_wipe(spark, suite, tmp_path):
     assert got.count() == want.count()
 
 
+
+def test_stream_new_incarnation_clean_batch_records_no_violations(
+        spark, suite, tmp_path):
+    # batch ids restart at 0 with a new checkpoint; a clean batch 0 of
+    # the new incarnation writes no violation row, so it must not read
+    # the old incarnation's batch_id=0 rows back into its verdicts
+    import os
+    import shutil
+
+    from canned_yaml_spark import checkpoint
+    from canned_yaml_spark.runner import violation_count
+
+    out = str(tmp_path / "viol_inc")
+    chk = str(tmp_path / "chk_inc")
+    man = str(tmp_path / "manifest_inc")
+    dirty = fixtures.clips_df(spark, 200, max_samples=16)
+    clean = dirty.filter(violation_count(suite.row_checks) == 0)
+
+    def run_once(frame, src):
+        frame.coalesce(1).write.parquet(src)
+        stream = spark.readStream.schema(dirty.schema).parquet(src)
+        q = (streaming.validate_stream_with_lineage(
+                stream, suite, out, chk, man, run_id="inc")
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        return checkpoint.stream_identity(spark, chk)
+
+    sid1 = run_once(dirty, str(tmp_path / "src_dirty"))
+    m = spark.read.parquet(man)
+    assert m.filter(F.col("stream_id") == sid1) \
+            .agg(F.sum("n_violations")).first()[0] > 0
+
+    shutil.rmtree(chk)
+    sid2 = run_once(clean, str(tmp_path / "src_clean"))
+    mine = (spark.read.parquet(man)
+            .filter(F.col("stream_id") == sid2).collect())
+    assert {r.batch_id for r in mine} == {0}
+    assert sum(r.n_rows for r in mine) == clean.count()
+    assert all(r.n_violations == 0 and r["pass"] for r in mine)
+    assert not os.path.exists(os.path.join(out, "batch_id=0"))
+
 def test_audio_ops_compose_with_streams(spark, tmp_path):
     # the r5 audio family is stateless mapInPandas — it must compose
     # with readStream unchanged (same operator object, no batch-only
