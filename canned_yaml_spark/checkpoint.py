@@ -29,13 +29,16 @@ Design (SURVEY.md §2.2 #25):
   violations.
 - Everything rewritten on retry is byte-identical because the whole
   data path is deterministic (pure-function fixtures, no rand()).
+- The streaming lineage sink (streaming.validate_stream_with_lineage)
+  commits each micro-batch through `commit` into its own out_dir and
+  skips a replayed batch when `is_committed` finds its manifest file.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from canned_yaml_spark.runner import violation_verdicts
@@ -59,11 +62,13 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return fs.exists(p)
 
 
-def delete_dir(spark: SparkSession, path: str) -> None:
-    """Recursively delete path through Hadoop FS; absent is a no-op."""
-    fs, p = _fs(spark, path)
-    if fs.exists(p):
-        fs.delete(p, True)
+def is_committed(spark: SparkSession, out_dir: str) -> bool:
+    """True when out_dir/manifest holds a parquet file: one Hadoop FS
+    listing, no Spark job. The manifest append is one file from one
+    task, moved out of _temporary when that task commits, so a crashed
+    append leaves none."""
+    fs, p = _fs(spark, f"{out_dir}/manifest/*.parquet")
+    return bool(fs.globStatus(p))
 
 
 def clear_scope_parts(spark: SparkSession, scope: DataFrame, path: str,
@@ -132,40 +137,17 @@ def append_manifest(verdicts: DataFrame, manifest_dir: str,
      .write.mode("append").parquet(manifest_dir))
 
 
-# ----------------------------------------------- streaming lineage
-#: streaming manifest rows carry the micro-batch id AND the stream
-#: incarnation id: the commit unit of a stream is
-#: (stream_id, batch_id, part_id) — the same partition accumulates
-#: across batches, and batch ids restart at 0 whenever the streaming
-#: checkpoint is recreated, so batch_id alone does not identify a
-#: commit (ADVICE r4: a manifest outliving its checkpoint would
-#: silently skip the fresh stream's real batches).
-#:
-#: A streaming manifest_dir must be 1:1 with its lineage surface and
-#: must NOT be shared with batch append_manifest output: batch rows
-#: lack the batch_id/stream_id columns, and plain parquet reads
-#: resolve the schema from an arbitrary file (columns then error or
-#: come back null depending on which file wins).
-STREAM_MANIFEST_SCHEMA = MANIFEST_SCHEMA + ", batch_id long, stream_id string"
-
-
 def stream_identity(spark: SparkSession, checkpoint_dir: str) -> str:
-    """Identity of one logical stream incarnation: a token stored
-    INSIDE the streaming checkpoint dir, so it lives and dies with the
-    checkpoint. Wiping the checkpoint (which restarts batch ids at 0)
-    wipes the token too — the fresh incarnation's batches can never be
-    mistaken for the old one's manifest rows."""
+    """Identity of one stream incarnation: a token stored inside the
+    streaming checkpoint dir, so wiping the checkpoint (which restarts
+    batch ids at 0) also starts a new identity."""
     import uuid
 
-    jvm = spark._jvm                                   # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()            # noqa: SLF001
-    p = jvm.org.apache.hadoop.fs.Path(
-        f"{checkpoint_dir}/_stream_identity")
-    fs = p.getFileSystem(conf)
+    fs, p = _fs(spark, f"{checkpoint_dir}/_stream_identity")
     if fs.exists(p):
         stream = fs.open(p)
         try:
-            return jvm.org.apache.commons.io.IOUtils.toString(
+            return spark._jvm.org.apache.commons.io.IOUtils.toString(  # noqa: SLF001
                 stream, "UTF-8").strip()
         finally:
             stream.close()
@@ -176,41 +158,6 @@ def stream_identity(spark: SparkSession, checkpoint_dir: str) -> str:
     finally:
         out.close()
     return token
-
-
-def committed_batches(spark: SparkSession, manifest_dir: str,
-                      stream_id: str | None = None) -> set[int]:
-    """Batch ids already committed to the streaming manifest (for the
-    given stream incarnation, when stream_id is passed). Bounded driver
-    collect: one row per micro-batch at most."""
-    if not path_exists(spark, manifest_dir):
-        return set()
-    m = spark.read.parquet(manifest_dir)
-    if "batch_id" not in m.columns:
-        return set()
-    if stream_id is not None and "stream_id" in m.columns:
-        m = m.filter(F.col("stream_id") == stream_id)
-    return {r.batch_id for r in
-            m.select("batch_id").distinct().collect()}
-
-
-def append_stream_manifest(verdicts: DataFrame, manifest_dir: str,
-                           run_id: str, batch_id: int,
-                           stream_id: str = "") -> None:
-    """Commit one micro-batch's per-partition verdicts to the lineage
-    manifest — same columns as the batch manifest plus batch_id and
-    stream_id, so batch and streaming runs land in ONE queryable
-    lineage SCHEMA (but separate directories — see the module note on
-    STREAM_MANIFEST_SCHEMA)."""
-    (verdicts
-     .select("part_id", "n_rows", "n_violations",
-             F.coalesce(F.col("max_severity"), F.lit(-1)).alias("max_severity"),
-             "pass",
-             F.lit(run_id).alias("run_id"),
-             F.lit(time.time()).alias("completed_at"),
-             F.lit(batch_id).alias("batch_id"),
-             F.lit(stream_id).alias("stream_id"))
-     .write.mode("append").parquet(manifest_dir))
 
 
 def commit(spark: SparkSession, scope: DataFrame, viol: DataFrame,
@@ -228,7 +175,9 @@ def commit(spark: SparkSession, scope: DataFrame, viol: DataFrame,
        resume, limited to the partitions the manifest does not hold;
     3. verdicts/: those verdicts, tagged with run_id;
     4. manifest/: this run's written verdict rows, in one file — the
-       commit point.
+       commit point. The verdicts write counts its rows (an
+       Observation, no extra job); a commit with no pending partition
+       appends no file.
 
     write_partitioned and append_manifest are looked up as module
     attributes at call time, so a caller can wrap them.
@@ -242,11 +191,14 @@ def commit(spark: SparkSession, scope: DataFrame, viol: DataFrame,
             else written)
     verd = (violation_verdicts(scope, mine, part_col)
             .withColumn("run_id", F.lit(run_id)))
-    write_partitioned(verd, f"{out_dir}/verdicts")
+    seen = Observation()
+    write_partitioned(verd.observe(seen, F.count(F.lit(1)).alias("n")),
+                      f"{out_dir}/verdicts")
     verd_written = spark.read.schema(verd.schema).parquet(f"{out_dir}/verdicts")
-    append_manifest(
-        verd_written.filter(F.col("run_id") == run_id).coalesce(1),
-        manifest_dir, run_id)
+    if seen.get["n"]:
+        append_manifest(
+            verd_written.filter(F.col("run_id") == run_id).coalesce(1),
+            manifest_dir, run_id)
     return written, verd_written
 
 

@@ -401,17 +401,6 @@ def near_dup_pairs_incremental(delta_docs: DataFrame,
 
 
 # ------------------------------------------- sig-store lifecycle
-def append_signatures(delta_docs: DataFrame, path: str) -> None:
-    """Evolve the signature store after an incremental run: shingle +
-    minhash ONLY the delta and append its (doc_id, sig) rows. This is
-    the O(delta) store update near_dup_pairs_incremental's contract
-    assumes ("append minhash_signatures(delta)") — the corpus is never
-    re-shingled. Each append lands as its own parquet file(s), so a
-    long append history fragments the store; compact_sig_store is the
-    periodic remedy (ROADMAP 4 / VERDICT r4 item 5)."""
-    minhash_signatures(delta_docs).write.mode("append").parquet(path)
-
-
 def _n_data_files(spark, path: str) -> int:
     """Count parquet data files under `path` (storage-agnostic via the
     Hadoop FS API; _SUCCESS/_metadata sidecars excluded). Bounded: one

@@ -235,17 +235,6 @@ def golden_rule_counts(n_rows: int) -> dict[str, int]:
     return counts
 
 
-def write_fixtures(spark: SparkSession, out_dir: str, n_rows: int,
-                   *, inject: bool = True, max_samples: int = 2048) -> None:
-    """Materialize clips/clips_ref/codec_dim parquet under out_dir."""
-    clips_df(spark, n_rows, inject=inject, max_samples=max_samples) \
-        .write.mode("overwrite").parquet(f"{out_dir}/clips.parquet")
-    clips_ref_df(spark, n_rows, max_samples=max_samples) \
-        .write.mode("overwrite").parquet(f"{out_dir}/clips_ref.parquet")
-    codec_dim_df(spark) \
-        .write.mode("overwrite").parquet(f"{out_dir}/codec_dim.parquet")
-
-
 def bucketed_table(spark: SparkSession, df: DataFrame, name: str,
                    location: str, files_per_bucket: int = 1) -> DataFrame:
     """Write `df` as table `name` at `location`, bucketed and sorted by

@@ -326,11 +326,3 @@ def gif_frames(buf: bytes) -> tuple[np.ndarray, int]:
     return np.stack(frames), len(frames)
 
 
-def gif_decode(buf: bytes | bytearray | memoryview
-               ) -> np.ndarray | None:
-    """None-returning wrapper (the media registry's undecodable
-    contract)."""
-    try:
-        return gif_frames(bytes(buf))[0]
-    except (GifError, struct.error, IndexError):
-        return None

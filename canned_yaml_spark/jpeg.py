@@ -609,19 +609,6 @@ def jpeg_decode_strict(buf: bytes) -> np.ndarray:
     raise JpegError(f"{len(out_planes)}-component scans unsupported")
 
 
-def jpeg_decode(buf: bytes | bytearray | memoryview
-                ) -> np.ndarray | None:
-    """None-returning wrapper (the media registry's undecodable
-    contract)."""
-    try:
-        return jpeg_decode_strict(bytes(buf))
-    except (ValueError, struct.error, IndexError):
-        # ValueError covers JpegError AND the numpy broadcast error a
-        # truncated DQT raises from tab[_ZZ_FLAT] = frombuffer(...)
-        # (ADVICE r5) — contract is malformed -> None, never a raise
-        return None
-
-
 def block_constant_decoded(v: int, quality: int) -> int:
     """Closed-form decoded value of an 8×8 block whose input pixels
     all equal v (grayscale): only the DC coefficient survives the

@@ -218,6 +218,10 @@ def _rel_gated(z: np.ndarray, rel_gate_lu: float):
 
 
 def _integrated_from_weighted(y: np.ndarray, fs: int):
+    """BS.1770-4 gated integrated loudness per row of the K-weighted
+    matrix y: (lufs, n_blocks, n_gated). lufs is NaN when undefined:
+    the clip is shorter than one 400 ms gating block, or every block
+    fell below the -70 LKFS absolute gate (silence)."""
     rows = y.shape[0]
     z = _block_z(y, fs, BLOCK_S, HOP_S)
     if z is None:
@@ -231,18 +235,6 @@ def _integrated_from_weighted(y: np.ndarray, fs: int):
         lufs = _OFFSET + 10.0 * np.log10(mean_z)
     return (lufs, np.full(rows, z.shape[1], np.int64),
             cnt.astype(np.int64))
-
-
-def integrated_lufs(x_mat: np.ndarray, fs: int):
-    """BS.1770-4 gated integrated loudness for a batch matrix of
-    equal-length mono clips (float64, full scale ±1).
-
-    Returns (lufs, n_blocks, n_gated) arrays aligned with the rows.
-    lufs is NaN when undefined: the clip is shorter than one 400 ms
-    gating block, or every block fell below the -70 LKFS absolute
-    gate (silence).
-    """
-    return _integrated_from_weighted(k_weight(x_mat, fs), fs)
 
 
 # ---- loudness range (EBU R 128 / Tech 3342) -------------------------
@@ -265,6 +257,8 @@ LRA_REL_GATE_LU = -20.0   # Tech 3342 relative threshold
 
 
 def _lra_from_weighted(y: np.ndarray, fs: int):
+    """EBU Tech 3342 loudness range per row of the K-weighted matrix
+    y: (lra_lu, n_gated_st_blocks)."""
     rows = y.shape[0]
     z = _block_z(y, fs, ST_BLOCK_S, ST_HOP_S)
     if z is None:
@@ -278,12 +272,6 @@ def _lra_from_weighted(y: np.ndarray, fs: int):
         p = np.nanpercentile(l_gated[any_rows], [10.0, 95.0], axis=1)
         lra[any_rows] = p[1] - p[0]
     return lra, cnt.astype(np.int64)
-
-
-def loudness_range(x_mat: np.ndarray, fs: int):
-    """EBU Tech 3342 loudness range per row of a batch matrix
-    (float64, full scale ±1). Returns (lra_lu, n_gated_st_blocks)."""
-    return _lra_from_weighted(k_weight(x_mat, fs), fs)
 
 
 # ---- true peak (BS.1770-4 Annex 2: 4x oversampled peak) ------------

@@ -87,13 +87,6 @@ def encode_image(key: int, width: int = 8, height: int = 8,
     return b"IMG1" + struct.pack("<HHB", width, height, channels) + px.tobytes()
 
 
-def encode_video(key: int, n_frames: int = 4, width: int = 4,
-                 height: int = 4) -> bytes:
-    n = n_frames * width * height
-    px = ((np.arange(n) * 11 + key * 17) % 256).astype(np.uint8)
-    return b"VID1" + struct.pack("<HHH", n_frames, width, height) + px.tobytes()
-
-
 def _decode_image_stub(buf: bytes) -> dict:
     w, h, c = struct.unpack("<HHB", buf[4:9])
     px = np.frombuffer(buf[9:], dtype=np.uint8)

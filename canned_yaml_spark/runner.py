@@ -11,8 +11,9 @@ Per-partition verdicts are one hash aggregation (partial map-side
 combine + final) on the partition column: row_verdicts over the row
 checks alone, violation_verdicts over a violations table of any
 family mix — the one derivation every commit path uses, fed the
-violations as written to disk (checkpoint.commit, the streaming
-lineage sink), so no check family runs again to produce verdicts.
+violations as written to disk by checkpoint.commit (the batch job,
+the prep pipeline and the streaming lineage sink all commit through
+it), so no check family runs again to produce verdicts.
 
 Deliberate semantic difference from the reference (SURVEY.md §4):
 the reference fail-fasts inside a subtree (each check `return false`,

@@ -13,8 +13,14 @@ a streaming DataFrame — this module only adds the streaming plumbing:
 - `windowed_verdicts`: per event-time window × partition verdict
   aggregation with a watermark for late clips — the streaming analog
   of the per-partition verdict table.
+- `running_verdicts`: a running per-partition verdict kept in
+  explicit state that is evicted after a timeout.
+- `validate_stream_with_lineage`: foreachBatch sink that commits each
+  micro-batch with the batch engine (job.all_violations, then
+  checkpoint.commit) into out_dir/stream_id=<sid>/batch_id=<n>/ —
+  violations/, verdicts/ and manifest/, the layout job.run writes.
 
-Both accept any streaming source; tests use a parquet file source with
+All accept any streaming source; tests use a parquet file source with
 Trigger.AvailableNow and the rate source (rate_clips_stream) for
 determinism.
 """
@@ -45,95 +51,6 @@ def validate_stream(stream_df: DataFrame, suite: CheckSuite,
              .option("path", out_dir)
              .option("checkpointLocation", checkpoint_dir)
              .outputMode("append"))
-
-
-def stream_ref_violations(stream_df: DataFrame, clips_ref: DataFrame,
-                          suite: CheckSuite,
-                          id_col: str = "clip_id",
-                          part_col: str = "part_id") -> DataFrame:
-    """Reference-table check families over a STREAM: x-payload
-    (decode + SNR + transcript equality) and x-transcript (tolerance
-    bounds) run on each micro-batch via stream-static joins against
-    the static reference table — continuous-ingest validation, the
-    north_star's posture, with the SAME operators the batch path uses
-    (payload_violations / transcript_violations are plain DataFrame
-    transforms; Structured Streaming supports stateless stream-static
-    equi-joins and mapInPandas, so they compose unchanged and the
-    stream==batch equality is pinned in tests/test_streaming.py).
-
-    Append-safe: no watermark, no state store. Scale note: the static
-    side is re-planned each micro-batch; with the reference table
-    bucketed by clip_id the per-batch join is exchange-free on the
-    static side and only the (small) micro-batch shuffles — the same
-    layout argument as the batch path, now amortized per trigger.
-    """
-    from canned_yaml_spark import payload as pl
-    parts = []
-    for pc in suite.payload_checks:
-        parts.append(pl.payload_violations(
-            stream_df, clips_ref, pc, id_col, part_col))
-    for tc in suite.transcript_checks:
-        if tc.column in stream_df.columns:
-            parts.append(pl.transcript_violations(
-                stream_df, clips_ref, tc, id_col, part_col))
-    if not parts:
-        raise ValueError("suite has no reference-table checks "
-                         "(x-payload / x-transcript)")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def stream_absent_violations(stream_df: DataFrame, blocklist: DataFrame,
-                             suite: CheckSuite,
-                             id_col: str = "clip_id",
-                             part_col: str = "part_id") -> DataFrame:
-    """x-absent deny-list checks over a STREAM: each micro-batch
-    stream-static LEFT SEMI joins against the static blocklist —
-    continuous-ingest blocking of known-bad ids/hashes with the SAME
-    operator the batch path uses (absent_violations is a plain
-    DataFrame transform; Structured Streaming supports stateless
-    stream-static semi-joins, so it composes unchanged).
-
-    The inline-IN plan snapshots at plan build, which for a stream
-    would freeze the blocklist for the query's lifetime — so the
-    stream path always takes the join (max_inline_keys=0): the static
-    side is re-planned each micro-batch, picking up blocklist
-    appends between triggers. Append-safe: no watermark, no state.
-    """
-    from canned_yaml_spark import dataset as ds
-    parts = [ds.absent_violations(stream_df, blocklist, ac,
-                                  id_col, part_col, max_inline_keys=0)
-             for ac in suite.absent_checks]
-    if not parts:
-        raise ValueError("suite has no x-absent checks")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def stream_media_violations(stream_df: DataFrame, suite: CheckSuite,
-                            id_col: str = "media_id",
-                            part_col: str = "part_id") -> DataFrame:
-    """x-media checks over a STREAM: continuous-ingest media
-    validation with the SAME operator the batch path uses
-    (multimodal.media_violations is one stateless mapInPandas decode
-    pass + JVM filters — no join, no watermark, no state store, so it
-    composes onto a streaming DataFrame unchanged and the
-    stream==batch equality is pinned in tests/test_streaming.py).
-    Per-micro-batch cost is the Arrow decode of that batch's payloads
-    only; nothing accumulates."""
-    from canned_yaml_spark import multimodal as mmod
-    parts = [mmod.media_violations(stream_df, mc, id_col, part_col)
-             for mc in suite.media_checks]
-    if not parts:
-        raise ValueError("suite has no x-media checks")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def running_verdicts(stream_df: DataFrame, suite: CheckSuite,
@@ -214,88 +131,49 @@ def windowed_verdicts(stream_df: DataFrame, suite: CheckSuite,
 
 def validate_stream_with_lineage(stream_df: DataFrame, suite: CheckSuite,
                                  out_dir: str, checkpoint_dir: str,
-                                 manifest_dir: str, run_id: str,
+                                 run_id: str, *,
+                                 dims: dict[str, DataFrame] | None = None,
+                                 clips_ref: DataFrame | None = None,
                                  id_col: str = "clip_id",
                                  part_col: str = "part_id"
                                  ) -> DataStreamWriter:
-    """Streaming lineage parity with the batch engine (VERDICT r3
-    item 6 / ROADMAP 2): a foreachBatch sink that gives every
-    micro-batch the SAME commit discipline batch jobs get from
-    checkpoint.py —
+    """foreachBatch sink that commits every micro-batch with the batch
+    engine: job.all_violations over the batch's static frame, then
+    checkpoint.commit into out_dir/stream_id=<sid>/batch_id=<n>/, an
+    ordinary job.run out_dir (violations/, verdicts/, manifest/).
 
-    1. replayed batches are skipped (batch_id already in the manifest:
-       a restart after crash-between-write-and-stream-checkpoint
-       re-delivers the batch; the manifest probe makes the sink
-       idempotent at the lineage level too);
-    2. the batch's violation rows land partitioned BY batch_id, in a
-       batch_id directory cleared first — a half-written replay or an
-       earlier incarnation's batch of the same id is replaced, never
-       duplicated or inherited;
-    3. only then is the (batch_id, part_id) verdict row appended to
-       the manifest — the manifest append is the commit point,
-       exactly as in the batch path. The verdicts are derived from
-       the batch's WRITTEN violations, read back from its own
-       batch_id directory only (runner.violation_verdicts, the batch
-       path's derivation), so the row suite runs once per batch.
+    Every family job.all_violations runs executes once per batch; dims
+    and clips_ref feed the reference families as in job.run, and are
+    re-planned per batch (an x-ref / x-absent inline key list is
+    collected per batch). The table-scoped families (x-unique, drift,
+    ...) see the one micro-batch as the table.
 
-    The manifest carries the same columns as batch runs' plus
-    batch_id and stream_id (STREAM_MANIFEST_SCHEMA) — one queryable
-    lineage SCHEMA across both execution modes, but the streaming
-    manifest_dir must be its own directory, never shared with batch
-    append_manifest output (plain parquet reads resolve the schema
-    from an arbitrary file; mixed files make batch_id error or null
-    out — ADVICE r4).
-
-    Replay detection is keyed on (stream_id, batch_id), where
-    stream_id is a token stored inside the streaming checkpoint dir
+    A batch whose manifest/ holds a file is a replay and is skipped
+    (checkpoint.is_committed: one listing, no Spark job). stream_id is
+    a token kept inside the streaming checkpoint
     (checkpoint.stream_identity): batch ids restart at 0 when the
-    checkpoint is recreated, so a manifest that outlives its
-    checkpoint would otherwise silently skip the fresh incarnation's
-    real batches. The committed set is read from the manifest ONCE per
-    sink start and maintained in the closure afterwards — this sink is
-    the manifest's only appender, so the cache stays correct within a
-    run and a long-lived stream does not pay an O(committed batches)
-    manifest scan per micro-batch (ADVICE r4).
+    checkpoint is recreated, and the new incarnation writes under its
+    own directory, leaving the old one intact. All batches' lineage:
+    spark.read.option("basePath", out_dir)
+         .parquet(f"{out_dir}/stream_id=*/batch_id=*/manifest")
     """
-    from canned_yaml_spark import checkpoint
-    from canned_yaml_spark.runner import violation_verdicts
+    from canned_yaml_spark import checkpoint, job
 
-    committed: set[int] | None = None          # lazily read, then cached
     stream_id: str | None = None
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal committed, stream_id
+        nonlocal stream_id
         spark = batch_df.sparkSession
-        if committed is None:
-            # first batch of this sink's life: resolve the stream
-            # incarnation (the checkpoint dir exists by now — the
-            # stream has started) and read the manifest once
+        if stream_id is None:        # the checkpoint dir exists by now
             stream_id = checkpoint.stream_identity(spark, checkpoint_dir)
-            committed = checkpoint.committed_batches(spark, manifest_dir,
-                                                     stream_id)
-        if batch_id in committed:
+        batch_dir = f"{out_dir}/stream_id={stream_id}/batch_id={batch_id}"
+        if checkpoint.is_committed(spark, batch_dir):
             return                              # replay of a committed batch
-        viol = (row_violations(batch_df, suite, id_col, part_col)
-                .withColumn("batch_id", F.lit(batch_id)))
-        # the batch's directory holds an uncommitted replay or an
-        # earlier incarnation's batch of the same id: clear it, so a
-        # batch with no violations cannot inherit its rows
-        batch_dir = f"{out_dir}/batch_id={batch_id}"
-        checkpoint.delete_dir(spark, batch_dir)
-        (viol.write
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id")
-             .mode("overwrite")
-             .parquet(out_dir))
-        if checkpoint.path_exists(spark, batch_dir):
-            written = (spark.read.schema(viol.schema)
-                       .option("basePath", out_dir).parquet(batch_dir))
-        else:                                   # no violation row written
-            written = spark.createDataFrame([], viol.schema)
-        verdicts = violation_verdicts(batch_df, written, part_col)
-        checkpoint.append_stream_manifest(verdicts, manifest_dir,
-                                          run_id, batch_id, stream_id)
-        committed.add(batch_id)
+        viol = job.all_violations(batch_df, suite, dims=dims,
+                                  clips_ref=clips_ref,
+                                  id_col=id_col, part_col=part_col)
+        checkpoint.commit(spark, batch_df, viol, batch_dir, run_id,
+                          resuming=False, part_col=part_col)
 
     return (stream_df.writeStream
             .foreachBatch(process_batch)

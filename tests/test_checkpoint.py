@@ -137,7 +137,10 @@ def test_crash_resume_reproduces_from_scratch_verdicts(spark, tmp_path):
 def test_clean_corpus_fresh_resume_and_cli(spark, tmp_path):
     """A corpus with zero violations writes no violations file; the
     commit reads the violations back with the plan's schema, so a
-    fresh run, its resume and cli.main all succeed with ok=True."""
+    fresh run, its resume and cli.main all succeed with ok=True. The
+    resume, with nothing pending, appends no manifest file."""
+    import glob
+
     from canned_yaml_spark import cli
 
     spec = tmp_path / "clean.spec.yaml"
@@ -155,6 +158,8 @@ def test_clean_corpus_fresh_resume_and_cli(spark, tmp_path):
     assert r2.ok
     assert r2.verdicts.count() == 64
     assert spark.read.parquet(f"{out}/manifest").count() == 64
+    # the resume had nothing pending: it appended no manifest file
+    assert len(glob.glob(f"{out}/manifest/*.parquet")) == 1
 
     table = str(tmp_path / "clean.parquet")
     clips.write.parquet(table)
@@ -208,7 +213,7 @@ def test_run_executes_each_family_once(spark, tmp_path, monkeypatch):
     execution of the same plan. The manifest counts equal the written
     violations, and each part_id directory holds one file. The same
     holds for prep_run(out_dir=...), and for one micro-batch of the
-    streaming lineage sink over its row suite."""
+    streaming lineage sink."""
     import glob
     import os
 
@@ -278,30 +283,28 @@ def test_run_executes_each_family_once(spark, tmp_path, monkeypatch):
     assert during_prep > 0
     assert during_prep == ticks_of(noop(plans[0]))
 
-    # one micro-batch of the lineage sink runs its row suite once
-    real_rows = streaming.row_violations
-
-    def counted_rows(*args, **kwargs):
-        return real_rows(*args, **kwargs).withColumn(
-            "severity", tick(F.col("severity")))
-
-    monkeypatch.setattr(streaming, "row_violations", counted_rows)
+    # one micro-batch of the lineage sink runs every family once
+    plans.clear()
     src = str(tmp_path / "stream_src")
     clips.coalesce(1).write.parquet(src)
     static = spark.read.parquet(src)
     suite = compile_spec("specs/clips.spec.yaml", static.schema)
-    man = str(tmp_path / "stream_manifest")
+    kw = dict(dims={"codec_dim": fixtures.codec_dim_df(spark)},
+              clips_ref=fixtures.clips_ref_df(spark, 400, max_samples=16))
+    out = str(tmp_path / "stream_out")
 
     def one_batch():
         (streaming.validate_stream_with_lineage(
             spark.readStream.schema(static.schema).parquet(src), suite,
-            str(tmp_path / "stream_out"), str(tmp_path / "stream_chk"),
-            man, run_id="once")
+            out, str(tmp_path / "stream_chk"), "once", **kw)
          .trigger(availableNow=True).start().awaitTermination(120))
 
     during_batch = ticks_of(one_batch)
-    assert checkpoint.committed_batches(spark, man) == {0}
+    assert len(plans) == 1
+    assert glob.glob(os.path.join(out, "stream_id=*", "batch_id=0",
+                                  "manifest", "*.parquet"))
     assert during_batch > 0
     # the batch's frame is gone after the sink returns: compare with
-    # the same row suite over the same file as a static frame
-    assert during_batch == ticks_of(noop(counted_rows(static, suite)))
+    # the same families over the same file as a static frame
+    assert during_batch == ticks_of(noop(job.all_violations(static, suite,
+                                                            **kw)))

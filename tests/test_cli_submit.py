@@ -63,10 +63,16 @@ def _submit(tmp: Path, zpath: Path, *cli_args: str,
 @pytest.fixture(scope="module")
 def corpus(spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("submit")
-    fixtures.write_fixtures(spark, str(tmp / "dirty"), 600,
-                            inject=True, max_samples=256)
-    fixtures.write_fixtures(spark, str(tmp / "clean"), 200,
-                            inject=False, max_samples=256)
+    for name, n_rows in (("dirty", 600), ("clean", 200)):
+        tables = {
+            "clips": fixtures.clips_df(spark, n_rows,
+                                       inject=name == "dirty",
+                                       max_samples=256),
+            "clips_ref": fixtures.clips_ref_df(spark, n_rows,
+                                               max_samples=256),
+            "codec_dim": fixtures.codec_dim_df(spark)}
+        for table, df in tables.items():
+            df.write.parquet(str(tmp / name / f"{table}.parquet"))
     return tmp
 
 

@@ -277,8 +277,9 @@ def test_sig_store_lifecycle_compaction(spark, docs, docs2, tmp_path):
     dedup.materialize_signatures(docs, path)
     # two fragmenting appends: hash-split halves of the delta
     h = F.abs(F.xxhash64("doc_id")) % 2
-    dedup.append_signatures(delta.filter(h == 0), path)
-    dedup.append_signatures(delta.filter(h == 1), path)
+    for half in (0, 1):       # each append: signatures of the delta only
+        dedup.minhash_signatures(delta.filter(h == half)) \
+             .write.mode("append").parquet(path)
     store = spark.read.parquet(path)
     # appended store holds exactly the from-scratch signature rows
     assert store.count() == docs2.count()

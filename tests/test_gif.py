@@ -15,6 +15,9 @@ import pytest
 from canned_yaml_spark import gif as G
 from canned_yaml_spark import multimodal as mm
 
+#: the only exceptions malformed input may raise from the decoder
+MALFORMED = (G.GifError, struct.error, IndexError)
+
 
 def test_lzw_hand_derived_stream():
     # min_code 2 over [1, 1, 1]: Clear(4) w3, literal 1 w3, code 6
@@ -50,7 +53,7 @@ def test_lzw_malformed():
 def test_static_and_animated_lossless():
     rng = np.random.default_rng(1)
     img = rng.integers(0, 256, (8, 16)).astype(np.uint8)
-    fr = G.gif_decode(G.gif_encode(img))
+    fr, _ = G.gif_frames(G.gif_encode(img))
     assert fr.shape == (1, 8, 16, 3)
     for c in range(3):                  # identity gray palette
         assert np.array_equal(fr[0, :, :, c], img)
@@ -69,7 +72,7 @@ def test_small_palette():
                    np.uint8)
     idx = np.random.default_rng(2).integers(0, 4, (6, 7)).astype(np.uint8)
     buf = G.gif_encode(idx, palette=pal)
-    fr = G.gif_decode(buf)
+    fr, _ = G.gif_frames(buf)
     assert np.array_equal(fr[0], pal[idx])
     # a 4-entry palette packs as a 4-entry GCT (size exp 2), not 256
     assert len(buf) < 120
@@ -132,7 +135,8 @@ def test_sub_rectangle_composition():
     # out-of-bounds placement must be rejected, not clipped silently
     bad = bytes(out).replace(struct.pack("<HHHH", 3, 2, 4, 4),
                              struct.pack("<HHHH", 6, 2, 4, 4))
-    assert G.gif_decode(bad) is None
+    with pytest.raises(MALFORMED):
+        G.gif_frames(bad)
 
 
 def test_corruption_sweep_never_crashes_or_misshapes():
@@ -140,20 +144,23 @@ def test_corruption_sweep_never_crashes_or_misshapes():
     frames = [rng.integers(0, 256, (8, 16)).astype(np.uint8)
               for _ in range(3)]
     buf = G.gif_encode(frames)
-    good = G.gif_decode(buf)
+    good, _ = G.gif_frames(buf)
     for pos in range(13, len(buf) - 1, 2):
         c = bytearray(buf)
         c[pos] ^= 0x55
-        dec = G.gif_decode(bytes(c))
-        assert dec is None or dec.shape[1:] == good.shape[1:], pos
+        try:
+            dec, _ = G.gif_frames(bytes(c))
+        except MALFORMED:
+            continue
+        assert dec.shape[1:] == good.shape[1:], pos
 
 
 def test_decoder_rejects_malformed():
-    assert G.gif_decode(b"") is None
-    assert G.gif_decode(b"GIF89a" + b"x" * 4) is None
     buf = G.gif_encode(np.zeros((4, 4), np.uint8))
-    assert G.gif_decode(buf[: len(buf) // 2]) is None
-    assert G.gif_decode(buf[:-1]) is None              # no trailer
+    for bad in (b"", b"GIF89a" + b"x" * 4, buf[: len(buf) // 2],
+                buf[:-1]):                              # no trailer
+        with pytest.raises(MALFORMED):
+            G.gif_frames(bad)
 
 
 def test_multimodal_corpus_slot():

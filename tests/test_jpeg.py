@@ -16,6 +16,11 @@ import pytest
 from canned_yaml_spark import jpeg as J
 from canned_yaml_spark import multimodal as mm
 
+#: the only exceptions malformed input may raise from the decoder
+#: (ValueError covers JpegError and the numpy broadcast error of a
+#: truncated DQT)
+MALFORMED = (ValueError, struct.error, IndexError)
+
 
 def _structured(h: int = 40, w: int = 56) -> np.ndarray:
     yy, xx = np.mgrid[0:h, 0:w]
@@ -43,7 +48,7 @@ def test_gray_roundtrip_quality_monotone():
     img = _structured()
     last = 0.0
     for q, floor in ((25, 35.0), (50, 40.0), (75, 44.0), (95, 50.0)):
-        dec = J.jpeg_decode(J.jpeg_encode(img, quality=q))
+        dec = J.jpeg_decode_strict(J.jpeg_encode(img, quality=q))
         p = _psnr(dec, img)
         assert p > floor and p >= last - 0.5, (q, p)
         last = p
@@ -55,7 +60,7 @@ def test_color_444_and_420_gradient():
                     np.linspace(40, 210, h)[:, None].repeat(w, 1),
                     np.full((h, w), 90.0)], axis=-1).astype(np.uint8)
     for sub, rmse_max in (("4:4:4", 2.0), ("4:2:0", 3.0)):
-        dec = J.jpeg_decode(J.jpeg_encode(rgb, quality=90,
+        dec = J.jpeg_decode_strict(J.jpeg_encode(rgb, quality=90,
                                           subsampling=sub))
         assert dec.shape == rgb.shape
         err = np.sqrt(np.mean((dec.astype(float) - rgb) ** 2))
@@ -64,14 +69,14 @@ def test_color_444_and_420_gradient():
 
 def test_restart_intervals_are_pixel_exact():
     img = _structured()
-    base = J.jpeg_decode(J.jpeg_encode(img, quality=80))
+    base = J.jpeg_decode_strict(J.jpeg_encode(img, quality=80))
     for ri in (1, 2, 3, 5, 100):
         buf = J.jpeg_encode(img, quality=80, restart_interval=ri)
-        assert np.array_equal(J.jpeg_decode(buf), base), ri
+        assert np.array_equal(J.jpeg_decode_strict(buf), base), ri
     rgb = np.dstack([img[:32, :32]] * 3)
-    a = J.jpeg_decode(J.jpeg_encode(rgb, quality=85,
+    a = J.jpeg_decode_strict(J.jpeg_encode(rgb, quality=85,
                                     subsampling="4:2:0"))
-    b = J.jpeg_decode(J.jpeg_encode(rgb, quality=85,
+    b = J.jpeg_decode_strict(J.jpeg_encode(rgb, quality=85,
                                     subsampling="4:2:0",
                                     restart_interval=2))
     assert np.array_equal(a, b)
@@ -124,23 +129,26 @@ def test_hand_assembled_dc_only_stream():
 def test_corruption_sweep_never_crashes_or_misshapes():
     img = _structured(24, 32)
     buf = J.jpeg_encode(img, quality=70, restart_interval=2)
-    good = J.jpeg_decode(buf)
+    good = J.jpeg_decode_strict(buf)
     scan_at = buf.find(b"\xff\xda") + 10
     for pos in range(scan_at, len(buf) - 2, 3):
         c = bytearray(buf)
         c[pos] ^= 0x55
-        dec = J.jpeg_decode(bytes(c))
-        assert dec is None or dec.shape == good.shape, pos
+        try:
+            dec = J.jpeg_decode_strict(bytes(c))
+        except MALFORMED:
+            continue
+        assert dec.shape == good.shape, pos
 
 
 def test_decoder_rejects_malformed():
     img = _structured(16, 16)
     buf = J.jpeg_encode(img)
-    assert J.jpeg_decode(buf[: len(buf) // 2]) is None      # truncated
-    assert J.jpeg_decode(b"") is None
-    assert J.jpeg_decode(b"\xff\xd8\xff\xe0nonsense") is None
     prog = buf.replace(b"\xff\xc0", b"\xff\xc2", 1)          # SOF2
-    assert J.jpeg_decode(prog) is None
+    for bad in (buf[: len(buf) // 2], b"",                   # truncated
+                b"\xff\xd8\xff\xe0nonsense", prog):
+        with pytest.raises(MALFORMED):
+            J.jpeg_decode_strict(bad)
     with pytest.raises(J.JpegError):
         J.jpeg_encode(np.zeros((0, 4), np.uint8))
     with pytest.raises(J.JpegError):
@@ -153,10 +161,10 @@ def test_odd_dimensions_and_subsampled_edges():
     # non-multiple-of-8 (and odd, for 4:2:0) sizes roundtrip at the
     # declared dimensions
     img = _structured(19, 13)
-    dec = J.jpeg_decode(J.jpeg_encode(img, quality=90))
+    dec = J.jpeg_decode_strict(J.jpeg_encode(img, quality=90))
     assert dec.shape == (19, 13) and _psnr(dec, img) > 38
     rgb = np.dstack([img] * 3)
-    dec = J.jpeg_decode(J.jpeg_encode(rgb, quality=90,
+    dec = J.jpeg_decode_strict(J.jpeg_encode(rgb, quality=90,
                                       subsampling="4:2:0"))
     assert dec.shape == (19, 13, 3)
 
@@ -182,13 +190,14 @@ def test_multimodal_corpus_slot():
 
 
 def test_truncation_sweep_returns_none_everywhere():
-    # ADVICE r5: a DQT cut mid-table raised a numpy broadcast
-    # ValueError through jpeg_decode instead of the documented None.
-    # Sweep EVERY prefix length (the DQT lives early, so the cheap
+    # a DQT cut mid-table once raised a numpy broadcast error: every
+    # prefix must fail with a MALFORMED error (the media registry then
+    # reports the payload undecodable). Sweep EVERY prefix length (the DQT lives early, so the cheap
     # dense sweep below 200 bytes covers it; sparse beyond).
     img = (np.arange(24 * 16, dtype=np.uint8).reshape(24, 16) * 7) % 256
     enc = J.jpeg_encode(img, quality=80)
     lengths = list(range(2, min(len(enc), 220))) + \
         list(range(220, len(enc), 97))
     for k in lengths:
-        assert J.jpeg_decode(enc[:k]) is None, f"prefix {k} not None"
+        with pytest.raises(MALFORMED):
+            J.jpeg_decode_strict(enc[:k])

@@ -65,6 +65,16 @@ def test_kweight_batch_rows_independent():
 
 # ---- integrated loudness -------------------------------------------
 
+def _integrated(x_mat, fs):
+    # what loudness_stats computes per group: K-weight once, then gate
+    return loudness._integrated_from_weighted(loudness.k_weight(x_mat, fs),
+                                              fs)
+
+
+def _lra(x_mat, fs):
+    return loudness._lra_from_weighted(loudness.k_weight(x_mat, fs), fs)
+
+
 def _tone(fs, secs, f, amp):
     t = np.arange(int(secs * fs), dtype=np.float64) / fs
     return amp * np.sin(2 * np.pi * f * t)
@@ -76,7 +86,7 @@ def test_tone_loudness_matches_analytic_gain():
     # 1 kHz, so a full-scale 997 Hz sine reads ≈ -3.01 LUFS.
     for fs in (16000, 48000):
         x = _tone(fs, 2.0, 997.0, 0.5)
-        lufs, nb, ng = loudness.integrated_lufs(x[None, :], fs)
+        lufs, nb, ng = _integrated(x[None, :], fs)
         expected = (-0.691 + 10 * math.log10(0.5 ** 2 / 2)
                     + loudness.k_weight_gain_db(fs, 997.0))
         assert lufs[0] == pytest.approx(expected, abs=0.01)
@@ -90,8 +100,8 @@ def test_gating_discards_silence():
     fs = 16000
     x = np.zeros(10 * fs)
     x[:fs] = _tone(fs, 1.0, 997.0, 0.5)
-    gated, _, ng = loudness.integrated_lufs(x[None, :], fs)
-    tone_only, _, _ = loudness.integrated_lufs(_tone(fs, 1.0, 997.0, 0.5)[None, :], fs)
+    gated, _, ng = _integrated(x[None, :], fs)
+    tone_only, _, _ = _integrated(_tone(fs, 1.0, 997.0, 0.5)[None, :], fs)
     ungated_db = -0.691 + 10 * math.log10(
         np.mean(loudness.k_weight(x[None, :], fs)[0] ** 2))
     assert gated[0] == pytest.approx(tone_only[0], abs=1.0)
@@ -101,9 +111,9 @@ def test_gating_discards_silence():
 
 def test_silence_and_short_clips_undefined():
     fs = 16000
-    l_sil, nb, ng = loudness.integrated_lufs(np.zeros((1, 2 * fs)), fs)
+    l_sil, nb, ng = _integrated(np.zeros((1, 2 * fs)), fs)
     assert math.isnan(l_sil[0]) and ng[0] == 0 and nb[0] > 0
-    l_short, nb2, _ = loudness.integrated_lufs(
+    l_short, nb2, _ = _integrated(
         np.full((1, 1000), 0.3), fs)     # 62 ms < one 400 ms block
     assert math.isnan(l_short[0]) and nb2[0] == 0
 
@@ -112,7 +122,7 @@ def test_loudness_insensitive_to_sample_rate():
     # same tone, three rates: within a small design wobble (<0.1 LU)
     vals = []
     for fs in (8000, 16000, 48000):
-        lufs, _, _ = loudness.integrated_lufs(
+        lufs, _, _ = _integrated(
             _tone(fs, 1.5, 997.0, 0.25)[None, :], fs)
         vals.append(lufs[0])
     assert max(vals) - min(vals) < 0.1
@@ -172,7 +182,7 @@ def test_lra_two_level_tone_equals_level_difference(delta):
     fs = 8000
     a1 = 0.5
     x = _two_level(fs, 9.0, 997.0, a1, a1 / 10 ** (delta / 20))
-    lra, cnt = loudness.loudness_range(x[None, :], fs)
+    lra, cnt = _lra(x[None, :], fs)
     assert lra[0] == pytest.approx(delta, abs=0.05)
     assert cnt[0] == 7
 
@@ -180,7 +190,7 @@ def test_lra_two_level_tone_equals_level_difference(delta):
 def test_lra_constant_tone_is_zero():
     fs = 8000
     x = _tone(fs, 9.0, 997.0, 0.3)
-    lra, cnt = loudness.loudness_range(x[None, :], fs)
+    lra, cnt = _lra(x[None, :], fs)
     assert lra[0] == pytest.approx(0.0, abs=1e-3)
     assert cnt[0] == 7
 
@@ -189,13 +199,13 @@ def test_lra_undefined_and_degenerate_cases():
     fs = 8000
     x = _tone(fs, 9.0, 997.0, 0.3)
     # shorter than one 3 s short-term block: undefined
-    lra, cnt = loudness.loudness_range(x[None, : 2 * fs], fs)
+    lra, cnt = _lra(x[None, : 2 * fs], fs)
     assert math.isnan(lra[0]) and cnt[0] == 0
     # silence: every block under the -70 LKFS absolute gate
-    lra, cnt = loudness.loudness_range(np.zeros((1, 9 * fs)), fs)
+    lra, cnt = _lra(np.zeros((1, 9 * fs)), fs)
     assert math.isnan(lra[0]) and cnt[0] == 0
     # exactly one block: a single value has zero range
-    lra, cnt = loudness.loudness_range(x[None, : 3 * fs], fs)
+    lra, cnt = _lra(x[None, : 3 * fs], fs)
     assert lra[0] == 0.0 and cnt[0] == 1
 
 
@@ -208,7 +218,7 @@ def test_lra_relative_gate_saturates_extreme_swings():
     # end stays within the gate (pinned here so nobody "fixes" it)
     fs = 8000
     x = _two_level(fs, 9.0, 997.0, 0.7, 0.7 / 10 ** 1.25)
-    lra, cnt = loudness.loudness_range(x[None, :], fs)
+    lra, cnt = _lra(x[None, :], fs)
     assert cnt[0] == 5                       # the 2 pure-quiet blocks gated
     assert lra[0] < 15.0
 
@@ -224,7 +234,7 @@ def test_lra_matches_plain_loop_reference():
         t = np.arange(12 * fs, dtype=np.float64) / fs
         rows.append(np.repeat(amps, fs) * np.sin(2 * np.pi * 997.0 * t))
     mat = np.asarray(rows)
-    got, _ = loudness.loudness_range(mat, fs)
+    got, _ = _lra(mat, fs)
     y = loudness.k_weight(mat, fs)
     blk, hop = 3 * fs, fs
     for i in range(mat.shape[0]):

@@ -2,11 +2,22 @@
 Decoders are deterministic stubs (libs absent); the Spark-side schema,
 batching and violation surfaces are real."""
 
+import struct
+
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from canned_yaml_spark import multimodal as mm
+
+
+def encode_video(key: int, n_frames: int = 4, width: int = 4,
+                 height: int = 4) -> bytes:
+    """A VID1 stub container (the layout in multimodal's docstring)."""
+    n = n_frames * width * height
+    px = ((np.arange(n) * 11 + key * 17) % 256).astype(np.uint8)
+    return (b"VID1" + struct.pack("<HHH", n_frames, width, height)
+            + px.tobytes())
 
 
 @pytest.fixture(scope="module")
@@ -17,7 +28,7 @@ def media(spark):
             payload = mm.encode_image(k)
             kind = "image"
         elif k % 3 == 1:
-            payload = mm.encode_video(k)
+            payload = encode_video(k)
             kind = "video"
         else:
             payload = b"GARBAGE" + bytes([k])

@@ -1,6 +1,7 @@
 """Dangling-reference check (no Spark): every test a source comment
 cites, every tool a document cites, and every package function a
-document cites, exists.
+document cites, exists. Also the reverse: every top-level def in the
+package is named by the program, or is allowlisted with a reason.
 
 A comment that names `tests/test_x.py::test_y` is a claim that the
 behaviour it describes is pinned; a document that says "re-run
@@ -99,3 +100,40 @@ def test_cited_package_names_exist():
             if name not in names[module]:
                 missing.append(f"{doc}: {m.group(0)}")
     assert not missing, "dangling API references:\n" + "\n".join(missing)
+
+
+#: top-level package defs that nothing outside tests names, each with
+#: the reason it stays
+TEST_ONLY_DEFS = {
+    "pipeline.prep_run": "declared entry point: the training-prep run "
+                         "(validate, quarantine, dedup) for callers",
+    "loudness.k_weight_gain_db": "test oracle: the analytic K-weighting "
+                                 "gain the loudness tests expect",
+    "fixtures.golden_rule_counts": "test oracle: the injected-defect "
+                                   "counts of a fixture table",
+}
+
+
+def test_package_defs_are_named_or_allowlisted():
+    """Every top-level def in canned_yaml_spark/ is named somewhere in
+    the package, __spark_entry__.py, bench.py, tools/ or perfbench/,
+    or is in TEST_ONLY_DEFS. A name in a comment or docstring counts,
+    so this finds the defs nothing mentions at all. An allowlist entry
+    that the program now names must leave the list."""
+    callers = (sorted((ROOT / "canned_yaml_spark").glob("*.py"))
+               + [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+               + sorted((ROOT / "tools").rglob("*.py"))
+               + sorted((ROOT / "perfbench").rglob("*.py")))
+    text = "\n".join(p.read_text() for p in callers)
+    unnamed = {f"{p.stem}.{name}"
+               for p in (ROOT / "canned_yaml_spark").glob("*.py")
+               for name in _defined_names(p)
+               # the def line itself is the one mention
+               if len(re.findall(rf"\b{name}\b", text)) <= 1}
+    assert not unnamed - TEST_ONLY_DEFS.keys(), (
+        "package defs only tests reach: move an oracle to TEST_ONLY_DEFS "
+        "with its reason, or delete the def\n"
+        + "\n".join(sorted(unnamed - TEST_ONLY_DEFS.keys())))
+    assert not TEST_ONLY_DEFS.keys() - unnamed, (
+        "allowlisted defs the program now names: "
+        + ", ".join(sorted(TEST_ONLY_DEFS.keys() - unnamed)))
