@@ -22,13 +22,13 @@ Distributed shape (the part that must hold at 100 TB):
   (clip_id, array<long>); the FFT is ONE batched np.fft.rfft per
   equal-length group, not per clip.
 - candidate generation is the SAME banded plan as MinHash-LSH
-  (dedup.py:193): posexplode sub-fingerprints → self-join on
+  (dedup.near_dup_pairs): posexplode sub-fingerprints → self-join on
   (frame_idx, subfp) — a frame-aligned exact 32-bit match. At a few %
   bit-error rate the chance that NO frame of a true dup matches
   exactly is (1−0.97³²)^frames ≈ 0 for ≥10 frames, while unrelated
   clips collide on a full 32-bit word at random ≈ 2⁻³². One shuffle,
   keyed on (frame_idx, subfp); hot buckets (e.g. digital silence) are
-  capped on the join's own partitioning like dedup.lsh_candidate_pairs.
+  capped on the join's own partitioning like dedup.near_dup_pairs.
 - verification is pure JVM codegen: bit-error rate via
   zip_with + bit_count + aggregate over the two long arrays — no
   second Python crossing, no byte movement.
@@ -202,9 +202,7 @@ def near_dup_audio(clips: DataFrame,
     # stage then needs no joins back to the fingerprint table, so the
     # whole operator is ONE Arrow pass + one (frame_idx, subfp)-keyed
     # shuffle, and what shuffles is frames × fingerprint longs per
-    # clip — never payload bytes. At 10^12 clips you'd materialize the
-    # fingerprint table once and band on ids instead (the
-    # dedup.near_dup_pairs_storage plan shape).
+    # clip — never payload bytes.
     probes = (fps.filter(F.col("fp").isNotNull())
                  .select("clip_id", "fp",
                          F.posexplode("fp").alias("frame_idx", "subfp")))

@@ -118,58 +118,6 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
                      .alias("sig")))
 
 
-def lsh_band_buckets(docs: DataFrame,
-                     bands: int = LSH_BANDS) -> DataFrame:
-    """(doc_id, band, bucket): LSH banding of the minhash signatures —
-    bucket = hash of the band's signature slice."""
-    rows_per_band = MINHASH_K // bands
-    sigs = minhash_signatures(docs)
-    # sig is a materialized attribute here, cheap to reference from
-    # the banding lambda
-    return sigs.select(
-        "doc_id",
-        F.explode(F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.struct(
-                b.alias("band"),
-                F.xxhash64(F.slice(F.col("sig"), b * rows_per_band + 1,
-                                   rows_per_band), F.lit(42))
-                 .alias("bucket")))).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
-
-
-def lsh_candidate_pairs(docs: DataFrame, bands: int = LSH_BANDS,
-                        max_bucket: int = 4096) -> DataFrame:
-    """Candidate near-dup pairs via LSH banding: explode signatures
-    into (band, hash-of-band-slice) buckets, self-join within bucket.
-
-    Skew control: a bucket of size b yields b² candidate rows, so one
-    ultra-hot bucket (boilerplate text hashing identically across a
-    band) can dominate the whole stage. Buckets larger than
-    `max_bucket` are excluded — a doc pair sharing ONLY ultra-hot
-    buckets is dropped, which affects recall, not precision (output is
-    still exact-Jaccard verified); at default settings a true near-dup
-    pair (j ≥ 0.8) co-occurs in several independent bands, so the cap
-    only bites on pathological boilerplate. The bucket-size count runs
-    as a window over the SAME (band, bucket) partitioning the self-join
-    needs, so the cap adds no extra shuffle and the minhash pass stays
-    single (exchange reuse covers the self-join's two sides).
-    """
-    from pyspark.sql import Window
-    bb = lsh_band_buckets(docs, bands)
-    w = Window.partitionBy("band", "bucket")
-    kept = (bb.withColumn("_bsz", F.count(F.lit(1)).over(w))
-              .filter(F.col("_bsz") <= max_bucket)
-              .drop("_bsz"))
-    a, b = kept.alias("a"), kept.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .select(F.col("a.doc_id").alias("doc_a"),
-                     F.col("b.doc_id").alias("doc_b"))
-             .distinct())
-
-
 #: signature-estimate prefilter margin: Hoeffding gives
 #: P(est < j − δ) ≤ exp(−2Kδ²); δ = 0.27 at K = 130 bounds the
 #: per-true-pair loss below 1e-8, so the prefilter is lossless at any
@@ -191,9 +139,9 @@ def near_dup_pairs(docs: DataFrame,
 
     Pipeline (one minhash pass, one banding shuffle):
     1. signatures are carried THROUGH the band join, so the candidate
-       stage needs no second signature computation or join (at 10^12
-       docs you would instead materialize the signature table once and
-       band on ids — same plan shape, storage-backed);
+       stage needs no second signature computation or join
+       (near_dup_pairs_incremental bands a stored signature table
+       instead, for a corpus delta);
     2. candidates are prefiltered by the minhash Jaccard ESTIMATE
        (|sig_a ∩ sig_b| / K via native array_intersect — no
        interpreted per-slot lambda), which is lossless above
@@ -206,17 +154,8 @@ def near_dup_pairs(docs: DataFrame,
     from pyspark.sql import Window
     rows_per_band = MINHASH_K // bands
     sigs = minhash_signatures(docs)
-    # slot-tagged signature for the native set-intersect estimate: the
-    # slot id replaces the hash's low 7 bits, keeping the element type
-    # atomic (array<long>) — array_intersect on struct elements falls
-    # back to Spark's O(K²)-per-pair generic path (measured 55 s vs
-    # ~4 s for this stage). Masking can only INFLATE the estimate
-    # (P ≈ 2⁻⁵⁷ per slot pair), so the prefilter stays lossless.
-    sigx = F.transform(F.col("sig"),
-                       lambda x, i: x.bitwiseAND(F.lit(-128).cast("long"))
-                                     .bitwiseOR(i.cast("long")))
     bb = sigs.select(
-        "doc_id", sigx.alias("sigx"),
+        "doc_id", _sigx().alias("sigx"),
         F.explode(F.transform(
             F.sequence(F.lit(0), F.lit(bands - 1)),
             lambda b: F.struct(
@@ -259,23 +198,17 @@ def _exact_verify(pre: DataFrame, docs: DataFrame,
              .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard")))
 
 
-def _sigx(col: str = "sig"):
-    """Slot-tagged signature (see near_dup_pairs step 2): atomic
-    array<long> elements keep array_intersect on the native fast path."""
-    return F.transform(F.col(col),
+def _sigx():
+    """Slot-tagged signature for the native set-intersect estimate
+    (near_dup_pairs step 2): the slot id replaces the hash's low 7
+    bits, keeping the element type atomic (array<long>) —
+    array_intersect on struct elements falls back to Spark's
+    O(K²)-per-pair generic path (measured 55 s vs ~4 s for this
+    stage). Masking can only INFLATE the estimate (P ≈ 2⁻⁵⁷ per slot
+    pair), so the prefilter stays lossless."""
+    return F.transform(F.col("sig"),
                        lambda x, i: x.bitwiseAND(F.lit(-128).cast("long"))
                                      .bitwiseOR(i.cast("long")))
-
-
-def materialize_signatures(docs: DataFrame, path: str) -> DataFrame:
-    """Write the minhash signature table (doc_id, sig array<long>) to
-    parquet ONCE and read it back — the 10^12-doc posture named in
-    near_dup_pairs step 1: every downstream consumer (banding,
-    prefilter, incremental re-dedup of a corpus delta) scans the
-    stored table instead of recomputing the shingle pass."""
-    spark = docs.sparkSession
-    minhash_signatures(docs).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
 
 
 def _band_sigs(sigs: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
@@ -292,45 +225,6 @@ def _band_sigs(sigs: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
                                    rows_per_band), F.lit(42))
                  .alias("bucket")))).alias("b2")
     ).select("doc_id", "b2.band", "b2.bucket")
-
-
-def near_dup_pairs_storage(docs: DataFrame, sig_store: DataFrame,
-                           threshold: float = JACCARD_THRESHOLD,
-                           bands: int = LSH_BANDS,
-                           max_bucket: int = 4096) -> DataFrame:
-    """Storage-backed near-dup: identical output contract to
-    near_dup_pairs, but the banding shuffle carries ONLY
-    (doc_id, band, bucket) — ≈24 bytes/row instead of the ≈1 KB
-    slot-tagged signature — and signatures are joined back from the
-    materialized `sig_store` (materialize_signatures) solely for the
-    estimate prefilter. At 10^12 docs this divides the band-stage
-    shuffle width by ~40× (measured at sandbox scale: BENCH/LSH.md)
-    at the price of one extra join against the signature table, which
-    in production is bucketed by doc_id → zero-exchange.
-    """
-    from pyspark.sql import Window
-    bb = _band_sigs(sig_store, bands)
-    w = Window.partitionBy("band", "bucket")
-    kept = (bb.withColumn("_bsz", F.count(F.lit(1)).over(w))
-              .filter(F.col("_bsz") <= max_bucket))
-    a, b = kept.alias("a"), kept.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .select(F.col("a.doc_id").alias("doc_a"),
-                     F.col("b.doc_id").alias("doc_b"))
-             .distinct())
-    sx = sig_store.select("doc_id", _sigx("sig").alias("sigx"))
-    est = (F.size(F.array_intersect(F.col("sigx_a"), F.col("sigx_b")))
-           / F.lit(MINHASH_K))
-    pre = (cand
-           .join(sx.withColumnRenamed("doc_id", "doc_a")
-                   .withColumnRenamed("sigx", "sigx_a"), "doc_a")
-           .join(sx.withColumnRenamed("doc_id", "doc_b")
-                   .withColumnRenamed("sigx", "sigx_b"), "doc_b")
-           .filter(est >= F.lit(threshold - _EST_MARGIN))
-           .select("doc_a", "doc_b"))
-    return _exact_verify(pre, docs, threshold)
 
 
 def near_dup_pairs_incremental(delta_docs: DataFrame,
@@ -361,8 +255,7 @@ def near_dup_pairs_incremental(delta_docs: DataFrame,
        exact-verify against the text of both tables.
 
     To evolve the store afterwards, append minhash_signatures(delta)
-    (or re-run materialize_signatures on the union). `delta_docs` ids
-    must not collide with stored ids.
+    to it. `delta_docs` ids must not collide with stored ids.
     """
     from pyspark.sql import Window
     delta_sig = minhash_signatures(delta_docs)
@@ -385,7 +278,7 @@ def near_dup_pairs_incremental(delta_docs: DataFrame,
                      F.col("b.doc_id").alias("doc_b"))
              .distinct())
     all_sigs = sig_store.unionByName(delta_sig)
-    sx = all_sigs.select("doc_id", _sigx("sig").alias("sigx"))
+    sx = all_sigs.select("doc_id", _sigx().alias("sigx"))
     est = (F.size(F.array_intersect(F.col("sigx_a"), F.col("sigx_b")))
            / F.lit(MINHASH_K))
     pre = (cand
@@ -398,67 +291,6 @@ def near_dup_pairs_incremental(delta_docs: DataFrame,
     all_docs = corpus_docs.select("doc_id", "text") \
         .unionByName(delta_docs.select("doc_id", "text"))
     return _exact_verify(pre, all_docs, threshold)
-
-
-# ------------------------------------------- sig-store lifecycle
-def _n_data_files(spark, path: str) -> int:
-    """Count parquet data files under `path` (storage-agnostic via the
-    Hadoop FS API; _SUCCESS/_metadata sidecars excluded). Bounded: one
-    listing, no data read."""
-    jvm = spark._jvm                                   # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()            # noqa: SLF001
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
-        return 0
-    it, n = fs.listFiles(p, True), 0
-    while it.hasNext():
-        f = it.next()
-        if not f.getPath().getName().startswith("_"):
-            n += 1
-    return n
-
-
-def compact_sig_store(spark, path: str, n_files: int = 32) -> dict:
-    """Re-cluster a fragmented signature store into `n_files` files
-    hash-partitioned + sorted by doc_id, atomically swapping the
-    directory (write aside → rename away → rename in → drop old).
-
-    Why it matters at 10^12 docs: every consumer of the store
-    (near_dup_pairs_storage's sig join, the incremental path's band
-    projection + touched-bucket semi-join) scans or joins it by
-    doc_id; after N delta appends the store holds N× small files, so
-    those scans pay N× open/footer overhead and the doc_id join loses
-    any clustering. Compaction is ONE shuffle of (doc_id, sig) rows —
-    ~1 KB/row, no wide state — and restores one sorted run per
-    partition. In an Iceberg deployment this maps to
-    rewrite_data_files on the sig table; results of every dedup
-    operator are invariant across it (tests/test_dedup.py asserts
-    incremental output identical before/after).
-
-    Returns {"files_before": int, "files_after": int} — the read-
-    amplification figure BENCH/LSH.md records."""
-    before = _n_data_files(spark, path)
-    tmp = path.rstrip("/") + "__compacting"
-    old = path.rstrip("/") + "__pre_compact"
-    jvm = spark._jvm                                   # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()            # noqa: SLF001
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(conf)
-    fs.delete(hpath(tmp), True)
-    (spark.read.parquet(path)
-          .repartition(n_files, F.col("doc_id"))
-          .sortWithinPartitions("doc_id")
-          .write.mode("overwrite").parquet(tmp))
-    fs.delete(hpath(old), True)
-    if not fs.rename(hpath(path), hpath(old)):
-        raise IOError(f"compact_sig_store: cannot move {path} aside")
-    if not fs.rename(hpath(tmp), hpath(path)):
-        fs.rename(hpath(old), hpath(path))     # roll back, store intact
-        raise IOError(f"compact_sig_store: cannot swap in {tmp}")
-    fs.delete(hpath(old), True)
-    return {"files_before": before,
-            "files_after": _n_data_files(spark, path)}
 
 
 # ------------------------------------------------------------- SimHash
@@ -538,7 +370,7 @@ def embedding_near_dup_candidates(emb: DataFrame, bits: int = 8,
                                   seed: int = 42,
                                   threshold: float = 0.95) -> DataFrame:
     """Candidate vector pairs via L independent sign-bit LSH tables —
-    the embedding analog of MinHash banding (lsh_candidate_pairs).
+    the embedding analog of MinHash banding (near_dup_pairs).
 
     Each vector lands in `tables` buckets (one per table of `bits`
     random hyperplanes); candidates are same-bucket pairs in ANY table.

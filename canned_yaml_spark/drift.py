@@ -272,88 +272,6 @@ def _ks_2samp_weighted(vals: np.ndarray, cnts: np.ndarray,
     return d, float(min(max(p, 0.0), 1.0)), int(n)
 
 
-def ks_per_partition_sql(df: DataFrame, check: DriftCheck,
-                         reference: np.ndarray,
-                         part_col: str = "part_id") -> DataFrame:
-    """(part_id, ks_stat, p_value, n) — EXACT per-partition KS,
-    entirely inside whole-stage codegen: no Python stage at all.
-
-    Scale shape: the raw column is pre-aggregated to (part_id, value,
-    cnt) — one hash aggregation with map-side combine — so everything
-    downstream runs on ≤ parts × |values| rows (measure columns like
-    dur_ms have bounded cardinality; 10^12 rows reduce to that grid).
-    Both ECDFs are built with ONE window cumsum over the union of
-    corpus and reference sample points (the same construction the
-    DuckDB oracle uses, oracle.sql_ks_drift), and the Kolmogorov
-    p-value — theta form below t=1.18, 100-term alternating series
-    above — is a higher-order-function fold, so the whole statistic
-    is JVM column arithmetic. The applyInPandas formulation this
-    replaces (ks_per_partition_pandas) paid a per-action Python-stage
-    spin-up that did not scale with cores (BENCH/PROFILE.md);
-    numerically the two agree to float precision
-    (tests/test_drift.py).
-
-    ``reference`` is a bounded driver-side sample (≤ ~100k points),
-    shipped once as a pre-aggregated (value, count) table.
-    """
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    ref = np.asarray(reference, dtype=np.float64)
-    rv, rc = np.unique(ref, return_counts=True)
-    r_total = int(ref.size)
-    ref_df = spark.createDataFrame(
-        [(float(v), int(c)) for v, c in zip(rv, rc)], "v double, c_r long")
-    col = check.column
-
-    a = (df.filter(F.col(col).isNotNull())
-           .select(F.col(part_col).alias("part_id"),
-                   F.col(col).cast("double").alias("v"))
-           .groupBy("part_id", "v")
-           .agg(F.count(F.lit(1)).alias("c_a")))
-    parts = a.select("part_id").distinct()
-    pts = (a.withColumn("c_r", F.lit(0).cast("long"))
-            .unionByName(parts.join(F.broadcast(ref_df))
-                              .select("part_id", "v",
-                                      F.lit(0).cast("long").alias("c_a"),
-                                      "c_r"))
-            .groupBy("part_id", "v")
-            .agg(F.sum("c_a").alias("c_a"), F.sum("c_r").alias("c_r")))
-    w_cum = (Window.partitionBy("part_id").orderBy("v")
-                   .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_all = (Window.partitionBy("part_id")
-                   .rowsBetween(Window.unboundedPreceding,
-                                Window.unboundedFollowing))
-    e = pts.select(
-        "part_id",
-        F.sum("c_a").over(w_cum).alias("cum_a"),
-        F.sum("c_r").over(w_cum).alias("cum_r"),
-        F.sum("c_a").over(w_all).alias("n"))
-    agg = (e.groupBy("part_id", "n")
-            .agg(F.max(F.abs(F.col("cum_a") / F.col("n")
-                             - F.col("cum_r") / F.lit(float(r_total))))
-                  .alias("ks_stat")))
-
-    # Kolmogorov Q(t), t = (en + 0.12 + 0.11/en)·d — same two
-    # formulations as the scalar helpers below
-    en = F.sqrt(F.col("n") * r_total / (F.col("n") + F.lit(r_total)))
-    t = (en + F.lit(0.12) + F.lit(0.11) / en) * F.col("ks_stat")
-    theta_w = F.exp(F.lit(-math.pi ** 2 / 8.0) / (t * t))
-    p_theta = (F.lit(1.0) - F.lit(math.sqrt(2.0 * math.pi)) / t
-               * (theta_w + F.pow(theta_w, 9) + F.pow(theta_w, 25)))
-    p_series = F.lit(2.0) * F.aggregate(
-        F.sequence(F.lit(1), F.lit(100)), F.lit(0.0),
-        lambda acc, k: acc + F.pow(F.lit(-1.0), k - 1)
-        * F.exp(F.lit(-2.0) * (k.cast("double") * t)
-                * (k.cast("double") * t)))
-    p = (F.when(t < 1e-9, F.lit(1.0))
-          .when(t < 1.18, p_theta)
-          .otherwise(p_series))
-    p = F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0))
-    return agg.select("part_id", "ks_stat", p.alias("p_value"),
-                      F.col("n").cast("long").alias("n"))
-
-
 def ks_per_partition(df: DataFrame, check: DriftCheck,
                      reference: np.ndarray,
                      part_col: str = "part_id") -> DataFrame:
@@ -362,13 +280,10 @@ def ks_per_partition(df: DataFrame, check: DriftCheck,
     statistic through applyInPandas (groups are ≤|distinct values| rows
     after the map-side combine, so the Python stage is tiny).
 
-    This is the DEFAULT because it was measured faster than the
-    all-codegen formulation (ks_per_partition_sql) at every scale and
-    core count tried — the window/cross-join stages the SQL form needs
-    cost more than the Python-stage spin-up they avoid
-    (BENCH/REGRESSION.md q7). Both agree to 1e-12
-    (tests/test_drift.py); use the SQL form where Python workers are
-    unavailable or undesirable.
+    Not all-codegen: a window-ECDF formulation with no Python stage was
+    measured slower at every scale and core count tried — its
+    window/cross-join stages cost more than the Python-stage spin-up
+    they avoid (BENCH/REGRESSION.md q7).
     """
     ref = np.asarray(reference, dtype=np.float64)
     col = check.column

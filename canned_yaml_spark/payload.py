@@ -226,8 +226,12 @@ def payload_violations(clips: DataFrame, clips_ref: DataFrame,
         # intact but whose codec column was tampered to another
         # decodable codec must fall through to the decode path (where
         # it fails exactly as the eager plan fails it). coalesce()
-        # keeps the left==right equalities out of the join keys
-        # (see payload_snr_stats below) and maps NULL certs to False.
+        # maps NULL certs to False and keeps the left==right
+        # equalities out of the join keys: the optimizer extracts a
+        # bare left==right predicate above a join into an extra join
+        # key, which turns the clip_id distribution into a full
+        # shuffle of payload-sized rows (measured 22 s → 61 s+ at
+        # 38.4M rows, BENCH/PROFILE.md).
         joined = probe.join(
             clips_ref.select("clip_id", "codec_ref",
                              "enc_hash", "enc_len").hint("SHUFFLE_HASH"),
@@ -602,63 +606,3 @@ def audio_stats_violations(clips: DataFrame, check,
         F.lit(rule_id).alias("rule_id"),
         F.lit(severity).alias("severity"),
         "message")
-
-
-def payload_snr_stats(clips: DataFrame, clips_ref: DataFrame,
-                      check: PayloadCheck,
-                      part_col: str = "part_id") -> DataFrame:
-    """Per-partition SNR profile (metrics table support): min/avg SNR and
-    decode-failure count. Bit-exact pcm rows are proven by the JVM fast
-    path (SNR +inf → recorded NULL, fail 0 — the same contract as the
-    Python path, whose pandas NaN becomes NULL through Arrow) and never
-    cross into Python."""
-    joined = clips.select(
-        F.col("clip_id"), F.col(part_col).alias("part_id"),
-        F.col(check.column).alias("_bytes"), F.col("codec").alias("_codec"),
-    ).join(clips_ref.select("clip_id", F.col("pcm_ref").alias("_pcm_ref")),
-           "clip_id", "inner")
-    # The byte equality is wrapped in coalesce() so the optimizer does
-    # NOT extract it into the join condition: a bare left==right
-    # predicate above a join becomes an extra join key, the required
-    # distribution turns into hash(clip_id, bytes), and the bucketed
-    # zero-exchange layout silently degrades to a full shuffle of
-    # payload-sized rows (measured: 22s → 61s+ at 38.4M rows,
-    # BENCH/PROFILE.md). Semantically identical under the isNotNull
-    # conjunct. payload_violations is safe as-is — its equality only
-    # appears under a negation, which is not extractable.
-    fast_ok = (F.col("_codec") == F.lit("pcm_s16le")) & \
-        F.col("_bytes").isNotNull() & \
-        F.coalesce(F.col("_bytes") == F.col("_pcm_ref"), F.lit(False))
-    fast_rows = joined.filter(fast_ok).select(
-        "part_id", F.lit(None).cast("double").alias("snr"),
-        F.lit(0).alias("decode_fail"))
-
-    def snr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            codecs = pdf["_codec"].to_numpy()
-            payloads = pdf["_bytes"].to_numpy()
-            raw_refs = pdf["_pcm_ref"].to_numpy()
-            decs = [None] * n
-            refs = [None] * n
-            for i in range(n):
-                decs[i] = decode(payloads[i], codecs[i])
-                refs[i] = _ref_pcm(raw_refs[i])
-            snr = np.full(n, -np.inf)
-            _batch_snr(decs, refs, snr)
-            snr = np.where(np.isfinite(snr), snr, np.nan)
-            yield pd.DataFrame({
-                "part_id": pdf["part_id"].astype("int32"),
-                "snr": snr,
-                "decode_fail": pd.array(
-                    [int(d is None) for d in decs], dtype="int32")})
-
-    per_row = (joined.filter(~fast_ok)
-               .mapInPandas(snr_batches,
-                            "part_id int, snr double, decode_fail int")
-               .unionByName(fast_rows))
-    return (per_row.groupBy("part_id")
-            .agg(F.count(F.lit(1)).alias("n_payloads"),
-                 F.min("snr").alias("snr_min"),
-                 F.avg("snr").alias("snr_avg"),
-                 F.sum("decode_fail").alias("n_decode_fail")))

@@ -12,9 +12,8 @@ a streaming DataFrame — this module only adds the streaming plumbing:
   micro-batch of arrival.
 - `windowed_verdicts`: per event-time window × partition verdict
   aggregation with a watermark for late clips — the streaming analog
-  of the per-partition verdict table.
-- `running_verdicts`: a running per-partition verdict kept in
-  explicit state that is evicted after a timeout.
+  of the per-partition verdict table. The watermark is what evicts
+  its state, so the state store stays bounded on an unbounded stream.
 - `validate_stream_with_lineage`: foreachBatch sink that commits each
   micro-batch with the batch engine (job.all_violations, then
   checkpoint.commit) into out_dir/stream_id=<sid>/batch_id=<n>/ —
@@ -51,61 +50,6 @@ def validate_stream(stream_df: DataFrame, suite: CheckSuite,
              .option("path", out_dir)
              .option("checkpointLocation", checkpoint_dir)
              .outputMode("append"))
-
-
-def running_verdicts(stream_df: DataFrame, suite: CheckSuite,
-                     part_col: str = "part_id",
-                     state_timeout_ms: int = 600_000) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): RUNNING
-    per-partition verdict across micro-batches.
-
-    Unlike windowed_verdicts (built-in windowed agg), this keeps an
-    explicit per-partition state tuple (n_rows, n_violations, max_sev)
-    that accumulates over the stream's lifetime and is EVICTED after
-    `state_timeout_ms` without new data for that partition — the
-    late-data state-eviction pattern for unbounded key spaces (at
-    10^12 clips the partition key space is unbounded over time; state
-    must age out or the store grows forever). Emits one updated verdict
-    row per partition per micro-batch (update output mode), plus a
-    final `evicted=true` row when the state times out.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    pre = stream_df.select(
-        F.col(part_col).alias("part_id"),
-        violation_count(suite.row_checks).alias("n_viol"),
-        max_violation_severity(suite.row_checks).alias("max_sev"))
-
-    def update(key, pdfs, state):
-        import pandas as pd
-        n_rows, n_violations, max_sev = (state.get if state.exists
-                                         else (0, 0, -1))
-        if state.hasTimedOut:
-            state.remove()
-            evicted = True
-        else:
-            for pdf in pdfs:
-                n_rows += len(pdf)
-                n_violations += int(pdf["n_viol"].sum())
-                if len(pdf):
-                    max_sev = max(max_sev, int(pdf["max_sev"].max()))
-            state.update((n_rows, n_violations, max_sev))
-            state.setTimeoutDuration(state_timeout_ms)
-            evicted = False
-        yield pd.DataFrame({
-            "part_id": [int(key[0])],
-            "n_rows": [n_rows],
-            "n_violations": [n_violations],
-            "pass": [max_sev < int(Severity.ERROR)],
-            "evicted": [evicted]})
-
-    return pre.groupBy("part_id").applyInPandasWithState(
-        update,
-        outputStructType="part_id int, n_rows long, n_violations long, "
-                         "pass boolean, evicted boolean",
-        stateStructType="n_rows long, n_violations long, max_sev int",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout)
 
 
 def windowed_verdicts(stream_df: DataFrame, suite: CheckSuite,

@@ -15,6 +15,18 @@ from canned_yaml_spark.session import get_spark
 N_SMALL = 2000
 
 
+def run_available_now(writer, timeout: float = 120) -> None:
+    """Start `writer` with Trigger.AvailableNow, require the query to
+    finish within `timeout` s, and stop it in any case, so that no
+    stream query outlives its test."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        assert q.awaitTermination(timeout), (
+            f"stream query still active after {timeout} s")
+    finally:
+        q.stop()
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("canned_yaml_spark_tests", cores=8, shuffle_partitions=8)

@@ -3,6 +3,7 @@
 import pyspark.sql.functions as F
 
 from canned_yaml_spark import checkpoint, fixtures, job, pipeline
+from tests.conftest import run_available_now
 
 
 def test_resume_skips_completed_and_is_idempotent(spark, tmp_path):
@@ -294,10 +295,9 @@ def test_run_executes_each_family_once(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "stream_out")
 
     def one_batch():
-        (streaming.validate_stream_with_lineage(
+        run_available_now(streaming.validate_stream_with_lineage(
             spark.readStream.schema(static.schema).parquet(src), suite,
-            out, str(tmp_path / "stream_chk"), "once", **kw)
-         .trigger(availableNow=True).start().awaitTermination(120))
+            out, str(tmp_path / "stream_chk"), "once", **kw))
 
     during_batch = ticks_of(one_batch)
     assert len(plans) == 1

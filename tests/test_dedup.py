@@ -61,15 +61,6 @@ def test_near_dup_pairs_catch_injected(spark, docs, docs2):
     assert all(r.jaccard >= dedup.JACCARD_THRESHOLD for r in pairs)
 
 
-def test_lsh_is_pruner_not_filter(spark, docs2):
-    # candidates ⊇ verified pairs
-    cands = {(r.doc_a, r.doc_b)
-             for r in dedup.lsh_candidate_pairs(docs2).collect()}
-    verified = {(r.doc_a, r.doc_b)
-                for r in dedup.near_dup_pairs(docs2).collect()}
-    assert verified <= cands
-
-
 def test_simhash_exact_clones_collide(spark, docs, docs2):
     groups = dedup.simhash_dup_groups(docs2).collect()
     members = set()
@@ -135,24 +126,14 @@ def test_embedding_candidate_volume_bounded(spark):
     assert n_cand < (n * (n - 1) // 2) * 0.25, (n_cand, n)
 
 
-def test_near_dup_storage_path_matches(spark, docs2, tmp_path):
-    # storage-backed path (materialized signature table, band on ids)
-    # must produce the identical verified pair set
-    want = {(r.doc_a, r.doc_b, r.jaccard)
-            for r in dedup.near_dup_pairs(docs2).collect()}
-    sig = dedup.materialize_signatures(docs2, str(tmp_path / "sigs"))
-    got = {(r.doc_a, r.doc_b, r.jaccard)
-           for r in dedup.near_dup_pairs_storage(docs2, sig).collect()}
-    assert got == want
-
-
-def test_near_dup_incremental_matches_full(spark, docs, docs2, tmp_path):
+def test_near_dup_incremental_matches_full(spark, docs, docs2):
     # delta-dedup against the stored signature table must equal a full
-    # re-dedup of corpus+delta RESTRICTED to pairs touching the delta
+    # re-dedup of corpus+delta RESTRICTED to pairs touching the delta;
+    # the store is built as the near_dup_delta query builds it
     delta = docs2.join(docs.select("doc_id"), "doc_id", "left_anti")
     delta_ids = {r.doc_id for r in delta.select("doc_id").collect()}
     assert delta_ids                            # injection produced a delta
-    sig_corpus = dedup.materialize_signatures(docs, str(tmp_path / "sc"))
+    sig_corpus = dedup.minhash_signatures(docs)
     got = {(r.doc_a, r.doc_b, r.jaccard)
            for r in dedup.near_dup_pairs_incremental(
                delta, docs, sig_corpus).collect()}
@@ -160,6 +141,20 @@ def test_near_dup_incremental_matches_full(spark, docs, docs2, tmp_path):
             for r in dedup.near_dup_pairs(docs2).collect()}
     want = {p for p in full if p[0] in delta_ids or p[1] in delta_ids}
     assert got == want and got                  # non-empty, exactly equal
+
+
+def test_near_dup_bucket_cap_prunes(spark, docs, docs2):
+    # max_bucket=1 keeps only singleton (band, bucket) buckets, so the
+    # band self-join has no candidate left on either engine path; the
+    # default cap still finds the injected clones
+    assert dedup.near_dup_pairs(docs2, max_bucket=1).count() == 0
+    got = {(r.doc_a, r.doc_b)
+           for r in dedup.near_dup_pairs(docs2).collect()}
+    assert {(0, 1_000_000), (0, 2_000_000)} <= got
+    delta = docs2.join(docs.select("doc_id"), "doc_id", "left_anti")
+    assert dedup.near_dup_pairs_incremental(
+        delta, docs, dedup.minhash_signatures(docs),
+        max_bucket=1).count() == 0
 
 
 def test_ann_multiprobe_improves_recall(spark):
@@ -264,53 +259,6 @@ def test_ivf_margin_probing(spark):
                   .agg(F.avg("recall")).first()[0])
     assert rec_mid >= rec_single
     emb.unpersist(); indexed.unpersist()
-
-
-def test_sig_store_lifecycle_compaction(spark, docs, docs2, tmp_path):
-    # ROADMAP 4 / VERDICT r4 item 5: after N delta appends the
-    # signature store fragments; compaction (re-cluster by doc_id)
-    # must cut the file count while leaving every dedup result
-    # bit-identical.
-    path = str(tmp_path / "sig_life")
-    delta = docs2.join(docs.select("doc_id"), "doc_id", "left_anti") \
-                 .cache()
-    dedup.materialize_signatures(docs, path)
-    # two fragmenting appends: hash-split halves of the delta
-    h = F.abs(F.xxhash64("doc_id")) % 2
-    for half in (0, 1):       # each append: signatures of the delta only
-        dedup.minhash_signatures(delta.filter(h == half)) \
-             .write.mode("append").parquet(path)
-    store = spark.read.parquet(path)
-    # appended store holds exactly the from-scratch signature rows
-    assert store.count() == docs2.count()
-
-    want_pairs = {(r.doc_a, r.doc_b, r.jaccard)
-                  for r in dedup.near_dup_pairs_storage(docs2, store)
-                  .collect()}
-    # a second delta: re-keyed copies of every 7th corpus doc —
-    # guaranteed near-dups of their originals, ids disjoint from store
-    # (docs ids < 1M, injected ids offset by 1M, these by 2M)
-    delta2 = (docs.filter(F.abs(F.xxhash64("doc_id")) % 7 == 0)
-                  .withColumn("doc_id", F.col("doc_id") + F.lit(2_000_000)))
-    want_inc = {(r.doc_a, r.doc_b, r.jaccard)
-                for r in dedup.near_dup_pairs_incremental(
-                    delta2, docs2, store).collect()}
-
-    stats = dedup.compact_sig_store(spark, path, n_files=2)
-    assert stats["files_before"] > stats["files_after"]
-    assert stats["files_after"] <= 2
-
-    store_c = spark.read.parquet(path)
-    assert store_c.count() == docs2.count()
-    got_pairs = {(r.doc_a, r.doc_b, r.jaccard)
-                 for r in dedup.near_dup_pairs_storage(docs2, store_c)
-                 .collect()}
-    got_inc = {(r.doc_a, r.doc_b, r.jaccard)
-               for r in dedup.near_dup_pairs_incremental(
-                   delta2, docs2, store_c).collect()}
-    assert got_pairs == want_pairs and want_pairs
-    assert got_inc == want_inc and want_inc
-    delta.unpersist()
 
 
 def test_duckdb_xxh64_matches_spark(spark):

@@ -88,22 +88,23 @@ def test_weighted_ks_equals_raw():
         assert abs(d1 - d2) < 1e-12 and abs(p1 - p2) < 1e-12 and n == a.size
 
 
-def test_ks_jvm_matches_pandas(spark, clips_mid, suite):
-    # the codegen KS (windows + HOF p-value) must reproduce the
-    # applyInPandas/numpy statistic to float precision
-    import numpy as np
-    from canned_yaml_spark import drift, fixtures
+def test_ks_per_partition_matches_raw_oracle(spark, clips_mid, suite):
+    # the engine KS (pre-aggregated grid + applyInPandas) must equal the
+    # raw two-sample statistic of each partition's values
     dc = suite.drift_checks[0]
     ref = fixtures.reference_dur_sample()
-    jvm = {r.part_id: r for r in
-           drift.ks_per_partition_sql(clips_mid, dc, ref).collect()}
-    pdv = {r.part_id: r for r in
+    got = {r.part_id: r for r in
            drift.ks_per_partition(clips_mid, dc, ref).collect()}
-    assert set(jvm) == set(pdv)
-    for pid in jvm:
-        assert jvm[pid].n == pdv[pid].n
-        assert abs(jvm[pid].ks_stat - pdv[pid].ks_stat) < 1e-12
-        assert abs(jvm[pid].p_value - pdv[pid].p_value) < 1e-9
+    vals: dict[int, list[float]] = {}
+    for r in (clips_mid.filter(F.col(dc.column).isNotNull())
+                       .select("part_id", dc.column).collect()):
+        vals.setdefault(r.part_id, []).append(float(r[dc.column]))
+    assert set(got) == set(vals)
+    for pid, v in vals.items():
+        d, p = drift._ks_2samp(np.asarray(v), np.asarray(ref, dtype=float))
+        assert got[pid].n == len(v)
+        assert abs(got[pid].ks_stat - d) < 1e-12
+        assert abs(got[pid].p_value - p) < 1e-9
 
 
 # --------------------------------------------------------------- chi2

@@ -1,7 +1,8 @@
 """Dangling-reference check (no Spark): every test a source comment
 cites, every tool a document cites, and every package function a
 document cites, exists. Also the reverse: every top-level def in the
-package is named by the program, or is allowlisted with a reason.
+package is reached by the program's code, or is allowlisted with a
+reason.
 
 A comment that names `tests/test_x.py::test_y` is a claim that the
 behaviour it describes is pinned; a document that says "re-run
@@ -102,38 +103,102 @@ def test_cited_package_names_exist():
     assert not missing, "dangling API references:\n" + "\n".join(missing)
 
 
-#: top-level package defs that nothing outside tests names, each with
-#: the reason it stays
+#: top-level package defs that no code outside tests reaches, each
+#: with the reason it stays; the audit treats them as extra roots
 TEST_ONLY_DEFS = {
     "pipeline.prep_run": "declared entry point: the training-prep run "
                          "(validate, quarantine, dedup) for callers",
-    "loudness.k_weight_gain_db": "test oracle: the analytic K-weighting "
-                                 "gain the loudness tests expect",
+    "streaming.validate_stream": "declared entry point: the append-mode "
+                                 "violations sink for callers",
+    "streaming.windowed_verdicts": "declared entry point: per-window "
+                                   "stream verdicts for callers",
+    "streaming.rate_clips_stream": "declared entry point: the non-file "
+                                   "stream source for callers",
+    "streaming.validate_stream_with_lineage": "declared entry point: the "
+                                              "committing stream sink "
+                                              "for callers",
+    "dedup.embedding_near_dups": "test oracle: the exact all-pairs "
+                                 "cosine the LSH path is checked against",
+    "drift._ks_2samp": "test oracle: the raw two-sample KS the engine "
+                       "KS is checked against",
     "fixtures.golden_rule_counts": "test oracle: the injected-defect "
                                    "counts of a fixture table",
+    "loudness.k_weight_gain_db": "test oracle: the analytic K-weighting "
+                                 "gain the loudness tests expect",
+    "jpeg.block_constant_decoded": "test oracle: the decoded value of a "
+                                   "constant JPEG block",
+    "flac.frame_info": "test inspector: the header fields of one FLAC "
+                       "frame",
 }
 
 
+def _used_names(nodes) -> set[str]:
+    """The names a piece of code uses: `Name` ids, `Attribute` attrs and
+    imported names. Comments are gone and docstrings are string
+    constants, so neither counts."""
+    out: set[str] = set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, (ast.Import, ast.ImportFrom)):
+                out |= {a.name.rsplit(".", 1)[-1] for a in n.names}
+    return out
+
+
+def _reached(seeds: set[str], roots: set[str],
+             defs: dict[str, set[str]]) -> set[str]:
+    """Package defs reachable from the def keys `seeds` and the bare
+    names `roots`, following the names each reached def uses. A bare
+    name reaches every package def of that name."""
+    by_name: dict[str, list[str]] = {}
+    for key in defs:
+        by_name.setdefault(key.split(".", 1)[1], []).append(key)
+    reached, todo = set(), list(seeds)
+    for name in roots:
+        todo += by_name.get(name, [])
+    while todo:
+        key = todo.pop()
+        if key in reached:
+            continue
+        reached.add(key)
+        for name in defs[key]:
+            todo += by_name.get(name, [])
+    return reached
+
+
 def test_package_defs_are_named_or_allowlisted():
-    """Every top-level def in canned_yaml_spark/ is named somewhere in
-    the package, __spark_entry__.py, bench.py, tools/ or perfbench/,
-    or is in TEST_ONLY_DEFS. A name in a comment or docstring counts,
-    so this finds the defs nothing mentions at all. An allowlist entry
-    that the program now names must leave the list."""
-    callers = (sorted((ROOT / "canned_yaml_spark").glob("*.py"))
-               + [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
-               + sorted((ROOT / "tools").rglob("*.py"))
-               + sorted((ROOT / "perfbench").rglob("*.py")))
-    text = "\n".join(p.read_text() for p in callers)
-    unnamed = {f"{p.stem}.{name}"
-               for p in (ROOT / "canned_yaml_spark").glob("*.py")
-               for name in _defined_names(p)
-               # the def line itself is the one mention
-               if len(re.findall(rf"\b{name}\b", text)) <= 1}
-    assert not unnamed - TEST_ONLY_DEFS.keys(), (
+    """Every top-level def in canned_yaml_spark/ is reached by code from
+    __spark_entry__.py, bench.py, tools/, perfbench/ or the package's
+    module-level statements, directly or through the names other
+    reached defs use; or it is in TEST_ONLY_DEFS. Only code counts: a
+    name in a comment or docstring reaches nothing. An allowlist entry
+    that the program, or another entry, now reaches must leave the
+    list."""
+    defs: dict[str, set[str]] = {}
+    roots: set[str] = set()
+    for p in sorted((ROOT / "canned_yaml_spark").glob("*.py")):
+        body = ast.parse(p.read_text()).body
+        kinds = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        for node in body:
+            if isinstance(node, kinds):
+                defs[f"{p.stem}.{node.name}"] = _used_names([node])
+        roots |= _used_names([n for n in body if not isinstance(n, kinds)])
+    for p in ([ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+              + sorted((ROOT / "tools").rglob("*.py"))
+              + sorted((ROOT / "perfbench").rglob("*.py"))):
+        roots |= _used_names([ast.parse(p.read_text())])
+    assert TEST_ONLY_DEFS.keys() <= defs.keys(), (
+        "allowlisted defs that do not exist: "
+        + ", ".join(sorted(TEST_ONLY_DEFS.keys() - defs.keys())))
+
+    dead = defs.keys() - _reached(set(TEST_ONLY_DEFS), roots, defs)
+    assert not dead, (
         "package defs only tests reach: move an oracle to TEST_ONLY_DEFS "
-        "with its reason, or delete the def\n"
-        + "\n".join(sorted(unnamed - TEST_ONLY_DEFS.keys())))
-    assert not TEST_ONLY_DEFS.keys() - unnamed, (
-        "allowlisted defs the program now names: "
-        + ", ".join(sorted(TEST_ONLY_DEFS.keys() - unnamed)))
+        "with its reason, or delete the def\n" + "\n".join(sorted(dead)))
+    stale = {key for key in TEST_ONLY_DEFS
+             if key in _reached(set(TEST_ONLY_DEFS) - {key}, roots, defs)}
+    assert not stale, ("allowlisted defs the program reaches: "
+                       + ", ".join(sorted(stale)))

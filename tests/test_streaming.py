@@ -7,7 +7,14 @@ import pytest
 from pyspark.sql import DataFrame
 
 from canned_yaml_spark import fixtures, streaming
-from canned_yaml_spark.runner import row_verdicts, row_violations
+from canned_yaml_spark.runner import row_violations
+from tests.conftest import run_available_now
+
+
+@pytest.fixture(autouse=True)
+def _no_query_outlives_its_test(spark):
+    yield
+    assert not spark.streams.active, "a stream query is still running"
 
 
 def test_validate_stream_matches_batch(spark, suite, tmp_path):
@@ -21,10 +28,7 @@ def test_validate_stream_matches_batch(spark, suite, tmp_path):
     stream = (spark.readStream
               .schema(clips.schema)
               .parquet(src))
-    q = (streaming.validate_stream(stream, suite, out, chk)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(120)
+    run_available_now(streaming.validate_stream(stream, suite, out, chk))
 
     got = spark.read.parquet(out)
     want = row_violations(clips, suite)
@@ -54,10 +58,9 @@ def test_windowed_verdicts_streaming(spark, suite, tmp_path):
     stream = (spark.readStream.schema(clips.schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
     verd = streaming.windowed_verdicts(stream, suite, watermark="0 seconds")
-    q = (verd.writeStream.format("parquet")
-         .option("path", out).option("checkpointLocation", chk)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(180)
+    run_available_now(verd.writeStream.format("parquet")
+                      .option("path", out).option("checkpointLocation", chk)
+                      .outputMode("append"), 180)
 
     got = spark.read.parquet(out)
     assert got.count() > 0
@@ -81,13 +84,15 @@ def test_rate_source_stream_matches_batch(spark, suite, tmp_path):
          .start())
     # run until at least 2 micro-batches (≥400 keys) have committed
     import time
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        if q.lastProgress and q.lastProgress["batchId"] >= 2:
-            break
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination(60)
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            if q.lastProgress and q.lastProgress["batchId"] >= 2:
+                break
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    assert q.awaitTermination(60)
 
     got = spark.read.parquet(out)
     # the parquet sink's _spark_metadata log is the authoritative list
@@ -126,9 +131,7 @@ def test_stream_restart_resumes_exactly_once(spark, suite, tmp_path):
 
     def run_once():
         stream = (spark.readStream.schema(first.schema).parquet(src))
-        q = (streaming.validate_stream(stream, suite, out, chk)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        run_available_now(streaming.validate_stream(stream, suite, out, chk))
 
     run_once()                                   # processes file 1
     n1 = spark.read.parquet(out).count()
@@ -153,9 +156,8 @@ def _sink_once(spark, src, schema, out, chk, suite, run_id, **kw):
     glob), one file per micro-batch."""
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
-    (streaming.validate_stream_with_lineage(stream, suite, out, chk,
-                                            run_id, **kw)
-     .trigger(availableNow=True).start().awaitTermination(180))
+    run_available_now(streaming.validate_stream_with_lineage(
+        stream, suite, out, chk, run_id, **kw), 180)
 
 
 def _stage(df, src, i):
@@ -432,12 +434,10 @@ def test_audio_ops_compose_with_streams(spark, tmp_path):
             ("segs", lambda df: segment.segments(df))):
         out = str(tmp_path / f"out_{name}")
         chk = str(tmp_path / f"chk_{name}")
-        q = (op(stream).writeStream.format("parquet")
-             .option("path", out)
-             .option("checkpointLocation", chk)
-             .outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        run_available_now(op(stream).writeStream.format("parquet")
+                          .option("path", out)
+                          .option("checkpointLocation", chk)
+                          .outputMode("append"))
         got = spark.read.parquet(out)
         want = op(spark.read.parquet(src))
         assert got.count() == want.count()
@@ -470,11 +470,10 @@ def test_extension_rules_compose_with_streams(spark, tmp_path):
 
     # stateless row rule: same operator object on the stream
     out = str(tmp_path / "xout")
-    q = (row_violations(stream, suite).writeStream.format("parquet")
-         .option("path", out)
-         .option("checkpointLocation", str(tmp_path / "xchk"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    run_available_now(row_violations(stream, suite).writeStream
+                      .format("parquet").option("path", out)
+                      .option("checkpointLocation", str(tmp_path / "xchk"))
+                      .outputMode("append"))
     got = spark.read.parquet(out)
     want = row_violations(batch, suite)
     assert got.count() == want.count() > 0
@@ -482,12 +481,10 @@ def test_extension_rules_compose_with_streams(spark, tmp_path):
 
     # partition-scoped families: per-micro-batch tables via foreachBatch
     out2 = str(tmp_path / "xout2")
-    q2 = (stream.writeStream.foreachBatch(
-            lambda df, _: job.all_violations(df, suite)
-                             .write.mode("append").parquet(out2))
-          .option("checkpointLocation", str(tmp_path / "xchk2"))
-          .trigger(availableNow=True).start())
-    q2.awaitTermination(180)
+    run_available_now(stream.writeStream.foreachBatch(
+        lambda df, _: job.all_violations(df, suite)
+                         .write.mode("append").parquet(out2))
+        .option("checkpointLocation", str(tmp_path / "xchk2")), 180)
     got2 = spark.read.parquet(out2)
     want2 = job.all_violations(batch, suite)
     assert got2.count() == want2.count() > 0
@@ -514,10 +511,9 @@ def test_stream_window_chunking_matches_batch(spark, tmp_path):
 
     stream = spark.readStream.schema(clips.schema).parquet(src)
     w = segment.window_slices(stream, 256, 192)
-    q = (w.writeStream.format("parquet")
-         .option("path", out).option("checkpointLocation", chk)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    run_available_now(w.writeStream.format("parquet")
+                      .option("path", out).option("checkpointLocation", chk)
+                      .outputMode("append"))
 
     got = spark.read.parquet(out)
     want = segment.window_slices(clips, 256, 192)
@@ -550,10 +546,7 @@ def test_stream_new_vocabulary_matches_batch(spark, tmp_path):
     t.write.parquet(src)
 
     stream = spark.readStream.schema(t.schema).parquet(src)
-    q = (streaming.validate_stream(stream, suite, out, chk)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(120)
+    run_available_now(streaming.validate_stream(stream, suite, out, chk))
 
     got = spark.read.parquet(out)
     want = row_violations(t, suite)
@@ -584,11 +577,8 @@ def test_stream_embedding_rule_matches_batch(spark, tmp_path):
     emb.write.parquet(src)
 
     stream = spark.readStream.schema(emb.schema).parquet(src)
-    q = (streaming.validate_stream(stream, suite, out, chk,
-                                   id_col="vec_id")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination(120)
+    run_available_now(streaming.validate_stream(stream, suite, out, chk,
+                                                id_col="vec_id"))
 
     got = spark.read.parquet(out)
     want = row_violations(emb, suite, id_col="vec_id")
@@ -596,46 +586,3 @@ def test_stream_embedding_rule_matches_batch(spark, tmp_path):
     key = ["clip_id", "rule_id"]
     assert got.count() == want.count()
     assert got.select(*key).exceptAll(want.select(*key)).count() == 0
-
-
-# Last in the file: after this stateful query (applyInPandasWithState
-# with a processing-time timeout) the shared session runs later Spark
-# jobs 2-3x slower, so the tests above do not run after it.
-def test_running_verdicts_stateful(spark, suite, tmp_path):
-    # custom stateful op: running totals across micro-batches must end
-    # at the batch-mode totals (maxFilesPerTrigger=1 forces 2 batches)
-    src = str(tmp_path / "src3")
-    out = str(tmp_path / "run_verd")
-    chk = str(tmp_path / "chk3")
-
-    first = fixtures.clips_df(spark, 200, max_samples=16)
-    # rows 200..399 = full-corpus minus first-batch rows (a clip_id
-    # range filter would drop injected 'CLIP-…' pattern rows)
-    second = (fixtures.clips_df(spark, 400, max_samples=16)
-              .subtract(first))
-    first.coalesce(1).write.parquet(src)
-    second.coalesce(1).write.mode("append").parquet(src)
-
-    stream = (spark.readStream.schema(first.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    rv = streaming.running_verdicts(stream, suite)
-    # update output mode → parquet (append-only) goes via foreachBatch
-    q = (rv.writeStream
-         .foreachBatch(lambda df, _: df.write.mode("append").parquet(out))
-         .option("checkpointLocation", chk)
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(180)
-
-    got = spark.read.parquet(out)
-    assert got.count() > 0
-    # the LAST update per partition equals the 400-row batch verdict
-    last = (got.groupBy("part_id")
-               .agg(F.max(F.struct("n_rows", "n_violations", "pass"))
-                     .alias("s"))
-               .select("part_id", "s.n_rows", "s.n_violations", "s.pass"))
-    full = fixtures.clips_df(spark, 400, max_samples=16)
-    want = {r.part_id: (r.n_rows, r.n_violations)
-            for r in row_verdicts(full, suite).collect()}
-    got_map = {r.part_id: (r.n_rows, r.n_violations) for r in last.collect()}
-    assert got_map == want
-    assert not got.filter("evicted").count()   # nothing timed out here

@@ -88,7 +88,7 @@ def fam_pay_scan():
     # bytes" (host-bandwidth-bound) from "decoding in Python".
     # coalesce() keeps the equality a FILTER — a bare left==right above
     # the join is extracted into the join keys and forces a full
-    # shuffle of payload rows (see payload.payload_snr_stats).
+    # shuffle of payload rows (see payload.payload_violations).
     j = clips.select("clip_id", F.col("bytes").alias("_b")).join(
         ref.select("clip_id", F.col("pcm_ref").alias("_p")).hint("SHUFFLE_HASH"),
         "clip_id", "inner")
