@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from canned_yaml_spark.checks import RefCheck, UniqueCheck
+from canned_yaml_spark.runner import partition_violations
 
 
 def duplicate_keys(df: DataFrame, check: UniqueCheck) -> DataFrame:
@@ -401,17 +402,12 @@ def quantile_violations(df: DataFrame, check,
     if check.maximum is not None:
         bounds.append(f"<= {check.maximum}")
     want = " and ".join(bounds)
-    return (partition_quantile(df, check, part_col)
-            .filter(F.col("breach"))
-            .select(F.lit(None).cast("string").alias("clip_id"),
-                    "part_id",
-                    F.lit(check.rule_id).alias("rule_id"),
-                    F.lit(int(check.severity)).alias("severity"),
-                    F.concat(
-                        F.lit(f"p{int(round(check.q * 100)):02d}"
-                              f"({check.column}) "),
-                        F.round(F.col("qval"), 4).cast("string"),
-                        F.lit(f" not {want}")).alias("message")))
+    return partition_violations(
+        partition_quantile(df, check, part_col), F.col("breach"),
+        check.rule_id, check.severity,
+        F.concat(F.lit(f"p{int(round(check.q * 100)):02d}({check.column}) "),
+                 F.round(F.col("qval"), 4).cast("string"),
+                 F.lit(f" not {want}")))
 
 
 def partition_completeness(df: DataFrame, checks: list,
@@ -459,17 +455,12 @@ def completeness_violations(df: DataFrame, check,
     """Long-form violation rows (clip_id NULL — partition-scoped) for
     partitions whose null fraction of check.column exceeds the
     x-completeness budget."""
-    rep = partition_completeness(df, [check], part_col)
-    return (rep.filter(F.col("breach"))
-               .select(F.lit(None).cast("string").alias("clip_id"),
-                       "part_id",
-                       F.lit(check.rule_id).alias("rule_id"),
-                       F.lit(int(check.severity)).alias("severity"),
-                       F.concat(
-                           F.lit(f"null fraction of {check.column} "),
-                           F.col("null_frac").cast("string"),
-                           F.lit(f" > {check.max_null_frac}"))
-                        .alias("message")))
+    return partition_violations(
+        partition_completeness(df, [check], part_col), F.col("breach"),
+        check.rule_id, check.severity,
+        F.concat(F.lit(f"null fraction of {check.column} "),
+                 F.col("null_frac").cast("string"),
+                 F.lit(f" > {check.max_null_frac}")))
 
 
 def partition_frequency(df: DataFrame, check,
@@ -521,21 +512,14 @@ def frequency_violations(df: DataFrame, check,
     if check.min_distinct is not None:
         caps.append(f"distinct >= {check.min_distinct}")
     want = " and ".join(caps)
-    rep = partition_frequency(df, check, part_col)
-    return (rep.filter(F.col("breach"))
-               .select(F.lit(None).cast("string").alias("clip_id"),
-                       "part_id",
-                       F.lit(check.rule_id).alias("rule_id"),
-                       F.lit(int(check.severity)).alias("severity"),
-                       F.concat(
-                           F.lit(f"{check.column} top value "),
-                           F.col("top_value").cast("string"),
-                           F.lit(" share "),
-                           F.col("top_share").cast("string"),
-                           F.lit(", "),
-                           F.col("n_distinct").cast("string"),
-                           F.lit(f" distinct; want {want}"))
-                        .alias("message")))
+    return partition_violations(
+        partition_frequency(df, check, part_col), F.col("breach"),
+        check.rule_id, check.severity,
+        F.concat(F.lit(f"{check.column} top value "),
+                 F.col("top_value").cast("string"),
+                 F.lit(" share "), F.col("top_share").cast("string"),
+                 F.lit(", "), F.col("n_distinct").cast("string"),
+                 F.lit(f" distinct; want {want}")))
 
 
 def partition_anomaly(df: DataFrame, check,
@@ -583,20 +567,13 @@ def anomaly_violations(df: DataFrame, check,
                        part_col: str = "part_id") -> DataFrame:
     """Long-form violation rows (clip_id NULL — partition-scoped) for
     partitions whose mean of check.column is a robust outlier."""
-    rep = partition_anomaly(df, check, part_col)
-    return (rep.filter(F.col("breach"))
-               .select(F.lit(None).cast("string").alias("clip_id"),
-                       "part_id",
-                       F.lit(check.rule_id).alias("rule_id"),
-                       F.lit(int(check.severity)).alias("severity"),
-                       F.concat(
-                           F.lit(f"mean({check.column}) "),
-                           F.col("mean").cast("string"),
-                           F.lit(" modified-z "),
-                           F.coalesce(F.col("z").cast("string"),
-                                      F.lit("inf")),
-                           F.lit(f" exceeds z_max {check.z_max}"))
-                        .alias("message")))
+    return partition_violations(
+        partition_anomaly(df, check, part_col), F.col("breach"),
+        check.rule_id, check.severity,
+        F.concat(F.lit(f"mean({check.column}) "),
+                 F.col("mean").cast("string"), F.lit(" modified-z "),
+                 F.coalesce(F.col("z").cast("string"), F.lit("inf")),
+                 F.lit(f" exceeds z_max {check.z_max}")))
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame, key_col: str = "clip_id",

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from canned_yaml_spark.checks import CatDriftCheck, DriftCheck
+from canned_yaml_spark.runner import partition_violations
 
 _EPS = 1e-6
 
@@ -138,16 +139,11 @@ def psi_violations(df: DataFrame, check: DriftCheck,
                    part_col: str = "part_id") -> DataFrame:
     """Long-form violation rows (clip_id NULL — partition-scoped) for
     partitions whose PSI exceeds check.psi_max."""
-    return (psi_per_partition(df, check, expected, part_col)
-            .filter(F.col("psi") > check.psi_max)
-            .select(F.lit(None).cast("string").alias("clip_id"),
-                    "part_id",
-                    F.lit(check.rule_id + ".psi").alias("rule_id"),
-                    F.lit(int(check.severity)).alias("severity"),
-                    F.concat(F.lit("PSI "),
-                             F.round(F.col("psi"), 4).cast("string"),
-                             F.lit(f" > {check.psi_max} on {check.column}")
-                             ).alias("message")))
+    return partition_violations(
+        psi_per_partition(df, check, expected, part_col),
+        F.col("psi") > check.psi_max, check.rule_id + ".psi", check.severity,
+        F.concat(F.lit("PSI "), F.round(F.col("psi"), 4).cast("string"),
+                 F.lit(f" > {check.psi_max} on {check.column}")))
 
 
 # --------------------------------------------------- Wasserstein-1 (EMD)
@@ -202,16 +198,11 @@ def w1_violations(df: DataFrame, check: DriftCheck,
                   part_col: str = "part_id") -> DataFrame:
     """Long-form violation rows (clip_id NULL — partition-scoped) for
     partitions whose W1 distance exceeds check.w1_max."""
-    return (w1_per_partition(df, check, expected, part_col)
-            .filter(F.col("w1") > check.w1_max)
-            .select(F.lit(None).cast("string").alias("clip_id"),
-                    "part_id",
-                    F.lit(check.rule_id + ".w1").alias("rule_id"),
-                    F.lit(int(check.severity)).alias("severity"),
-                    F.concat(F.lit("W1 "),
-                             F.round(F.col("w1"), 4).cast("string"),
-                             F.lit(f" > {check.w1_max} on {check.column}")
-                             ).alias("message")))
+    return partition_violations(
+        w1_per_partition(df, check, expected, part_col),
+        F.col("w1") > check.w1_max, check.rule_id + ".w1", check.severity,
+        F.concat(F.lit("W1 "), F.round(F.col("w1"), 4).cast("string"),
+                 F.lit(f" > {check.w1_max} on {check.column}")))
 
 
 # ------------------------------------------------------------------- KS
@@ -311,18 +302,14 @@ def ks_per_partition(df: DataFrame, check: DriftCheck,
 
 def ks_violations(df: DataFrame, check: DriftCheck, reference: np.ndarray,
                   part_col: str = "part_id") -> DataFrame:
-    return (ks_per_partition(df, check, reference, part_col)
-            .filter(F.col("p_value") < check.ks_alpha)
-            .select(F.lit(None).cast("string").alias("clip_id"),
-                    "part_id",
-                    F.lit(check.rule_id + ".ks").alias("rule_id"),
-                    F.lit(int(check.severity)).alias("severity"),
-                    F.concat(F.lit("KS stat "),
-                             F.round(F.col("ks_stat"), 4).cast("string"),
-                             F.lit(", p "),
-                             F.round(F.col("p_value"), 6).cast("string"),
-                             F.lit(f" < alpha {check.ks_alpha} on {check.column}")
-                             ).alias("message")))
+    return partition_violations(
+        ks_per_partition(df, check, reference, part_col),
+        F.col("p_value") < check.ks_alpha, check.rule_id + ".ks",
+        check.severity,
+        F.concat(F.lit("KS stat "),
+                 F.round(F.col("ks_stat"), 4).cast("string"),
+                 F.lit(", p "), F.round(F.col("p_value"), 6).cast("string"),
+                 F.lit(f" < alpha {check.ks_alpha} on {check.column}")))
 
 
 # ------------------------------------------------------- chi-squared
@@ -384,15 +371,9 @@ def chi2_violations(df: DataFrame, check: CatDriftCheck,
                     part_col: str = "part_id") -> DataFrame:
     """Long-form violation rows (clip_id NULL — partition-scoped) for
     partitions whose chi2 exceeds check.chi2_max."""
-    return (chi2_per_partition(df, check, part_col)
-            .filter(F.col("chi2") > check.chi2_max)
-            .select(F.lit(None).cast("string").alias("clip_id"),
-                    "part_id",
-                    F.lit(check.rule_id).alias("rule_id"),
-                    F.lit(int(check.severity)).alias("severity"),
-                    F.concat(F.lit("chi2 "),
-                             F.round(F.col("chi2"), 4).cast("string"),
-                             F.lit(f" > {check.chi2_max} on "
-                                   f"{check.column} (dof "),
-                             (F.col("n_cats") - 1).cast("string"),
-                             F.lit(")")).alias("message")))
+    return partition_violations(
+        chi2_per_partition(df, check, part_col),
+        F.col("chi2") > check.chi2_max, check.rule_id, check.severity,
+        F.concat(F.lit("chi2 "), F.round(F.col("chi2"), 4).cast("string"),
+                 F.lit(f" > {check.chi2_max} on {check.column} (dof "),
+                 (F.col("n_cats") - 1).cast("string"), F.lit(")")))

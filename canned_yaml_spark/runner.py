@@ -34,6 +34,19 @@ from canned_yaml_spark.checks import Check, CheckSuite, Severity
 VIOLATION_COLS = ("clip_id", "part_id", "rule_id", "severity", "message")
 
 
+def partition_violations(report: DataFrame, breach: Column, rule_id: str,
+                         severity: Severity, message: Column) -> DataFrame:
+    """Long-form violation rows of a partition-scoped check (clip_id
+    NULL): one per `report` row (part_id, statistics) where `breach`
+    holds, `message` built from that row's statistics."""
+    return report.filter(breach).select(
+        F.lit(None).cast("string").alias("clip_id"),
+        "part_id",
+        F.lit(rule_id).alias("rule_id"),
+        F.lit(int(severity)).alias("severity"),
+        message.alias("message"))
+
+
 def _live_checks(checks: list[Check]) -> list[Check]:
     return [c for c in sorted(checks, key=lambda c: c.order)
             if not c.static_ok]
