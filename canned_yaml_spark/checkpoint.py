@@ -161,7 +161,7 @@ def stream_identity(spark: SparkSession, checkpoint_dir: str) -> str:
 
 
 def commit(spark: SparkSession, scope: DataFrame, viol: DataFrame,
-           out_dir: str, run_id: str, *, resuming: bool,
+           out_dir: str, run_id: str, *,
            part_col: str = "part_id") -> tuple[DataFrame, DataFrame]:
     """Commit one run's violations plan under out_dir; returns the
     written (violations, verdicts) tables read back from disk.
@@ -170,9 +170,10 @@ def commit(spark: SparkSession, scope: DataFrame, viol: DataFrame,
        (clear_scope_parts), then `viol` executes once, repartitioned
        by part_id so each partition directory gets one file — the
        directory then holds only this commit's rows for the scope;
-    2. the verdicts are derived from the written violations, read back
-       with the plan's schema (a clean run writes no file) and, on
-       resume, limited to the partitions the manifest does not hold;
+    2. the verdicts of scope's partitions are derived from the written
+       violations, read back with the plan's schema (a clean run
+       writes no file); a resume's scope is the pending partitions,
+       so an earlier run's partitions drop out of the left join;
     3. verdicts/: those verdicts, tagged with run_id;
     4. manifest/: this run's written verdict rows, in one file — the
        commit point. The verdicts write counts its rows (an
@@ -187,9 +188,7 @@ def commit(spark: SparkSession, scope: DataFrame, viol: DataFrame,
     clear_scope_parts(spark, scope, viol_dir, part_col)
     write_partitioned(viol.repartition("part_id"), viol_dir)
     written = spark.read.schema(viol.schema).parquet(viol_dir)
-    mine = (pending_only(written, spark, manifest_dir) if resuming
-            else written)
-    verd = (violation_verdicts(scope, mine, part_col)
+    verd = (violation_verdicts(scope, written, part_col)
             .withColumn("run_id", F.lit(run_id)))
     seen = Observation()
     write_partitioned(verd.observe(seen, F.count(F.lit(1)).alias("n")),

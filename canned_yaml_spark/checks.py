@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import enum
 from dataclasses import dataclass, field
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Iterator
 
 if TYPE_CHECKING:
     from pyspark.sql import Column
@@ -50,8 +50,19 @@ class Check:
     static_ok: bool = False     # proven satisfied by the table schema
 
 
+class TableCheck:
+    """A check with its own distributed plan over the table (one
+    CheckSuite family). rule_ids are the rule ids its violations
+    builder can emit: the declared inventory (runner.suite_rule_ids)."""
+
+    rule_id: str
+
+    def rule_ids(self) -> tuple[str, ...]:
+        return (self.rule_id,)
+
+
 @dataclass(frozen=True)
-class UniqueCheck:
+class UniqueCheck(TableCheck):
     """x-unique: values of ``column`` must be globally unique (#18).
     ``column`` may be one name or a tuple of names (composite key —
     the root `x-unique-together` spec keyword)."""
@@ -67,7 +78,7 @@ class UniqueCheck:
 
 
 @dataclass(frozen=True)
-class RefCheck:
+class RefCheck(TableCheck):
     """x-ref: values of ``column`` must exist in dimension ``table``.``key``
     (the $ref-at-scale analog, SURVEY.md §2.2 #17). ``column``/``key``
     may be tuples of equal length (composite FK — the root
@@ -91,7 +102,7 @@ class RefCheck:
 
 
 @dataclass(frozen=True)
-class DriftCheck:
+class DriftCheck(TableCheck):
     """x-drift: per-partition histogram of ``column`` must not drift
     from a reference distribution (PSI + KS, SURVEY.md §2.2 #21)."""
 
@@ -109,9 +120,14 @@ class DriftCheck:
     w1_max: float | None = None
     severity: Severity = Severity.WARN
 
+    def rule_ids(self) -> tuple[str, ...]:
+        # drift.psi_violations / w1_violations / ks_violations
+        w1 = ("w1",) if self.w1_max is not None else ()
+        return tuple(f"{self.rule_id}.{k}" for k in ("psi", *w1, "ks"))
+
 
 @dataclass(frozen=True)
-class PayloadCheck:
+class PayloadCheck(TableCheck):
     """x-payload: decode audio ``column`` and assert SNR ≥ snr_db_min vs
     the per-clip reference PCM + transcript equality (input_hint)."""
 
@@ -130,7 +146,7 @@ class PayloadCheck:
 
 
 @dataclass(frozen=True)
-class TranscriptCheck:
+class TranscriptCheck(TableCheck):
     """x-transcript: ASR-tolerance bounds on ``column`` vs the
     reference table's transcript — the generalization of x-payload's
     exact-equality transcript branch. max_dist bounds the char-level
@@ -153,7 +169,7 @@ class TranscriptCheck:
 
 
 @dataclass(frozen=True)
-class MediaCheck:
+class MediaCheck(TableCheck):
     """x-media: decodability + dimension floors on a binary media
     ``column``, optionally scoped to container kinds (image/video/
     audio). require_decodable flags payloads the registry cannot parse
@@ -174,7 +190,7 @@ class MediaCheck:
 
 
 @dataclass(frozen=True)
-class AudioStatsCheck:
+class AudioStatsCheck(TableCheck):
     """x-audio-stats: decode audio ``column`` and gate per-clip quality
     metrics — clipping fraction, silence fraction, RMS dBFS floor.
     No reference table: these are absolute quality gates (the audio
@@ -192,7 +208,7 @@ class AudioStatsCheck:
 
 
 @dataclass(frozen=True)
-class LoudnessCheck:
+class LoudnessCheck(TableCheck):
     """x-loudness: decode audio ``column`` and bound its ITU-R
     BS.1770-4 gated integrated loudness (LUFS) — the unit corpora are
     loudness-normalized in, so the validator gates in the same unit.
@@ -218,7 +234,7 @@ class LoudnessCheck:
 
 
 @dataclass(frozen=True)
-class SpectralCheck:
+class SpectralCheck(TableCheck):
     """x-spectral: decode audio ``column``, FFT it, and gate spectral
     quality — a 95%-rolloff floor (catches band-limited audio passed
     off at a higher sample rate, e.g. upsampled telephony) and a
@@ -237,7 +253,7 @@ class SpectralCheck:
 
 
 @dataclass(frozen=True)
-class QuantileCheck:
+class QuantileCheck(TableCheck):
     """x-quantile: the EXACT interpolated q-quantile of ``column`` per
     partition must stay within [minimum, maximum] — the SLA-bound
     check (e.g. "p99 duration per partition ≤ 11 s"). percentile_cont
@@ -264,7 +280,7 @@ class QuantileCheck:
 
 
 @dataclass(frozen=True)
-class AnomalyCheck:
+class AnomalyCheck(TableCheck):
     """x-anomaly: flag partitions whose mean of ``column`` is a robust
     outlier AGAINST THE OTHER PARTITIONS — reference-free drift (PSI/KS
     need an expected distribution; this rule needs nothing but the
@@ -283,7 +299,7 @@ class AnomalyCheck:
 
 
 @dataclass(frozen=True)
-class CatDriftCheck:
+class CatDriftCheck(TableCheck):
     """x-chi2: Pearson chi-squared goodness-of-fit of each partition's
     CATEGORICAL distribution of ``column`` against an expected
     distribution stated inline in the spec — the categorical
@@ -311,7 +327,7 @@ class CatDriftCheck:
 
 
 @dataclass(frozen=True)
-class CompletenessCheck:
+class CompletenessCheck(TableCheck):
     """x-completeness: the NULL fraction of ``column`` per partition
     must not exceed ``max_null_frac`` (a Deequ-style completeness
     gate; the reference's `required` keyword is the row-level special
@@ -326,7 +342,7 @@ class CompletenessCheck:
 
 
 @dataclass(frozen=True)
-class FrequencyCheck:
+class FrequencyCheck(TableCheck):
     """x-frequency: per-partition frequency-shape gates on a
     categorical ``column`` — a dominant-value share cap
     (``max_share``: no single value may account for more than this
@@ -347,7 +363,7 @@ class FrequencyCheck:
 
 
 @dataclass(frozen=True)
-class MonotonicCheck:
+class MonotonicCheck(TableCheck):
     """x-monotonic: within each ``partition_by`` group, ordered by
     ``order_by``, ``column`` must be non-decreasing (``strict=True``:
     strictly increasing) — the ingest-order invariant ("event time
@@ -366,13 +382,24 @@ class MonotonicCheck:
     severity: Severity = Severity.ERROR
 
 
+#: The table-check families: CheckSuite fields, in the order their
+#: violations follow the row suite's in job.all_violations.
+TABLE_FAMILIES = (
+    "unique_checks", "ref_checks", "absent_checks", "drift_checks",
+    "payload_checks", "transcript_checks", "media_checks", "audio_checks",
+    "loudness_checks", "spectral_checks", "quantile_checks",
+    "completeness_checks", "frequency_checks", "anomaly_checks",
+    "cat_drift_checks", "monotonic_checks",
+)
+
+
 @dataclass
 class CheckSuite:
     """Everything compiled from one spec.
 
-    row_checks evaluate in a single scan (no shuffle); table_checks
-    each have their own distributed plan (hash agg / broadcast join /
-    histogram agg / Arrow UDF).
+    row_checks evaluate in a single scan (no shuffle); the
+    TABLE_FAMILIES each have their own distributed plan (hash agg /
+    broadcast join / histogram agg / Arrow UDF).
     """
 
     row_checks: list[Check] = field(default_factory=list)
@@ -394,32 +421,9 @@ class CheckSuite:
     absent_checks: list[RefCheck] = field(default_factory=list)
     warnings: list[str] = field(default_factory=list)
 
-    @property
-    def active_row_checks(self) -> list[Check]:
-        return [c for c in self.row_checks if not c.static_ok]
-
-    def describe(self) -> str:
-        lines = [f"row checks ({len(self.row_checks)}):"]
-        for c in sorted(self.row_checks, key=lambda c: c.order):
-            tag = " [static-ok]" if c.static_ok else ""
-            lines.append(f"  {c.order:3d} {c.severity.name:5s} {c.rule_id}{tag}")
-        for group, items in (
-            ("unique", self.unique_checks), ("ref", self.ref_checks),
-            ("drift", self.drift_checks),
-            ("chi2", self.cat_drift_checks),
-            ("payload", self.payload_checks),
-            ("audio", self.audio_checks),
-            ("loudness", self.loudness_checks),
-            ("spectral", self.spectral_checks),
-            ("quantile", self.quantile_checks),
-            ("completeness", self.completeness_checks),
-            ("frequency", self.frequency_checks),
-            ("anomaly", self.anomaly_checks),
-            ("monotonic", self.monotonic_checks),
-            ("absent", self.absent_checks),
-        ):
-            for c in items:
-                lines.append(f"  tbl {group}: {c.rule_id}")
-        for w in self.warnings:
-            lines.append(f"  warn: {w}")
-        return "\n".join(lines)
+    def table_checks(self) -> Iterator[tuple[str, TableCheck]]:
+        """(family, check) for every table check, family by family in
+        TABLE_FAMILIES order."""
+        for family in TABLE_FAMILIES:
+            for check in getattr(self, family):
+                yield family, check

@@ -8,23 +8,29 @@ driver (/root/reference/canner/src/validate.cpp:8-26) at table scale.
     exit code = any ERROR   (validate.cpp prints notes + verdict;
                              we persist tables and return the verdict)
 
-The run is resumable: row-level checks skip manifest-completed
-partitions; table-level checks are recomputed over the full table
-each run (they are cross-partition by nature) — both are idempotent
-because every write is partition-atomic and the data path is
-deterministic (checkpoint.py).
+all_violations is the row suite's violations followed by each table
+family's, in checks.TABLE_FAMILIES order; the same family table
+declares the rule inventory (runner.suite_rule_ids).
+
+The run is resumable: every family skips manifest-completed
+partitions except uniqueness, which is cross-partition by nature and
+is recomputed over the full table, then limited to the pending
+partitions. Both are idempotent because every write is
+partition-atomic and the data path is deterministic (checkpoint.py).
 """
 
 from __future__ import annotations
 
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from canned_yaml_spark import checkpoint, dataset, drift, payload
+from canned_yaml_spark import (
+    audiofp, checkpoint, dataset, drift, events, loudness, multimodal, payload,
+)
 from canned_yaml_spark.checks import CheckSuite
 from canned_yaml_spark.compile import compile_spec
 from canned_yaml_spark.runner import row_violations, violation_verdicts
@@ -47,12 +53,9 @@ def all_violations(clips: DataFrame, suite: CheckSuite, *,
                    expected_hist: DataFrame | None = None,
                    ks_reference: np.ndarray | None = None,
                    id_col: str = "clip_id",
-                   part_col: str = "part_id",
-                   skip_unique: bool = False) -> DataFrame:
-    """Union of every check family's long-form violations.
-
-    skip_unique: used by resume (job.run), where uniqueness must scan
-    the FULL table rather than the pending scope — see run().
+                   part_col: str = "part_id") -> DataFrame:
+    """The row suite's violations, then every table check's
+    (suite.table_checks(): family by family in TABLE_FAMILIES order).
 
     No plan option: uniqueness reads the hash partitioning `clips`
     reports (dataset.hash_partition_columns) and joins back
@@ -60,97 +63,74 @@ def all_violations(clips: DataFrame, suite: CheckSuite, *,
     join is a shuffle-hash join, exchange-free over clip_id buckets.
     """
     dims = dims or {}
+    ids = (id_col, part_col)
     out = row_violations(clips, suite, id_col, part_col)
-    if not skip_unique:
-        for uc in suite.unique_checks:
-            out = out.unionByName(
-                dataset.unique_violations(clips, uc, id_col, part_col))
-    for rc in suite.ref_checks:
-        if rc.table not in dims:
-            raise KeyError(f"x-ref check {rc.rule_id} needs dimension table "
-                           f"'{rc.table}' in dims")
-        out = out.unionByName(
-            dataset.referential_violations(clips, dims[rc.table], rc,
-                                           id_col, part_col))
-    for ac in suite.absent_checks:
-        if ac.table not in dims:
-            raise KeyError(f"x-absent check {ac.rule_id} needs dimension "
-                           f"table '{ac.table}' in dims")
-        out = out.unionByName(
-            dataset.absent_violations(clips, dims[ac.table], ac,
-                                      id_col, part_col))
-    for dc in suite.drift_checks:
-        out = out.unionByName(
-            drift.psi_violations(clips, dc, expected_hist, part_col))
-        if dc.w1_max is not None:
-            out = out.unionByName(
-                drift.w1_violations(clips, dc, expected_hist, part_col))
+
+    def dim(c) -> DataFrame:
+        if c.table not in dims:
+            raise KeyError(f"check {c.rule_id} needs dimension table "
+                           f"'{c.table}' in dims")
+        return dims[c.table]
+
+    def drift_frames(c):
+        yield drift.psi_violations(clips, c, expected_hist, part_col)
+        if c.w1_max is not None:
+            yield drift.w1_violations(clips, c, expected_hist, part_col)
         if ks_reference is not None:
-            out = out.unionByName(
-                drift.ks_violations(clips, dc, ks_reference, part_col))
-    for pc in suite.payload_checks:
-        if clips_ref is not None:
-            out = out.unionByName(
-                payload.payload_violations(
-                    clips, clips_ref, pc, id_col, part_col))
-    for tc in suite.transcript_checks:
-        if clips_ref is not None and tc.column in clips.columns:
-            out = out.unionByName(
-                payload.transcript_violations(
-                    clips, clips_ref, tc, id_col, part_col))
-    for mc in suite.media_checks:
-        if mc.column in clips.columns:
-            from canned_yaml_spark import multimodal
-            out = out.unionByName(
-                multimodal.media_violations(clips, mc, id_col, part_col))
-    for ac in suite.audio_checks:
-        # absolute quality gates, no reference table; skipped when the
-        # table has no such column (e.g. the transcript-only corpus)
-        if ac.column in clips.columns:
-            out = out.unionByName(
-                payload.audio_stats_violations(clips, ac, id_col, part_col))
-    for lc in suite.loudness_checks:
-        # BS.1770 bound on decoded payload loudness; needs the table's
-        # sample-rate column for the K-weighting design
-        if lc.column in clips.columns and lc.sr_col in clips.columns:
-            from canned_yaml_spark import loudness
-            out = out.unionByName(
-                loudness.loudness_violations(clips, lc, id_col, part_col))
-    for sc in suite.spectral_checks:
-        if sc.column in clips.columns and sc.sr_col in clips.columns:
-            from canned_yaml_spark import audiofp
-            out = out.unionByName(
-                audiofp.spectral_violations(clips, sc, id_col, part_col))
-    for qc in suite.quantile_checks:
-        if qc.column in clips.columns:
-            out = out.unionByName(
-                dataset.quantile_violations(clips, qc, part_col))
-    for cc in suite.completeness_checks:
-        if cc.column in clips.columns:
-            out = out.unionByName(
-                dataset.completeness_violations(clips, cc, part_col))
-    for fc in suite.frequency_checks:
-        if fc.column in clips.columns:
-            out = out.unionByName(
-                dataset.frequency_violations(clips, fc, part_col))
-    for nc in suite.anomaly_checks:
-        if nc.column in clips.columns:
-            out = out.unionByName(
-                dataset.anomaly_violations(clips, nc, part_col))
-    for cc in suite.cat_drift_checks:
-        if cc.column in clips.columns:
-            out = out.unionByName(
-                drift.chi2_violations(clips, cc, part_col))
-    for mc in suite.monotonic_checks:
-        if all(c in clips.columns for c in
-               (mc.column, mc.partition_by, mc.order_by)):
-            from canned_yaml_spark import events as _events
-            mv = _events.monotonic_violations(clips, mc, id_col=id_col)
-            # align id/part types with the row-suite frame (a spec may
-            # partition the ordering by any column)
-            mv = mv.select(*[F.col(c).cast(out.schema[c].dataType)
-                             for c in out.columns])
-            out = out.unionByName(mv)
+            yield drift.ks_violations(clips, c, ks_reference, part_col)
+
+    def monotonic_frames(c):
+        mv = events.monotonic_violations(clips, c, id_col=id_col)
+        # align id/part types with the union so far (a spec may
+        # partition the ordering by any column)
+        yield mv.select(*[F.col(f.name).cast(f.dataType)
+                          for f in out.schema])
+
+    # family -> (the check's fields naming columns clips must have, its
+    # violation frames). A check whose columns are missing, or whose
+    # reference table was not given, adds nothing. Each builder looks
+    # its function up at call time, so a caller can wrap it.
+    column = ("column",)
+    no_ref = clips_ref is None
+    frames = {
+        "unique_checks": ((), lambda c: [
+            dataset.unique_violations(clips, c, *ids)]),
+        "ref_checks": ((), lambda c: [
+            dataset.referential_violations(clips, dim(c), c, *ids)]),
+        "absent_checks": ((), lambda c: [
+            dataset.absent_violations(clips, dim(c), c, *ids)]),
+        "drift_checks": ((), drift_frames),
+        "payload_checks": ((), lambda c: [] if no_ref else [
+            payload.payload_violations(clips, clips_ref, c, *ids)]),
+        "transcript_checks": (column, lambda c: [] if no_ref else [
+            payload.transcript_violations(clips, clips_ref, c, *ids)]),
+        "media_checks": (column, lambda c: [
+            multimodal.media_violations(clips, c, *ids)]),
+        "audio_checks": (column, lambda c: [
+            payload.audio_stats_violations(clips, c, *ids)]),
+        # the sample rate designs the K-weighting / sets the Hz scale
+        "loudness_checks": (("column", "sr_col"), lambda c: [
+            loudness.loudness_violations(clips, c, *ids)]),
+        "spectral_checks": (("column", "sr_col"), lambda c: [
+            audiofp.spectral_violations(clips, c, *ids)]),
+        "quantile_checks": (column, lambda c: [
+            dataset.quantile_violations(clips, c, part_col)]),
+        "completeness_checks": (column, lambda c: [
+            dataset.completeness_violations(clips, c, part_col)]),
+        "frequency_checks": (column, lambda c: [
+            dataset.frequency_violations(clips, c, part_col)]),
+        "anomaly_checks": (column, lambda c: [
+            dataset.anomaly_violations(clips, c, part_col)]),
+        "cat_drift_checks": (column, lambda c: [
+            drift.chi2_violations(clips, c, part_col)]),
+        "monotonic_checks": (("column", "partition_by", "order_by"),
+                             monotonic_frames),
+    }
+    for family, check in suite.table_checks():
+        needs, build = frames[family]
+        if all(getattr(check, f) in clips.columns for f in needs):
+            for v in build(check):
+                out = out.unionByName(v)
     return out
 
 
@@ -177,29 +157,28 @@ def run(spark: SparkSession, spec_source: str | dict, clips: DataFrame, *,
     suite = compile_spec(spec_source, clips.schema)
     run_id = uuid.uuid4().hex[:12]
 
-    scope = clips
+    scope, scope_suite = clips, suite
     resuming = bool(out_dir and resume)
     if resuming:
         scope = checkpoint.pending_only(clips, spark,
                                         f"{out_dir}/manifest", part_col)
+        scope_suite = replace(suite, unique_checks=[])
 
-    # Row-local and partition-local families run on the pending scope
-    # only (completed partitions are never rescanned). Uniqueness is
-    # the one genuinely CROSS-partition check: a duplicate pair split
-    # across a completed and a pending partition would be invisible to
-    # a scope-only scan, so it runs over the full table and its
-    # violations are then filtered to pending partitions (the
-    # completed partition's half was already committed by the earlier
-    # run — deterministic data makes the two halves consistent).
-    unique_scope = clips if resuming else scope
-    viol = all_violations(scope, suite, dims=dims, clips_ref=clips_ref,
+    # Every family runs on the pending scope only (completed partitions
+    # are never rescanned) except uniqueness, the one genuinely
+    # CROSS-partition check: a duplicate pair split across a completed
+    # and a pending partition would be invisible to a scope-only scan,
+    # so on resume it runs over the full table and its violations are
+    # then filtered to pending partitions (the completed partition's
+    # half was already committed by the earlier run — deterministic
+    # data makes the two halves consistent).
+    viol = all_violations(scope, scope_suite, dims=dims, clips_ref=clips_ref,
                           expected_hist=expected_hist,
                           ks_reference=ks_reference,
-                          id_col=id_col, part_col=part_col,
-                          skip_unique=resuming)
+                          id_col=id_col, part_col=part_col)
     if resuming:
         for uc in suite.unique_checks:
-            uv = dataset.unique_violations(unique_scope, uc, id_col, part_col)
+            uv = dataset.unique_violations(clips, uc, id_col, part_col)
             uv = checkpoint.pending_only(uv, spark,
                                          f"{out_dir}/manifest", "part_id")
             viol = viol.unionByName(uv)
@@ -208,7 +187,7 @@ def run(spark: SparkSession, spec_source: str | dict, clips: DataFrame, *,
     if out_dir:
         checkpoint.write_partitioned(metrics, f"{out_dir}/metrics")
         viol, verd = checkpoint.commit(spark, scope, viol, out_dir, run_id,
-                                       resuming=resuming, part_col=part_col)
+                                       part_col=part_col)
     else:
         verd = violation_verdicts(scope, viol, part_col)
 

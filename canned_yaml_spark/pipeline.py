@@ -88,7 +88,7 @@ def prep_run(spark: SparkSession, clips: DataFrame,
                                   id_col=id_col, part_col=part_col)
     if out_dir is not None:
         viols, verdicts = ckpt.commit(spark, clips, viols, out_dir, run_id,
-                                      resuming=False, part_col=part_col)
+                                      part_col=part_col)
     else:
         # verdicts over EVERY family's violations (x-unique, x-ref, …)
         # — the same derivation job.run commits, not the row checks

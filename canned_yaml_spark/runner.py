@@ -169,11 +169,11 @@ def violation_verdicts(scope: DataFrame, viol: DataFrame,
 
 def suite_rule_ids(suite: CheckSuite) -> list[tuple[str, bool]]:
     """The suite's declared rule inventory: (rule_id, static_ok) for
-    every rule any violations function can emit, in reporting order —
-    row checks first (including statically-elided ones: they are
-    DECLARED even though they can never fire on this schema), then
-    each table-check family. x-drift declares two ids (.psi / .ks),
-    matching drift.psi_violations / ks_violations emission.
+    every rule job.all_violations can emit, in reporting order — row
+    checks first (including statically-elided ones: they are DECLARED
+    even though they can never fire on this schema), then each table
+    check's rule_ids(), read off the same family table
+    (CheckSuite.table_checks) that builds the violations union.
 
     Note the inventory is what the spec DECLARES, not what a given run
     executed: callers of rule_coverage scope the violations frame to
@@ -181,18 +181,8 @@ def suite_rule_ids(suite: CheckSuite) -> list[tuple[str, bool]]:
     reference table; KS needs a reference sample)."""
     decl = [(c.rule_id, bool(c.static_ok))
             for c in sorted(suite.row_checks, key=lambda c: c.order)]
-    for c in list(suite.unique_checks) + list(suite.ref_checks):
-        decl.append((c.rule_id, False))
-    for c in suite.drift_checks:
-        decl += [(c.rule_id + ".psi", False), (c.rule_id + ".ks", False)]
-    for fam in (suite.cat_drift_checks, suite.payload_checks,
-                suite.transcript_checks, suite.media_checks,
-                suite.audio_checks, suite.loudness_checks,
-                suite.spectral_checks, suite.quantile_checks,
-                suite.completeness_checks, suite.frequency_checks,
-                suite.anomaly_checks):
-        decl += [(c.rule_id, False) for c in fam]
-    return decl
+    return decl + [(rid, False) for _, c in suite.table_checks()
+                   for rid in c.rule_ids()]
 
 
 def rule_coverage(viol: DataFrame, suite: CheckSuite) -> DataFrame:

@@ -117,7 +117,7 @@ def validate_stream_with_lineage(stream_df: DataFrame, suite: CheckSuite,
                                   clips_ref=clips_ref,
                                   id_col=id_col, part_col=part_col)
         checkpoint.commit(spark, batch_df, viol, batch_dir, run_id,
-                          resuming=False, part_col=part_col)
+                          part_col=part_col)
 
     return (stream_df.writeStream
             .foreachBatch(process_batch)

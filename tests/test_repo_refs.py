@@ -1,8 +1,8 @@
 """Dangling-reference check (no Spark): every test a source comment
 cites, every tool a document cites, and every package function a
-document cites, exists. Also the reverse: every top-level def in the
-package is reached by the program's code, or is allowlisted with a
-reason.
+document cites, exists. Also the reverse: every top-level def and
+class method in the package is reached by the program's code, or is
+allowlisted with a reason.
 
 A comment that names `tests/test_x.py::test_y` is a claim that the
 behaviour it describes is pinned; a document that says "re-run
@@ -155,7 +155,7 @@ def _reached(seeds: set[str], roots: set[str],
     name reaches every package def of that name."""
     by_name: dict[str, list[str]] = {}
     for key in defs:
-        by_name.setdefault(key.split(".", 1)[1], []).append(key)
+        by_name.setdefault(key.rsplit(".", 1)[1], []).append(key)
     reached, todo = set(), list(seeds)
     for name in roots:
         todo += by_name.get(name, [])
@@ -170,7 +170,8 @@ def _reached(seeds: set[str], roots: set[str],
 
 
 def test_package_defs_are_named_or_allowlisted():
-    """Every top-level def in canned_yaml_spark/ is reached by code from
+    """Every top-level def in canned_yaml_spark/, and every method of a
+    package class (by attribute name), is reached by code from
     __spark_entry__.py, bench.py, tools/, perfbench/ or the package's
     module-level statements, directly or through the names other
     reached defs use; or it is in TEST_ONLY_DEFS. Only code counts: a
@@ -179,12 +180,24 @@ def test_package_defs_are_named_or_allowlisted():
     list."""
     defs: dict[str, set[str]] = {}
     roots: set[str] = set()
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    kinds = (*funcs, ast.ClassDef)
     for p in sorted((ROOT / "canned_yaml_spark").glob("*.py")):
         body = ast.parse(p.read_text()).body
-        kinds = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
         for node in body:
-            if isinstance(node, kinds):
+            if isinstance(node, funcs):
                 defs[f"{p.stem}.{node.name}"] = _used_names([node])
+            elif isinstance(node, ast.ClassDef):
+                key = f"{p.stem}.{node.name}"
+                # a method is reached by its attribute name; a dunder
+                # runs whenever its class does
+                methods = [n for n in node.body if isinstance(n, funcs)
+                           and not n.name.startswith("__")]
+                for m in methods:
+                    defs[f"{key}.{m.name}"] = _used_names([m])
+                defs[key] = _used_names(
+                    [*node.bases, *node.decorator_list,
+                     *(n for n in node.body if n not in methods)])
         roots |= _used_names([n for n in body if not isinstance(n, kinds)])
     for p in ([ROOT / "__spark_entry__.py", ROOT / "bench.py"]
               + sorted((ROOT / "tools").rglob("*.py"))

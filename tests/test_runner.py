@@ -134,6 +134,51 @@ def test_rule_coverage_dead_static_and_alien(spark, clips, suite):
                 assert cov[rid].n_parts == 0
 
 
+
+def test_family_table_covers_every_check_list():
+    # Spark-free: a CheckSuite list field left out of TABLE_FAMILIES
+    # would be neither in the violations union nor in the inventory
+    from dataclasses import fields
+
+    from canned_yaml_spark.checks import TABLE_FAMILIES, CheckSuite
+    lists = {f.name for f in fields(CheckSuite)} - {"row_checks", "warnings"}
+    assert len(TABLE_FAMILIES) == len(lists)
+    assert set(TABLE_FAMILIES) == lists
+
+
+def test_rule_coverage_declares_every_fired_family_rule(spark):
+    # x-absent, x-monotonic and x-drift's .w1 each fire on a few rows;
+    # the inventory read off the family table declares all of them
+    from canned_yaml_spark import job
+    from canned_yaml_spark.compile import compile_spec
+    from canned_yaml_spark.runner import rule_coverage, suite_rule_ids
+
+    rows = [(f"c{i}", i // 4, i, float(i % 4 != 2), f"h{i % 3}",
+             20 + 360 * (i // 4)) for i in range(8)]
+    df = spark.createDataFrame(
+        rows, "clip_id string, part_id int, seq long, v double, h string, "
+              "dur_ms int")
+    spec = {"type": "object",
+            "properties": {"h": {"x-absent": {"table": "blocklist",
+                                              "key": "bad"}}},
+            "x-monotonic": {"column": "v", "partition_by": "part_id",
+                            "order_by": "seq"},
+            "x-drift": {"column": "dur_ms", "buckets": 4, "lo": 0,
+                        "hi": 400, "w1_max": 50}}
+    suite = compile_spec(spec, df.schema)
+    assert suite.drift_checks[0].rule_ids() == (
+        "x-drift.dur_ms.psi", "x-drift.dur_ms.w1", "x-drift.dur_ms.ks")
+    viol = job.all_violations(
+        df, suite,
+        dims={"blocklist": spark.createDataFrame([("h1",)], "bad string")},
+        expected_hist=spark.createDataFrame([(0, 1.0)],
+                                            "bucket int, expected_frac double"))
+    cov = {r.rule_id: r for r in rule_coverage(viol, suite).collect()}
+    fired = {rid for rid, r in cov.items() if r.fired}
+    assert {"x-absent.h", "x-monotonic.v", "x-drift.dur_ms.w1"} <= fired
+    assert all(cov[rid].declared for rid in fired)
+    assert {rid for rid, _ in suite_rule_ids(suite)} == set(cov)
+
 # ----------------------------------------------- violation_report (r5)
 def test_violation_report_counts_and_examples(spark, clips, suite):
     from canned_yaml_spark.runner import violation_report

@@ -130,8 +130,7 @@ def main() -> int:
 
         checkpoint.write_partitioned = capture
         try:
-            checkpoint.commit(spark, scope, viol, tmp, "plan_audit",
-                              resuming=False)
+            checkpoint.commit(spark, scope, viol, tmp, "plan_audit")
         finally:
             checkpoint.write_partitioned = real_write
     finally:
