@@ -2032,8 +2032,8 @@ def _q_resume_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mid-run crash: run the FULL corpus once, then truncate the
     # manifest to the even partitions (the job died after committing
     # half; the other partitions' verdict rows remain on disk
-    # uncommitted — checkpoint.write_partitioned's dynamic partition
-    # overwrite makes their rewrite idempotent), then resume. Exact
+    # uncommitted, outside the committed view — checkpoint.committed
+    # reads each partition's latest manifest commit), then resume. Exact
     # resume must reproduce the from-scratch verdicts — including
     # cross-partition uniqueness rows for pending partitions (job.run
     # rescans the full table for x-unique and filters to pending) —
@@ -2060,8 +2060,8 @@ def _q_resume_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         (spark.createDataFrame(kept, ckpt.MANIFEST_SCHEMA)
               .write.parquet(f"{out}/manifest"))
         jobmod.run(spark, SPEC, clips, out_dir=out, **kw)
-        verd = (spark.read.parquet(f"{out}/verdicts")
-                     .select("part_id", "n_rows", "n_violations", "pass"))
+        verd = (ckpt.committed(spark, out, "verdicts")
+                    .select("part_id", "n_rows", "n_violations", "pass"))
         # materialize before the tempdir disappears (64 rows, bounded)
         return spark.createDataFrame(verd.collect(), verd.schema)
     finally:

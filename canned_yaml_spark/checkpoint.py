@@ -6,29 +6,27 @@ real ops semantics: "checkpoints completed partitions to a lineage +
 metrics table for exact resume".
 
 Design (SURVEY.md §2.2 #25):
-- The **manifest** is an append-only parquet table (Iceberg in
-  production — same append semantics) of per-partition completion
-  records. A partition's manifest row is written only AFTER its
-  violations/verdict/metrics rows are durably written — the manifest
-  append is the commit point.
+- Layout: out_dir/<table>/run_id=<run_id>/ for violations, verdicts
+  and metrics; manifest/ is an append-only parquet table (Iceberg in
+  production — same append semantics) of per-partition commits.
 - One commit path (`commit`): the violations plan executes once, into
-  violations/; the verdicts are derived from those written bytes and
-  written to verdicts/; the manifest rows are this run's written
-  verdict rows. Manifest and verdicts agree by construction, and no
-  check family runs a second time.
-- On restart, pending work = all partitions LEFT ANTI JOIN manifest.
-  Completed partitions are never rescanned (partition pruning: the
-  pending filter is a broadcast semi-join on part_id, which AQE turns
-  into a runtime filter on the scan).
-- Violations/verdicts are written partitionBy(part_id) with dynamic
-  partition overwrite, so a crash between data write and manifest
-  append re-runs that partition idempotently (the rewrite replaces,
-  not duplicates). Dynamic overwrite leaves a partition that gets no
-  rows untouched, so `commit` first clears the scope's old violation
-  directories: a partition clean now cannot keep an earlier run's
-  violations.
-- Everything rewritten on retry is byte-identical because the whole
-  data path is deterministic (pure-function fixtures, no rand()).
+  this run's directory; the verdicts are derived from those written
+  bytes (one leaf directory read with the plan's schema: no listing
+  or footer-inference job), and the manifest rows are this run's
+  written verdict rows. Manifest and verdicts agree by construction.
+- The manifest append is the commit point, for resume and for
+  visibility: `committed` keeps a table's rows whose (part_id,
+  run_id) is the manifest's latest commit for that part_id. A run
+  that crashed before its append stays invisible and its partitions
+  pending; a partition committed again shows only the later run's
+  rows. Nothing is ever cleared.
+- Resume: pending work = all partitions LEFT ANTI JOIN manifest, a
+  broadcast semi-join that AQE turns into a runtime scan filter.
+  write_partitioned overwrites dynamically by run_id, so a retried
+  run_id replaces only its own directory, byte for byte: the data
+  path is deterministic (pure-function fixtures, no rand()).
+- Trade-off: a reader of one part_id's rows gets no directory pruning
+  (a run is not split by part_id); every reader here reads views whole.
 - The streaming lineage sink (streaming.validate_stream_with_lineage)
   commits each micro-batch through `commit` into its own out_dir and
   skips a replayed batch when `is_committed` finds its manifest file.
@@ -40,6 +38,7 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from canned_yaml_spark.runner import violation_verdicts
 
@@ -71,52 +70,24 @@ def is_committed(spark: SparkSession, out_dir: str) -> bool:
     return bool(fs.globStatus(p))
 
 
-def clear_scope_parts(spark: SparkSession, scope: DataFrame, path: str,
-                      part_col: str = "part_id") -> None:
-    """Delete the part_id directories under path that hold partitions
-    of scope, before scope's rows are rewritten there.
-
-    Dynamic partition overwrite replaces only the partitions that get
-    rows: a partition with violations in an earlier write and none now
-    would keep its old file, and the rows read back would report a
-    failure that no longer exists. When path has no partition
-    directory yet (a fresh out_dir) this is one listing and no Spark
-    job; otherwise it collects scope's distinct part ids.
-    """
-    fs, p = _fs(spark, path)
-    if not fs.exists(p):
-        return
-    dirs = {st.getPath().getName(): st.getPath() for st in fs.listStatus(p)
-            if st.isDirectory()
-            and st.getPath().getName().startswith("part_id=")}
-    if not dirs:
-        return
-    for (part,) in scope.select(part_col).distinct().collect():
-        name = ("part_id=__HIVE_DEFAULT_PARTITION__" if part is None
-                else f"part_id={part}")
-        if name in dirs:
-            fs.delete(dirs[name], True)
-
-
 def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
     """Completed-partition manifest; empty DataFrame when absent."""
     if not path_exists(spark, manifest_dir):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
-    return spark.read.parquet(manifest_dir)
-
-
-def completed_parts(spark: SparkSession, manifest_dir: str) -> DataFrame:
-    return read_manifest(spark, manifest_dir).select("part_id").distinct()
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
 
 
 def pending_only(df: DataFrame, spark: SparkSession, manifest_dir: str,
                  part_col: str = "part_id") -> DataFrame:
-    """Filter df down to partitions with no manifest row yet.
+    """Filter df down to partitions with no manifest row yet; df
+    itself when there is no manifest (one FS probe).
 
     Broadcast anti join — the manifest side is one row per partition
     (thousands at most), never the fact side.
     """
-    done = completed_parts(spark, manifest_dir)
+    if not path_exists(spark, manifest_dir):
+        return df
+    done = read_manifest(spark, manifest_dir).select("part_id").distinct()
     return df.join(F.broadcast(done),
                    df[part_col] == done["part_id"], "left_anti")
 
@@ -160,22 +131,51 @@ def stream_identity(spark: SparkSession, checkpoint_dir: str) -> str:
     return token
 
 
+def committed(spark: SparkSession, out_dir: str, table: str,
+              schema: StructType | None = None) -> DataFrame:
+    """The committed view of out_dir/<table>, plus run_id: the rows
+    whose (part_id, run_id) is the manifest's latest commit (max
+    completed_at) for that part_id, matched null-safe. One manifest
+    read, aggregated in one task and broadcast into a semi-join;
+    `schema` (the columns but run_id) spares a footer-inference read.
+    A violation whose part_id is no partition of its run's scope
+    (x-monotonic by another column) is in no verdict and not here."""
+    path = f"{out_dir}/{table}"
+    schema = schema or spark.read.parquet(path).drop("run_id").schema
+    rows = spark.read.schema(StructType(
+        [*schema.fields, StructField("run_id", StringType())])).parquet(path)
+    # one partition: the aggregate then needs no exchange
+    latest = (read_manifest(spark, f"{out_dir}/manifest").coalesce(1)
+              .groupBy("part_id")
+              .agg(F.max_by("run_id", "completed_at").alias("latest")))
+    return rows.join(F.broadcast(latest),
+                     rows["part_id"].eqNullSafe(latest["part_id"])
+                     & (rows["run_id"] == latest["latest"]), "left_semi")
+
+
+def _run_rows(spark: SparkSession, path: str, run_id: str,
+              schema: StructType) -> DataFrame:
+    """One run's rows of the table at path: one leaf directory, read
+    with schema. A write of no rows leaves no directory: no rows."""
+    run_dir = f"{path}/run_id=" + (
+        spark._jvm.org.apache.spark.sql.catalyst.catalog  # noqa: SLF001
+        .ExternalCatalogUtils.escapePathName(run_id))
+    if not path_exists(spark, run_dir):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(run_dir)
+
+
 def commit(spark: SparkSession, scope: DataFrame, viol: DataFrame,
            out_dir: str, run_id: str, *,
            part_col: str = "part_id") -> tuple[DataFrame, DataFrame]:
     """Commit one run's violations plan under out_dir; returns the
-    written (violations, verdicts) tables read back from disk.
+    committed (violations, verdicts) views.
 
-    1. violations/: the scope's old partition directories are cleared
-       (clear_scope_parts), then `viol` executes once, repartitioned
-       by part_id so each partition directory gets one file — the
-       directory then holds only this commit's rows for the scope;
-    2. the verdicts of scope's partitions are derived from the written
-       violations, read back with the plan's schema (a clean run
-       writes no file); a resume's scope is the pending partitions,
-       so an earlier run's partitions drop out of the left join;
-    3. verdicts/: those verdicts, tagged with run_id;
-    4. manifest/: this run's written verdict rows, in one file — the
+    1. violations/run_id=<run_id>/: `viol` executes once,
+       repartitioned by part_id (each partition's rows in one file);
+    2. verdicts/run_id=<run_id>/: the verdicts of scope's partitions,
+       derived from that directory read back with the plan's schema;
+    3. manifest/: this run's written verdict rows, in one file — the
        commit point. The verdicts write counts its rows (an
        Observation, no extra job); a commit with no pending partition
        appends no file.
@@ -183,29 +183,29 @@ def commit(spark: SparkSession, scope: DataFrame, viol: DataFrame,
     write_partitioned and append_manifest are looked up as module
     attributes at call time, so a caller can wrap them.
     """
-    manifest_dir = f"{out_dir}/manifest"
-    viol_dir = f"{out_dir}/violations"
-    clear_scope_parts(spark, scope, viol_dir, part_col)
-    write_partitioned(viol.repartition("part_id"), viol_dir)
-    written = spark.read.schema(viol.schema).parquet(viol_dir)
-    verd = (violation_verdicts(scope, written, part_col)
-            .withColumn("run_id", F.lit(run_id)))
+    tag = F.lit(run_id).alias("run_id")
+    write_partitioned(viol.repartition("part_id").select("*", tag),
+                      f"{out_dir}/violations")
+    written = _run_rows(spark, f"{out_dir}/violations", run_id, viol.schema)
+    verd = violation_verdicts(scope, written, part_col)
     seen = Observation()
-    write_partitioned(verd.observe(seen, F.count(F.lit(1)).alias("n")),
+    write_partitioned(verd.select("*", tag)
+                      .observe(seen, F.count(F.lit(1)).alias("n")),
                       f"{out_dir}/verdicts")
-    verd_written = spark.read.schema(verd.schema).parquet(f"{out_dir}/verdicts")
     if seen.get["n"]:
         append_manifest(
-            verd_written.filter(F.col("run_id") == run_id).coalesce(1),
-            manifest_dir, run_id)
-    return written, verd_written
+            _run_rows(spark, f"{out_dir}/verdicts", run_id, verd.schema)
+            .coalesce(1),
+            f"{out_dir}/manifest", run_id)
+    return (committed(spark, out_dir, "violations", viol.schema),
+            committed(spark, out_dir, "verdicts", verd.schema))
 
 
 def write_partitioned(df: DataFrame, path: str) -> None:
-    """Idempotent per-partition write: dynamic partition overwrite
-    replaces exactly the part_id directories being rewritten."""
+    """Idempotent per-run write: dynamic partition overwrite replaces
+    exactly the run_id directory being rewritten."""
     (df.write
        .option("partitionOverwriteMode", "dynamic")
-       .partitionBy("part_id")
+       .partitionBy("run_id")
        .mode("overwrite")
        .parquet(path))

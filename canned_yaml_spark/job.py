@@ -15,8 +15,8 @@ declares the rule inventory (runner.suite_rule_ids).
 The run is resumable: every family skips manifest-completed
 partitions except uniqueness, which is cross-partition by nature and
 is recomputed over the full table, then limited to the pending
-partitions. Both are idempotent because every write is
-partition-atomic and the data path is deterministic (checkpoint.py).
+partitions. Both are idempotent: a run is visible only through its
+manifest append, and the data path is deterministic (checkpoint.py).
 """
 
 from __future__ import annotations
@@ -39,8 +39,8 @@ from canned_yaml_spark.runner import row_violations, violation_verdicts
 @dataclass
 class ValidationResult:
     """With an out_dir, `violations` and `verdicts` are the committed
-    tables read back from disk (verdicts then carry run_id); without
-    one, they are the lazy plans."""
+    views read back from disk (checkpoint.committed; both then carry
+    run_id); without one, they are the lazy plans."""
     violations: DataFrame          # (clip_id, part_id, rule_id, severity, message)
     verdicts: DataFrame            # (part_id, n_rows, n_violations, max_severity, pass)
     metrics: DataFrame | None      # per-partition column stats
@@ -146,13 +146,13 @@ def run(spark: SparkSession, spec_source: str | dict, clips: DataFrame, *,
         part_col: str = "part_id") -> ValidationResult:
     """Compile the spec and validate `clips` end to end.
 
-    With out_dir set, writes metrics/ and then commits through
-    checkpoint.commit: the violations union executes once, into
-    violations/, and verdicts/ and manifest/ are derived from the
-    written violations (partition-atomic, resumable). The result's
-    violations and verdicts are then the written tables, every run's
-    partitions included. Without out_dir, returns lazy DataFrames
-    only.
+    With out_dir set, writes metrics/run_id=<run_id>/ and then
+    commits through checkpoint.commit: the violations union executes
+    once, into violations/run_id=<run_id>/, and this run's verdicts
+    and manifest rows are derived from the written violations
+    (resumable). The result's violations and verdicts are then the
+    committed views, every run's partitions included. Without
+    out_dir, returns lazy DataFrames only.
     """
     suite = compile_spec(spec_source, clips.schema)
     run_id = uuid.uuid4().hex[:12]
@@ -185,15 +185,15 @@ def run(spark: SparkSession, spec_source: str | dict, clips: DataFrame, *,
     metrics = dataset.column_stats(scope, list(stats_columns), part_col)
 
     if out_dir:
-        checkpoint.write_partitioned(metrics, f"{out_dir}/metrics")
+        checkpoint.write_partitioned(
+            metrics.withColumn("run_id", F.lit(run_id)), f"{out_dir}/metrics")
         viol, verd = checkpoint.commit(spark, scope, viol, out_dir, run_id,
                                        part_col=part_col)
     else:
         verd = violation_verdicts(scope, viol, part_col)
 
     # ok == "no partition failed": the verdict aggregate already folds
-    # max severity per partition, so this reads the (written) verdicts
-    # table instead of re-executing the violations union.
-    n_bad = verd.filter(~F.col("pass")).limit(1).count()
-    return ValidationResult(violations=viol, verdicts=verd,
-                            metrics=metrics, ok=n_bad == 0)
+    # max severity per partition, so this reads the committed verdicts
+    # view instead of re-executing the violations union.
+    return ValidationResult(violations=viol, verdicts=verd, metrics=metrics,
+                            ok=verd.filter(~F.col("pass")).isEmpty())

@@ -1,9 +1,27 @@
 """Checkpoint / exact resume (SURVEY.md §2.2 #25)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from canned_yaml_spark import checkpoint, fixtures, job, pipeline
 from tests.conftest import run_available_now
+
+#: one ERROR row rule; `_broken` breaks it on partitions 0..7
+SR_SPEC = {"type": "object",
+           "properties": {"sr_hz": {"type": "integer", "minimum": 0}}}
+
+
+def _broken(spark):
+    return fixtures.clips_df(spark, 200, inject=False,
+                             max_samples=16).withColumn(
+        "sr_hz", F.when(F.col("part_id") < 8, F.lit(-1))
+                  .otherwise(F.col("sr_hz")))
+
+
+def _verdict_rows(spark, out):
+    return sorted(
+        tuple(r) for r in checkpoint.committed(spark, out, "verdicts")
+        .select("part_id", "n_rows", "n_violations", "pass").collect())
 
 
 def test_resume_skips_completed_and_is_idempotent(spark, tmp_path):
@@ -77,13 +95,16 @@ def test_manifest_probe_absent_dir(spark, tmp_path):
 
 def test_write_partitioned_dynamic_overwrite(spark, tmp_path):
     out = str(tmp_path / "dyn")
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "part_id int, v string")
+    schema = "part_id int, v string, run_id string"
+    df1 = spark.createDataFrame([(1, "a", "r1"), (2, "b", "r2"),
+                                 (3, "c", "r2")], schema)
     checkpoint.write_partitioned(df1, out)
-    # rewrite only partition 2; partition 1 must survive
-    df2 = spark.createDataFrame([(2, "B")], "part_id int, v string")
+    # rewrite only run r2: its rows are replaced, run r1 survives
+    df2 = spark.createDataFrame([(2, "B", "r2")], schema)
     checkpoint.write_partitioned(df2, out)
-    rows = {(r.part_id, r.v) for r in spark.read.parquet(out).collect()}
-    assert rows == {(1, "a"), (2, "B")}
+    rows = {(r.part_id, r.v, r.run_id)
+            for r in spark.read.schema(schema).parquet(out).collect()}
+    assert rows == {(1, "a", "r1"), (2, "B", "r2")}
 
 
 def test_crash_resume_reproduces_from_scratch_verdicts(spark, tmp_path):
@@ -104,11 +125,6 @@ def test_crash_resume_reproduces_from_scratch_verdicts(spark, tmp_path):
               expected_hist=fixtures.reference_hist_df(spark),
               ks_reference=fixtures.reference_dur_sample())
 
-    def verdicts(out):
-        return sorted(
-            tuple(r) for r in spark.read.parquet(f"{out}/verdicts")
-            .select("part_id", "n_rows", "n_violations", "pass").collect())
-
     fresh = str(tmp_path / "fresh")
     job.run(spark, "specs/clips.spec.yaml", clips, out_dir=fresh, **kw)
 
@@ -121,7 +137,7 @@ def test_crash_resume_reproduces_from_scratch_verdicts(spark, tmp_path):
           .write.parquet(f"{crashed}/manifest"))
     job.run(spark, "specs/clips.spec.yaml", clips, out_dir=crashed, **kw)
 
-    assert verdicts(crashed) == verdicts(fresh)
+    assert _verdict_rows(spark, crashed) == _verdict_rows(spark, fresh)
     # both manifests now cover all 64 partitions exactly once
     m = spark.read.parquet(f"{crashed}/manifest")
     assert m.select("part_id").distinct().count() == 64
@@ -129,7 +145,7 @@ def test_crash_resume_reproduces_from_scratch_verdicts(spark, tmp_path):
     # the dup pair straddles partitions: at n=400 the id_dup rows are
     # (k-1, k) with k%64 even and (k-1)%64 odd — one committed, one
     # pending in the crash split — and both runs must flag both rows
-    viol = spark.read.parquet(f"{crashed}/violations")
+    viol = checkpoint.committed(spark, crashed, "violations")
     uv = viol.filter(F.col("rule_id") == "x-unique.clip_id")
     parts = {r.part_id for r in uv.collect()}
     assert any(p % 2 == 0 for p in parts) and any(p % 2 == 1 for p in parts)
@@ -212,7 +228,7 @@ def test_run_executes_each_family_once(spark, tmp_path, monkeypatch):
     identity Python UDF on `severity` (the column the verdict
     aggregate reads) ticks as often during the run as in one noop
     execution of the same plan. The manifest counts equal the written
-    violations, and each part_id directory holds one file. The same
+    violations, and each part_id's rows sit in one file. The same
     holds for prep_run(out_dir=...), and for one micro-batch of the
     streaming lineage sink."""
     import glob
@@ -268,10 +284,10 @@ def test_run_executes_each_family_once(spark, tmp_path, monkeypatch):
     assert len(manifest) == 64
     for r in manifest:
         assert r.n_violations == counts.get(r.part_id, 0)
-    dirs = glob.glob(os.path.join(out, "violations", "part_id=*"))
-    assert dirs
-    for d in dirs:
-        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+    files = {r.part_id: r["count"] for r in
+             viol.select("part_id", F.input_file_name().alias("file"))
+             .distinct().groupBy("part_id").count().collect()}
+    assert files and set(files.values()) == {1}, files
 
     # prep_run(out_dir=...) commits through the same path
     plans.clear()
@@ -308,3 +324,93 @@ def test_run_executes_each_family_once(spark, tmp_path, monkeypatch):
     # the same families over the same file as a static frame
     assert during_batch == ticks_of(noop(job.all_violations(static, suite,
                                                             **kw)))
+
+
+def test_fresh_run_writes_one_file_per_table(spark, tmp_path):
+    """A fresh job.run commits each table as one run directory: one
+    parquet data file each for metrics, violations, verdicts and the
+    manifest, however many partitions the scope has."""
+    import glob
+
+    out = str(tmp_path / "files")
+    r = job.run(spark, "specs/clips.spec.yaml",
+                fixtures.clips_df(spark, 400, max_samples=16),
+                dims={"codec_dim": fixtures.codec_dim_df(spark)},
+                out_dir=out)
+    assert not r.ok
+    for table in ("metrics", "violations", "verdicts", "manifest"):
+        files = glob.glob(f"{out}/{table}/**/*.parquet", recursive=True)
+        assert len(files) == 1, (table, files)
+
+
+def test_crash_before_manifest_append_stays_invisible(spark, tmp_path,
+                                                      monkeypatch):
+    """A run that dies before its manifest append leaves its run
+    directories on disk but in no committed view; the resume
+    recomputes every partition, and its committed verdicts equal a
+    from-scratch run's."""
+    clips = fixtures.clips_df(spark, 200, max_samples=16)
+    kw = dict(dims={"codec_dim": fixtures.codec_dim_df(spark)})
+    real = checkpoint.append_manifest
+    calls = []
+
+    def crash_once(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("crash before the manifest append")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(checkpoint, "append_manifest", crash_once)
+    crashed = str(tmp_path / "crashed")
+    with pytest.raises(RuntimeError):
+        job.run(spark, "specs/clips.spec.yaml", clips, out_dir=crashed,
+                **kw)
+    assert spark.read.parquet(f"{crashed}/verdicts").count() == 64
+    for table in ("violations", "verdicts"):
+        assert checkpoint.committed(spark, crashed, table).count() == 0
+
+    r = job.run(spark, "specs/clips.spec.yaml", clips, out_dir=crashed,
+                **kw)
+    assert r.verdicts.count() == 64
+    fresh = str(tmp_path / "fresh")
+    job.run(spark, "specs/clips.spec.yaml", clips, out_dir=fresh, **kw)
+    assert _verdict_rows(spark, crashed) == _verdict_rows(spark, fresh)
+    assert (r.violations.drop("run_id").exceptAll(
+        checkpoint.committed(spark, fresh, "violations").drop("run_id"))
+        .count() == 0)
+
+
+def test_prep_run_twice_same_run_id_no_duplicates(spark, tmp_path):
+    """Rerunning prep_run with the same run_id rewrites that run's
+    directories and appends a second manifest commit per partition;
+    the committed views still hold each row once."""
+    broken = _broken(spark)
+    out = str(tmp_path / "prep")
+    for _ in range(2):
+        pipeline.prep_run(spark, broken, SR_SPEC, dedup=False,
+                          out_dir=out, run_id="same")
+    verd = checkpoint.committed(spark, out, "verdicts")
+    assert verd.count() == verd.select("part_id").distinct().count() == 64
+    viol = checkpoint.committed(spark, out, "violations")
+    n_bad = broken.filter(F.col("sr_hz") < 0).count()
+    assert n_bad > 0
+    assert viol.count() == viol.distinct().count() == n_bad
+
+
+def test_null_part_id_rows_survive_committed_view(spark, tmp_path):
+    """Violations of rows whose part_id is NULL are committed under a
+    NULL manifest part_id; the view matches it null-safe."""
+    broken = _broken(spark).withColumn(
+        "part_id", F.when(F.col("part_id") < 4, F.lit(None).cast("int"))
+                    .otherwise(F.col("part_id")))
+    r = job.run(spark, SR_SPEC, broken, out_dir=str(tmp_path / "nulls"),
+                stats_columns=())
+
+    def counts(df):
+        return {row.part_id: row["count"]
+                for row in df.groupBy("part_id").count().collect()}
+
+    want = counts(broken.filter(F.col("sr_hz") < 0))
+    assert want[None] > 0
+    assert counts(r.violations) == want
+    assert None in {row.part_id for row in r.verdicts.collect()}

@@ -143,10 +143,10 @@ def main() -> int:
            ("above the union", lambda p: _REPART_PART_ID.search(p).start()
             < p.index("Union"))],
           "the families' union executes once, hash-repartitioned by "
-          "part_id: one file per partition directory")
+          "part_id: each partition's rows in one file of the run")
     audit("commit: verdict derivation", written["verdicts"],
-          [("scans the written violations",
-            lambda p: "/violations]" in p),
+          [("scans this run's written violations",
+            lambda p: "/violations/run_id=plan_audit]" in p),
            ("no family operator", lambda p: "Union" not in p
             and "Generate" not in p and "Python" not in p
             and "MapInPandas" not in p)],
